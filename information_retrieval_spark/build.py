@@ -21,8 +21,6 @@ table so the build is resumable (north_rule):
                        (IndexService.java:215-233), the fragment files
                        its particle files (IndexService.java:258-288) —
                        no shuffle, memory bounded by the input split.
-                       (pandas/sql tokenizer paths emit unpacked
-                       per-posting rows instead, for parity testing.)
   stage 3  doc_len   — decoded from the packed markers: shuffle-free,
            + stats     row-group-pruned scan (rows only for docs with
                        >=1 kept term; an ABSENT row means dl = 0) +
@@ -67,8 +65,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .codec import vb_encode, vb_encode_with_lengths
-from .corpus import with_sha256
-from .functions.tokenize import spark_tokenize_col, tokenize_pandas_udf
 from .io import TableStore
 
 def _invert_arrow_batch(rb):
@@ -139,8 +135,9 @@ def _invert_arrow_batch(rb):
     # positions as per-row varbyte gap blobs (first value absolute per
     # row): encoded ONCE here on the map side, so the term shuffle and
     # the partials parquet carry ~1 byte/position instead of 4, and the
-    # block encoder later just CONCATENATES row blobs (varbyte is
-    # value-independent) — no decode/re-encode after the shuffle.
+    # fragment encoder later just slices and CONCATENATES row blobs
+    # (varbyte is value-independent) — no decode/re-encode after the
+    # shuffle.
     pos_gaps = np.diff(g_pos, prepend=0)
     pos_gaps[starts] = g_pos[starts]
     pos_data, nb = vb_encode_with_lengths(pos_gaps)
@@ -150,48 +147,14 @@ def _invert_arrow_batch(rb):
     offsets[0] = 0
     offsets[1:] = row_ends
     # is_first marks each doc's FIRST (doc, term) group — rows are
-    # sorted by (doc, term), so doc_len can later be a filtered scan
-    # (one row per doc) instead of a corpus-wide groupBy shuffle
+    # sorted by (doc, term), so the pack's doc_len marker takes one
+    # (docID, dl) per doc without a groupBy
     first = np.ones(len(starts), dtype=bool)
     first[1:] = g_doc[starts][1:] != g_doc[starts][:-1]
     return (np.asarray(term_uniq, dtype=object), g_term[starts],
             doc_ids[g_doc[starts]], tf,
             dl_per_doc[g_doc[starts]].astype(np.int32),
             np.frombuffer(pos_data, dtype=np.uint8), offsets, first)
-
-
-def _spimi_invert_arrow(batches):
-    """Arrow-native SPIMI kernel (mapInArrow): per-posting output rows
-    with ZERO per-token Python objects (see _invert_arrow_batch). Output
-    rows are assembled straight into Arrow buffers, so the 10^8-row
-    partials stream never materializes Python objects. Semantics
-    identical to the pandas and SQL tokenizer paths
-    (tests/test_build.py::test_tokenizer_paths_agree). Used by the
-    streaming ingest path (micro-batches); the batch build packs the
-    same per-batch groups into fragments instead (_make_spimi_packed).
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    for rb in batches:
-        r = _invert_arrow_batch(rb)
-        if r is None:
-            continue
-        term_uniq, term_code, doc, tf, dl, pos_data, pos_off, first = r
-        term_arr = pc.take(pa.array(term_uniq, type=pa.string()),
-                           pa.array(term_code))
-        pos_arr = pa.Array.from_buffers(
-            pa.binary(), len(term_code),
-            [None, pa.py_buffer(pos_off.astype(np.int32).tobytes()),
-             pa.py_buffer(pos_data.tobytes())])
-        yield pa.RecordBatch.from_arrays(
-            [term_arr,
-             pa.array(doc, type=pa.int64()),
-             pa.array(tf, type=pa.int32()),
-             pos_arr,
-             pa.array(dl, type=pa.int32()),
-             pa.array(first)],
-            names=["term", "docID", "tf", "pos_bytes", "dl", "is_first"])
 
 
 # Packed map-side fragments: one row per (term, docID-bucket) per input
@@ -211,10 +174,11 @@ FRAGMENTS_SCHEMA = ("term string, bucket long, n_docs int, "
                     "pos_gaps binary, kind string")
 
 
-def _make_spimi_packed(docs_per_bucket: int, with_sha: bool = True):
-    """SPIMI kernel factory for the batch build: tokenize + invert each
-    batch (_invert_arrow_batch), then PACK the whole partition's postings
-    into per-(term, bucket) fragment rows (FRAGMENTS_SCHEMA).
+def _make_spimi_packed(docs_per_bucket: int):
+    """SPIMI kernel factory for the batch build and the streaming append:
+    tokenize + invert each batch (_invert_arrow_batch), then PACK the
+    whole partition's postings into per-(term, bucket) fragment rows
+    (FRAGMENTS_SCHEMA).
 
     The pack is what keeps the build's one wide exchange byte-light at
     10^12 docs: the term shuffle moves one row per (term, bucket) per map
@@ -225,10 +189,10 @@ def _make_spimi_packed(docs_per_bucket: int, with_sha: bool = True):
     Memory is bounded by the input split size (32 MB of content =>
     a few hundred MB of transient numpy), independent of corpus size.
 
-    `with_sha` additionally emits ONE kind="s" marker row per partition
-    carrying every doc's content sha256 (64-char hex, fixed-width-packed
-    in docID order) — the input_hint per-row invariant fingerprint,
-    computed HERE because the kernel already holds the content bytes:
+    It also emits ONE kind="s" marker row per partition carrying every
+    doc's content sha256 (64-char hex, fixed-width-packed in docID
+    order) — the input_hint per-row invariant fingerprint, computed
+    HERE because the kernel already holds the content bytes:
     this is what makes the whole build read the corpus exactly ONCE
     (stage 1 used to run a second full content scan just for sha2; at
     100 TB that second scan is 100 TB of avoidable reads). hashlib is a
@@ -244,7 +208,7 @@ def _make_spimi_packed(docs_per_bucket: int, with_sha: bool = True):
         sha_docs: list = []
         sha_hex: list = []
         for rb in batches:
-            if with_sha and rb.num_rows:
+            if rb.num_rows:
                 ids = rb.column(rb.schema.get_field_index("docID")) \
                     .to_numpy(zero_copy_only=False).astype(np.int64)
                 texts = rb.column(
@@ -443,218 +407,6 @@ def _decode_doclen_markers(batches):
             names=["docID", "dl"])
 
 
-def _spimi_invert(batches):
-    """content batches -> (term, docID, tf, positions, dl) rows.
-
-    Shares _normalize_unique with the tokenizer UDF so the two paths
-    cannot diverge (tested in tests/test_normalize.py / test_build.py).
-    Strings are factorized to int codes up front so every grouping step
-    is integer numpy — no unicode comparisons in the hot path.
-    """
-    from .functions.tokenize import _normalize_unique
-
-    from .normalize import WS_CLASS
-
-    for pdf in batches:
-        if pdf.empty:
-            continue
-        # Java \s class; boundary empties normalize to None -> dropped
-        split = pdf["content"].fillna("").str.split(WS_CLASS, regex=True)
-        lengths = split.map(len).to_numpy(dtype=np.int64)
-        total = int(lengths.sum())
-        flat = np.empty(total, dtype=object)
-        i = 0
-        for toks in split:
-            flat[i: i + len(toks)] = toks
-            i += len(toks)
-        doc_idx = np.repeat(np.arange(len(pdf)), lengths)
-        if total == 0:
-            continue
-        # normalize once per DISTINCT raw token, then propagate via codes
-        raw_codes, raw_uniq = pd.factorize(pd.Series(flat))
-        norm_uniq = _normalize_unique(pd.Series(raw_uniq)).to_numpy(dtype=object)
-        kept_uniq = norm_uniq != None  # noqa: E711
-        term_of_raw = np.full(len(raw_uniq), -1, dtype=np.int64)
-        term_codes, term_uniq = pd.factorize(pd.Series(norm_uniq[kept_uniq]))
-        term_of_raw[kept_uniq] = term_codes
-        tok_term = term_of_raw[raw_codes]
-        kept = tok_term >= 0
-        k_term = tok_term[kept]
-        k_doc = doc_idx[kept]
-        dl_per_doc = np.bincount(k_doc, minlength=len(pdf)).astype(np.int64)
-        # position within doc over KEPT terms only (IndexService.java:221-225)
-        kept_starts = np.zeros(len(pdf), dtype=np.int64)
-        kept_starts[1:] = np.cumsum(dl_per_doc[:-1])
-        pos = np.arange(len(k_term), dtype=np.int64) - np.repeat(kept_starts, dl_per_doc)
-        # group by (doc, term): stable int lexsort keeps positions ascending
-        order = np.lexsort((k_term, k_doc))
-        g_doc, g_term, g_pos = k_doc[order], k_term[order], pos[order]
-        if len(g_doc) == 0:
-            continue
-        new_group = np.ones(len(g_doc), dtype=bool)
-        new_group[1:] = (g_doc[1:] != g_doc[:-1]) | (g_term[1:] != g_term[:-1])
-        starts = np.flatnonzero(new_group)
-        tf = np.diff(np.append(starts, len(g_doc))).astype(np.int32)
-        doc_ids = pdf["docID"].to_numpy(dtype=np.int64)
-        # per-row varbyte position-gap blobs (see _spimi_invert_arrow)
-        pos_gaps = np.diff(g_pos, prepend=0)
-        pos_gaps[starts] = g_pos[starts]
-        pos_data, nb = vb_encode_with_lengths(pos_gaps)
-        val_ends = np.cumsum(nb)
-        row_ends = val_ends[np.append(starts[1:], len(g_pos)) - 1]
-        row_starts = np.zeros(len(starts), dtype=np.int64)
-        row_starts[1:] = row_ends[:-1]
-        pos_bytes = [pos_data[s:e] for s, e in zip(row_starts, row_ends)]
-        first = np.ones(len(starts), dtype=bool)
-        first[1:] = g_doc[starts][1:] != g_doc[starts][:-1]
-        yield pd.DataFrame({
-            "term": term_uniq.to_numpy(dtype=object)[g_term[starts]]
-            if hasattr(term_uniq, "to_numpy") else np.asarray(term_uniq, dtype=object)[g_term[starts]],
-            "docID": doc_ids[g_doc[starts]],
-            "tf": tf,
-            "pos_bytes": pd.Series(pos_bytes, dtype=object),
-            "dl": dl_per_doc[g_doc[starts]].astype(np.int32),
-            "is_first": first,
-        })
-
-
-def _postings_out():
-    """(names, types) of the POSTINGS_SCHEMA record batch."""
-    import pyarrow as pa
-
-    names = ["term", "bucket", "block_id", "n_docs", "doc_gaps", "tfs", "dls",
-             "pos_gaps", "block_max_tf", "block_max_wand",
-             "block_first_doc", "block_last_doc", "cf"]
-    types = [pa.string(), pa.int64(), pa.int64(), pa.int32(), pa.binary(),
-             pa.binary(), pa.binary(), pa.binary(), pa.int32(), pa.float64(),
-             pa.int64(), pa.int64(), pa.int64()]
-    return names, types
-
-
-def _make_group_encoder(cfg: "IndexConfig", avgdl: float):
-    """encode_group(rows_out, term, bucket, d, t, l, blob, row_ends):
-    cut ONE (term, bucket) posting group — docIDs ascending, positions as
-    per-posting varbyte blobs with byte-end offsets — into fixed-size
-    varbyte blocks with per-block WAND metadata. Shared by the row-input
-    block encoder and the fragment merge-encoder."""
-    k1, b, B = cfg.k1, cfg.b, cfg.docs_per_block
-    blocks_per_bucket = cfg.blocks_per_bucket
-    store_positions = cfg.store_positions
-    avgdl = avgdl or 1.0
-
-    def encode_group(rows_out, term, bucket, d, t, l, blob, row_ends):
-        # Per-posting position gaps arrive ALREADY varbyte-encoded from the
-        # SPIMI kernel (per-row blobs, first value absolute per posting);
-        # a block's pos_gaps is the byte CONCATENATION of its rows' blobs —
-        # varbyte needs no re-coding across row boundaries.
-        tfnorm = t * (k1 + 1.0) / (t + k1 * (1.0 - b + b * l / avgdl))
-        for i in range(0, len(d), B):
-            j = min(i + B, len(d))
-            gaps = np.diff(d[i:j], prepend=0)
-            gaps[0] = d[i]  # first docID absolute per block (independent decode)
-            if store_positions:
-                s = 0 if i == 0 else int(row_ends[i - 1])
-                pg = blob[s: int(row_ends[j - 1])].tobytes()
-            else:
-                pg = b""
-            tb = t[i:j]
-            rows_out.append((
-                term, bucket, bucket * blocks_per_bucket + i // B, int(j - i),
-                vb_encode(gaps), vb_encode(tb), vb_encode(l[i:j]), pg,
-                int(tb.max()), float(tfnorm[i:j].max()),
-                int(d[i]), int(d[j - 1]), int(tb.sum())))
-
-    return encode_group
-
-
-def _make_block_encoder(cfg: "IndexConfig", avgdl: float):
-    """Arrow kernel factory: sorted (term, bucket, docID) record batches
-    of PER-POSTING rows -> varbyte posting-block rows. Stateful across
-    batches: the last (term, bucket) group of each batch is held back
-    until the stream moves past it (groups never span partitions). Used
-    by the streaming ingest path and the unpacked (pandas/sql tokenizer)
-    batch pipeline; the packed batch pipeline uses the fragment
-    merge-encoder instead."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    store_positions = cfg.store_positions
-    encode_group = _make_group_encoder(cfg, avgdl)
-    out_names, out_types = _postings_out()
-
-    def kernel(batches):
-        pending = None  # (term:str, bucket:int, d, t, l, blob:uint8[], row_ends)
-
-        def flush(rows_out, span):
-            encode_group(rows_out, *span)
-
-        def to_batch(rows_out):
-            cols = list(zip(*rows_out))
-            return pa.RecordBatch.from_arrays(
-                [pa.array(list(c), type=ty) for c, ty in zip(cols, out_types)],
-                names=out_names)
-
-        empty_blob = np.empty(0, dtype=np.uint8)
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            names = rb.schema.names
-            col = {nm: rb.column(i) for i, nm in enumerate(names)}
-            term_enc = pc.dictionary_encode(col["term"])
-            t_codes = term_enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            t_uniq = term_enc.dictionary.to_pylist()
-            bucket = col["bucket"].to_numpy(zero_copy_only=False).astype(np.int64)
-            d = col["docID"].to_numpy(zero_copy_only=False).astype(np.int64)
-            t = col["tf"].to_numpy(zero_copy_only=False).astype(np.int64)
-            l = col["dl"].to_numpy(zero_copy_only=False).astype(np.int64)
-            if store_positions:
-                # blob access at the BUFFER level: no per-row Python objects
-                # for the 10^8-row partials stream
-                parr = col["pos_bytes"]
-                if isinstance(parr, pa.ChunkedArray):
-                    parr = parr.combine_chunks()
-                voff = np.frombuffer(parr.buffers()[1], dtype=np.int32)[
-                    parr.offset: parr.offset + rb.num_rows + 1].astype(np.int64)
-                vdata = np.frombuffer(parr.buffers()[2], dtype=np.uint8)
-            else:
-                voff = np.zeros(rb.num_rows + 1, dtype=np.int64)
-                vdata = empty_blob
-
-            change = np.ones(rb.num_rows, dtype=bool)
-            change[1:] = (t_codes[1:] != t_codes[:-1]) | (bucket[1:] != bucket[:-1])
-            starts = np.flatnonzero(change)
-            ends = np.append(starts[1:], rb.num_rows)
-
-            rows_out: list = []
-            for gi, (s, e) in enumerate(zip(starts, ends)):
-                span = (t_uniq[t_codes[s]], int(bucket[s]), d[s:e], t[s:e], l[s:e],
-                        vdata[voff[s]: voff[e]], voff[s + 1: e + 1] - voff[s])
-                if pending is not None:
-                    if pending[0] == span[0] and pending[1] == span[1]:
-                        span = (span[0], span[1],
-                                np.concatenate([pending[2], span[2]]),
-                                np.concatenate([pending[3], span[3]]),
-                                np.concatenate([pending[4], span[4]]),
-                                np.concatenate([pending[5], span[5]]),
-                                np.concatenate([pending[6],
-                                                span[6] + len(pending[5])]))
-                    else:
-                        flush(rows_out, pending)
-                    pending = None
-                if gi == len(starts) - 1:
-                    pending = span  # may continue in the next batch
-                else:
-                    flush(rows_out, span)
-            if rows_out:
-                yield to_batch(rows_out)
-        if pending is not None:
-            rows_out = []
-            flush(rows_out, pending)
-            yield to_batch(rows_out)
-
-    return kernel
-
-
 def _make_fragment_encoder(cfg: "IndexConfig", avgdl: float,
                            drop_ids=None):
     """Arrow kernel factory: fragment rows (FRAGMENTS_SCHEMA — or
@@ -704,7 +456,9 @@ def _make_fragment_encoder(cfg: "IndexConfig", avgdl: float,
     blocks_per_bucket = cfg.blocks_per_bucket
     store_positions = cfg.store_positions
     avgdl_ = avgdl or 1.0
-    out_names = _postings_out()[0]
+    out_names = ["term", "bucket", "block_id", "n_docs", "doc_gaps", "tfs",
+                 "dls", "pos_gaps", "block_max_tf", "block_max_wand",
+                 "block_first_doc", "block_last_doc", "cf"]
     empty8 = np.empty(0, dtype=np.uint8)
 
     def encode_groups(terms, buckets, sizes, d, t, l, blob, row_len):
@@ -964,51 +718,12 @@ def with_global_ordinals(spark: SparkSession, store: "TableStore",
             .withColumn(ord_name, F.col("offset") + F.col("local_idx"))
             .drop("pid", "local_idx", "offset"))
 
-PARTIALS_SCHEMA = ("term string, docID long, tf int, pos_bytes binary, "
-                   "dl int, is_first boolean")
-
 POSTINGS_SCHEMA = (
     "term string, bucket long, block_id long, n_docs int, "
     "doc_gaps binary, tfs binary, dls binary, pos_gaps binary, "
     "block_max_tf int, block_max_wand double, "
     "block_first_doc long, block_last_doc long, cf long"
 )
-
-
-def _positions_to_bytes(batches):
-    """mapInArrow converter for the SQL tokenizer path: per-row
-    array<int> positions -> varbyte gap blob (first value absolute),
-    matching what the SPIMI kernels emit natively."""
-    import pyarrow as pa
-
-    for rb in batches:
-        if rb.num_rows == 0:
-            continue
-        col = {nm: rb.column(i) for i, nm in enumerate(rb.schema.names)}
-        plist = col["positions"]
-        if isinstance(plist, pa.ChunkedArray):
-            plist = plist.combine_chunks()
-        flat = plist.flatten().to_numpy(zero_copy_only=False).astype(np.int64)
-        list_off = plist.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-        list_off = list_off - list_off[0]
-        starts = list_off[:-1]
-        gaps = np.diff(flat, prepend=0)
-        gaps[starts] = flat[starts]
-        data, nb = vb_encode_with_lengths(gaps)
-        val_ends = np.append(np.cumsum(nb), 0)  # [len(flat)] guard for empty rows
-        offsets = np.empty(rb.num_rows + 1, dtype=np.int32)
-        offsets[0] = 0
-        offsets[1:] = val_ends[list_off[1:] - 1]
-        pos_arr = pa.Array.from_buffers(
-            pa.binary(), rb.num_rows,
-            [None, pa.py_buffer(offsets.tobytes()), pa.py_buffer(data)])
-        # rows arrive in arbitrary post-groupBy order here, so a true
-        # per-doc first-row marker is not computable: emit False and the
-        # doc_len stage falls back to the groupBy path for this tokenizer
-        yield pa.RecordBatch.from_arrays(
-            [col["term"], col["docID"], col["tf"], pos_arr, col["dl"],
-             pa.array(np.zeros(rb.num_rows, dtype=bool))],
-            names=["term", "docID", "tf", "pos_bytes", "dl", "is_first"])
 
 
 @dataclass
@@ -1021,7 +736,6 @@ class IndexConfig:
     blocks_per_bucket: int = 512
     k1: float = 1.2
     b: float = 0.75
-    tokenizer: str = "arrow"               # "arrow" (mapInArrow, fastest) | "pandas" | "sql"
     n_partitions: int | None = None        # defaults to spark.sql.shuffle.partitions
     store_positions: bool = True
 
@@ -1030,11 +744,69 @@ class IndexConfig:
         return self.docs_per_block * self.blocks_per_bucket
 
 
+# --- the SPIMI stages shared by the batch build and the streaming append ---
+
+def write_partials(store: TableStore, name: str, docs: DataFrame,
+                   docs_per_bucket: int) -> None:
+    """(docID, content) rows -> ONE map-side SPIMI pass
+    (_make_spimi_packed) -> FRAGMENTS_SCHEMA rows, written
+    partitionBy(kind): the doc_len / doc_sha markers land in their own
+    tiny kind=m / kind=s files, so their scans file-prune past every
+    fragment payload byte (partitionBy only splits each task's output
+    file — no shuffle)."""
+    partials = docs.select("docID", "content").mapInArrow(
+        _make_spimi_packed(docs_per_bucket), schema=FRAGMENTS_SCHEMA)
+    store.write(partials, name, partition_by=["kind"])
+
+
+def doc_len_rows(partials: DataFrame) -> DataFrame:
+    """(docID, dl) decoded from the kind="m" markers: a shuffle-free,
+    file-pruned scan. Rows exist only for docs with >=1 kept term; an
+    ABSENT row means dl = 0."""
+    return (partials.filter(F.col("kind") == "m")
+            .select("n_docs", "doc_gaps", "dls")
+            .mapInArrow(_decode_doclen_markers, "docID long, dl int"))
+
+
+def doc_sha_rows(partials: DataFrame) -> DataFrame:
+    """(docID, sha256) decoded from the kind="s" markers: shuffle-free
+    and file-pruned. A NULL-content doc has no row."""
+    return (partials.filter(F.col("kind") == "s")
+            .select("n_docs", "doc_gaps", "pos_gaps")
+            .mapInArrow(_decode_sha_markers, "docID long, sha256 string"))
+
+
+def write_postings(store: TableStore, name: str, frags: DataFrame, n: int,
+                   cfg: IndexConfig, avgdl: float, drop_ids=None) -> None:
+    """The ONE postings encode shape (batch build, streaming append,
+    minor and major compaction): shuffle fragment rows — FRAGMENTS_SCHEMA
+    or POSTINGS_SCHEMA block rows — on (term, bucket) into `n`
+    partitions, sort within partitions, merge + re-cut each group with
+    the fused fragment encoder (`drop_ids`: see _make_fragment_encoder)
+    and write. The output rides the sorted run: each parquet file is
+    term-ordered, so query-time term filters prune on row-group min/max
+    stats without a second (range) shuffle of the encoded blocks. Small
+    row groups are what make that pruning real — at the parquet default
+    (128 MB) a whole file is one row group and `term IN (...)` reads
+    everything."""
+    enc = (frags.select("term", "bucket", "n_docs", "doc_gaps", "tfs",
+                        "dls", "pos_gaps")
+           .repartition(n, "term", "bucket")
+           .sortWithinPartitions("term", "bucket")
+           .mapInArrow(_make_fragment_encoder(cfg, avgdl, drop_ids=drop_ids),
+                       schema=POSTINGS_SCHEMA))
+    store.write(enc, name, options={"parquet.block.size": str(8 << 20)})
+
+
 # --- segmented-table folds (streaming LSM state) ---------------------------
 # The IncrementalIndexer appends per-batch SEGMENT files into the
 # metadata tables (O(delta) bytes per batch) instead of rewriting them;
 # readers fold duplicate term rows. A batch index (or a compacted
 # streaming index) has no segments and reads pass through untouched.
+
+# every table whose live directory receives those segment files
+SEGMENTED_TABLES = ("postings", "doc_map", "doc_len", "doc_sha",
+                    "dictionary", "dictionary_r", "bucket_max", "tombstones")
 
 def _fold_dictionary(df: DataFrame) -> DataFrame:
     # term_ord: only the compacted base carries it (segments hold null),
@@ -1159,7 +931,7 @@ class IndexBuilder:
         run("partials", self.store.exists("partials"), self._build_partials, docs)
         run("doc_len", self.store.exists("doc_len") and self.store.exists("stats"),
             self._build_doc_len_stats)
-        run("doc_sha", self.store.exists("doc_sha"), self._build_doc_sha, docs)
+        run("doc_sha", self.store.exists("doc_sha"), self._build_doc_sha)
         run("postings", self.store.exists("postings"), self._build_postings)
         run("bucket_max", self.store.exists("bucket_max"), self._build_bucket_max)
         run("dictionary", self.store.exists("dictionary"), self._build_dictionary)
@@ -1176,7 +948,10 @@ class IndexBuilder:
         return self.config.n_partitions or int(
             self.spark.conf.get("spark.sql.shuffle.partitions"))
 
-    def _postings_partitions(self, per_task_bytes: int = 4 << 20) -> int:
+    # zstd kind=f fragment bytes per postings-encode task
+    POSTINGS_TASK_BYTES = 3 << 19
+
+    def _postings_partitions(self) -> int:
         """Partition count for the postings encode shuffle: WAVE-BALANCED,
         not core-count-sized. The encode kernel's per-(term,bucket) work
         is high-variance (Zipf head terms carry dense blocks), so at
@@ -1184,18 +959,14 @@ class IndexBuilder:
         heavy partition stalls half the machine for the whole last wave
         — measured 35.5s -> 28.7s (medians of >=4 pinned 8-core runs at
         1M docs) by cutting finer. Target >=8 tasks/core, capped by the
-        partials byte size (per_task_bytes of zstd partials per task, ~4 MB
-        for per-posting rows, smaller for packed fragments which are ~3x
-        denser) so small corpora don't fragment into empty files."""
-        import glob as _glob
+        kind=f fragment byte size (POSTINGS_TASK_BYTES per task) so small
+        corpora don't fragment into empty files."""
+        import glob
         n = self._n_partitions()
         par = self.spark.sparkContext.defaultParallelism
-        root = self.store.path("partials")
-        frag_dir = os.path.join(root, "kind=f")  # packed layout
-        pat = os.path.join(frag_dir if os.path.isdir(frag_dir) else root,
-                           "*.parquet")
-        part_bytes = sum(os.path.getsize(fp) for fp in _glob.glob(pat))
-        return max(n, min(8 * par, part_bytes // per_task_bytes + 1))
+        pat = os.path.join(self.store.path("partials"), "kind=f", "*.parquet")
+        part_bytes = sum(os.path.getsize(fp) for fp in glob.glob(pat))
+        return max(n, min(8 * par, part_bytes // self.POSTINGS_TASK_BYTES + 1))
 
     def _record_lineage(self, stage: str, df_name: str, detail: str = "") -> None:
         """Per-partition row counts of a committed stage output, read from
@@ -1294,7 +1065,8 @@ class IndexBuilder:
     # -- stage 2: SPIMI partials ---------------------------------------
     def _build_partials(self, docs: DataFrame) -> None:
         """Map-side SPIMI: tokenize + per-doc inversion + fragment
-        packing fused into ONE Arrow kernel with NO shuffle.
+        packing fused into ONE Arrow kernel with NO shuffle
+        (write_partials).
 
         A document lives entirely inside one partition, so the
         (term, docID) aggregation the reference does under a lock
@@ -1308,44 +1080,17 @@ class IndexBuilder:
         """
         doc_ids = self.store.read("doc_map").select("docID", "repo", "path")
         base = docs.select("repo", "path", "content").join(doc_ids, ["repo", "path"])
-        options = None
-        partition_by = None
-        if self.config.tokenizer == "sql":
-            tokens_col = spark_tokenize_col("content")
-            tok = base.select("docID", tokens_col.alias("tokens"))
-            tok = tok.withColumn("dl", F.size("tokens"))
-            ex = tok.select("docID", "dl", F.posexplode("tokens").alias("pos", "term"))
-            exploded = (
-                ex.groupBy("term", "docID")
-                .agg(F.count("*").cast("int").alias("tf"),
-                     F.sort_array(F.collect_list(F.col("pos").cast("int"))).alias("positions"),
-                     F.first("dl").alias("dl"))
-            )
-            partials = exploded.select("term", "docID", "tf", "positions", "dl") \
-                .mapInArrow(_positions_to_bytes, schema=PARTIALS_SCHEMA)
-        elif self.config.tokenizer == "pandas":
-            partials = base.select("docID", "content").mapInPandas(
-                _spimi_invert, schema=PARTIALS_SCHEMA)
-        else:  # "arrow" (default): PACKED per-(term, bucket) fragments
-            partials = base.select("docID", "content").mapInArrow(
-                _make_spimi_packed(self.config.docs_per_bucket),
-                schema=FRAGMENTS_SCHEMA)
-            # partitionBy(kind): doc_len markers land in their own tiny
-            # kind=m files, so stage 3 file-prunes past every fragment
-            # payload byte (no shuffle is introduced — partitionBy only
-            # splits each task's output file)
-            partition_by = ["kind"]
-        self.store.write(partials, "partials", partition_by=partition_by,
-                         options=options)
+        write_partials(self.store, "partials", base, self.config.docs_per_bucket)
         self._record_lineage("partials", "partials", detail="postings_emitted")
 
     # -- stage 3: doc_len + stats --------------------------------------
     def _build_doc_len_stats(self) -> None:
         """ONE job: doc_len write with an attached Observation that yields
-        total_len as a side effect of the same pass (the round-1 shape ran
-        two extra jobs — a footer glob plus a full partials sum(tf) — on
-        top of this one, plus a doc_map join). The partials read here is
-        column-pruned to (docID, dl): two int columns, never pos_bytes.
+        total_len as a side effect of the same pass. Each map partition
+        of stage 2 wrote ONE doc_len marker row (kind == "m") carrying its
+        docs' (docID, dl) varbyte-packed, so this is a shuffle-free scan
+        that FILE-prunes to the tiny kind=m partition and never touches
+        fragment payloads (doc_len_rows).
 
         doc_len holds only docs with >=1 kept term; a doc absent from the
         table has dl = 0 (consumers left-join doc_map + coalesce). BM25's
@@ -1353,31 +1098,9 @@ class IndexBuilder:
         IndexService.java:176) — it comes from doc_map, not from here."""
         from pyspark.sql import Observation
 
-        partials = self.store.read("partials")
-        if "n_docs" in partials.columns:
-            # packed fragments: each map partition wrote ONE doc_len
-            # marker row (kind == "m") carrying its docs' (docID, dl)
-            # varbyte-packed — a shuffle-free scan that FILE-prunes to
-            # the tiny kind=m partition, never touching fragment payloads
-            dl = (partials.filter(F.col("kind") == "m")
-                  .select("n_docs", "doc_gaps", "dls")
-                  .mapInArrow(_decode_doclen_markers, "docID long, dl int"))
-        elif ("is_first" in partials.columns
-                and self.config.tokenizer != "sql"):
-            # SHUFFLE-FREE: the SPIMI kernels emit rows sorted by
-            # (doc, term) and mark each doc's first row, so one filtered
-            # narrow scan yields exactly one (docID, dl) row per doc —
-            # the round-4 shape ran a corpus-wide groupBy exchange of
-            # n_docs rows here (measured 2->8 stage efficiency ~0.47:
-            # pure avoidable bytes on the saturated bus). The SQL
-            # tokenizer path cannot compute the marker (post-groupBy row
-            # order) and keeps the aggregate.
-            dl = partials.filter(F.col("is_first")).select("docID", "dl")
-        else:
-            dl = (partials.select("docID", "dl")
-                  .groupBy("docID").agg(F.max("dl").alias("dl")))
         obs = Observation("doc_len_stats")
-        doc_len = dl.observe(obs, F.sum("dl").alias("total_len"))
+        doc_len = doc_len_rows(self.store.read("partials")).observe(
+            obs, F.sum("dl").alias("total_len"))
         self.store.write(doc_len, "doc_len")
         total_len = int(obs.get["total_len"] or 0)
         n_docs = getattr(self, "_n_docs", None)
@@ -1393,93 +1116,38 @@ class IndexBuilder:
         self._record_lineage("doc_len", "doc_len")
 
     # -- stage 3b: per-doc content fingerprints --------------------------
-    def _build_doc_sha(self, docs: DataFrame) -> None:
+    def _build_doc_sha(self) -> None:
         """doc_sha(docID, sha256): the input_hint per-row invariant
-        fingerprint. On the packed arrow path this is a SHUFFLE-FREE,
-        file-pruned scan of the kind="s" marker rows the SPIMI kernel
-        emitted during the single corpus pass — no second content read.
-        The pandas/sql tokenizer parity paths (whose kernels don't emit
-        markers) fall back to one extra content scan + a narrow join,
-        the shape this table existed to remove from the default path."""
-        partials = self.store.read("partials")
-        if "kind" in partials.columns:
-            sha = (partials.filter(F.col("kind") == "s")
-                   .select("n_docs", "doc_gaps", "pos_gaps")
-                   .mapInArrow(_decode_sha_markers,
-                               "docID long, sha256 string"))
-        else:
-            ids = self.store.read("doc_map").select("docID", "repo", "path")
-            # NULL content -> sha2 NULL -> NO row, matching the arrow
-            # kernel's contract (codec marker docstring): both paths
-            # must produce byte-identical doc_sha tables
-            sha = (with_sha256(docs)
-                   .select("repo", "path", "sha256")
-                   .filter(F.col("sha256").isNotNull())
-                   .join(ids, ["repo", "path"])
-                   .select("docID", "sha256"))
-        self.store.write(sha, "doc_sha")
+        fingerprint — a SHUFFLE-FREE, file-pruned scan of the kind="s"
+        marker rows the SPIMI kernel emitted during the single corpus
+        pass (doc_sha_rows), so no second content read."""
+        self.store.write(doc_sha_rows(self.store.read("partials")), "doc_sha")
         self._record_lineage("doc_sha", "doc_sha")
 
     # -- stage 4: block encode -----------------------------------------
     def _build_postings(self) -> None:
-        """Shuffle partials once by (term, bucket-of-docID-range), sort
-        within partitions, and stream the sorted run through an Arrow
-        kernel that cuts varbyte blocks at group boundaries. With packed
-        partials (the default) both the exchange and the sort handle
-        FRAGMENT rows and the kernel also decodes + docID-merges each
-        group (_make_fragment_encoder); the pandas/sql per-posting paths
-        keep the row-level sort + block encoder.
+        """Shuffle the packed fragments once by (term,
+        bucket-of-docID-range), sort within partitions, and stream the
+        sorted run through the fused fragment merge-encoder
+        (write_postings): the exchange and the partition sort move one
+        row per (term, bucket) per map partition — ~10-30x fewer rows
+        than per-posting, ~3-5 bytes/posting on the wire instead of ~50 —
+        and the kernel decodes, docID-merges and re-cuts each group in
+        numpy.
 
         This is the k-way merge of the reference (IndexService.java:
         290-419) re-expressed as Spark's sort-merge shuffle; the bucket
         key bounds any single group so Zipf head terms spread across
-        tasks (skew-proof). Either kernel is stateful across record
-        batches (a group may span batches) but never across partitions
-        (hash partitioning on the group key guarantees that).
+        tasks (skew-proof). The kernel is stateful across record batches
+        (a group may span batches) but never across partitions (hash
+        partitioning on the group key guarantees that).
         """
-        cfg = self.config
         stats = self.store.read("stats").collect()[0]
-        avgdl = float(stats["avgdl"]) or 1.0
         partials = self.store.read("partials")
-        if "n_docs" in partials.columns:
-            # packed fragments: the exchange and the partition sort move
-            # one row per (term, bucket) per map partition — ~10-30x
-            # fewer rows, ~3-5 bytes/posting on the wire instead of ~50
-            # — and the fused kernel merges + re-cuts groups in numpy
-            # (no Tungsten sort over per-posting rows, one less
-            # JVM->Python round trip). Fragments are ~3x denser on disk
-            # than per-posting rows, so the wave-balance byte target
-            # shrinks proportionally.
-            n = self._postings_partitions(per_task_bytes=3 << 19)
-            frags = (partials.filter(F.col("kind") == "f")
-                     .select("term", "bucket", "n_docs", "doc_gaps",
-                             "tfs", "dls", "pos_gaps"))
-            enc = (
-                frags.repartition(n, "term", "bucket")
-                .sortWithinPartitions("term", "bucket")
-                .mapInArrow(_make_fragment_encoder(cfg, avgdl),
-                            schema=POSTINGS_SCHEMA)
-            )
-        else:
-            encode = _make_block_encoder(cfg, avgdl)
-            n = self._postings_partitions()
-            cols = ["term", "docID", "tf", "dl"] + \
-                (["pos_bytes"] if cfg.store_positions else [])
-            enc = (
-                partials.select(*cols)
-                .withColumn("bucket", (F.col("docID") / F.lit(cfg.docs_per_bucket)).cast("long"))
-                .repartition(n, "term", "bucket")
-                .sortWithinPartitions("term", "bucket", "docID")
-                .mapInArrow(encode, schema=POSTINGS_SCHEMA)
-            )
-        # output rides the sorted run: each parquet file is term-ordered, so
-        # query-time term filters prune on row-group min/max stats without a
-        # second (range) shuffle of the encoded blocks. Small row groups are
-        # what make that pruning real — at the parquet default (128 MB) a
-        # whole file is one row group and `term IN (...)` reads everything;
-        # at ~1 MB a row group spans a narrow term slice of the sorted file.
-        self.store.write(enc, "postings",
-                         options={"parquet.block.size": str(8 << 20)})
+        write_postings(self.store, "postings",
+                       partials.filter(F.col("kind") == "f"),
+                       self._postings_partitions(), self.config,
+                       float(stats["avgdl"]) or 1.0)
         self._record_lineage("postings", "postings",
                              detail=f"merge_fan_in={partials.rdd.getNumPartitions()}")
 

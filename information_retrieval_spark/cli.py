@@ -36,7 +36,6 @@ def cmd_build(args) -> int:
     docs = spark.read.parquet(args.input) if args.format == "parquet" \
         else spark.read.format(args.format).load(args.input)
     cfg = IndexConfig(docs_per_block=args.docs_per_block,
-                      tokenizer=args.tokenizer,
                       n_partitions=args.shuffle_partitions)
     t0 = time.time()
     idx = IndexBuilder(spark, args.index, cfg).build(docs, resume=not args.no_resume)
@@ -102,7 +101,6 @@ def main(argv=None) -> int:
     b.add_argument("--format", default="parquet")
     b.add_argument("--index", required=True)
     b.add_argument("--docs-per-block", type=int, default=128)
-    b.add_argument("--tokenizer", default="arrow", choices=["arrow", "pandas", "sql"])
     b.add_argument("--no-resume", action="store_true")
     b.set_defaults(fn=cmd_build)
 

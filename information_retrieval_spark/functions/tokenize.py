@@ -4,10 +4,10 @@ Two interchangeable implementations of the reference tokenizer pipeline
 (IndexService.java:596-618 — whitespace split, normalize, admission
 filter; positions index KEPT terms only):
 
-- `tokenize_pandas_udf()` — Arrow-batched pandas UDF (the north-star
-  build path): batch-level vectorization with a unique-token
-  normalize-then-map so the regex work runs once per distinct raw token
-  per batch, never per row.
+- `tokenize_pandas_udf()` — Arrow-batched pandas UDF: batch-level
+  vectorization with a unique-token normalize-then-map so the regex
+  work runs once per distinct raw token per batch, never per row (the
+  index build's Arrow SPIMI kernel shares `_normalize_unique`).
 - `spark_tokenize_col()` — pure Spark SQL higher-order-function
   expression (normalize.spark_tokens_expr): runs JVM-side inside
   whole-stage codegen with zero Python in the loop.

@@ -159,6 +159,17 @@ class TableStore:
             return self.spark.read.format("iceberg").table(self.ident(name))
         return self.spark.read.parquet(self.path(name))
 
+    def refresh(self, name: str) -> None:
+        """Invalidate Spark's cached data and file listing for a table.
+        The cache manager matches cached relations by plan, i.e. by
+        path (or table name), so without this a relation cached before
+        segment files were appended to the same directory keeps serving
+        the pre-append rows to every later reader in the session."""
+        if self.use_iceberg:
+            self.spark.catalog.refreshTable(self.ident(name))
+        else:
+            self.spark.catalog.refreshByPath(self.path(name))
+
     def has_segments(self, name: str) -> bool:
         """True if the table dir holds streaming LSM segment files
         (`batch<N>_*.parquet`, appended by IncrementalIndexer) pending

@@ -45,7 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .build import Index
+from .build import SEGMENTED_TABLES, Index
 from .codec import vb_decode
 from .normalize import normalize
 
@@ -555,6 +555,13 @@ class QueryEngine:
         self.index = index
         self.spark = index.spark
         self.stats = index.load_stats()
+        # a streaming append links files into the SAME table dirs, and
+        # Spark's cache manager matches cached relations by path: refresh
+        # them, so this engine never serves an earlier engine's cached
+        # pre-append tables or per-query results
+        for name in SEGMENTED_TABLES:
+            if index.store.exists(name):
+                index.store.refresh(name)
         self._postings = index.table("postings")
         self._dictionary = index.table("dictionary")
         self._doc_map = index.table("doc_map")

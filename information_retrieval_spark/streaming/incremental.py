@@ -9,8 +9,10 @@ to the live index with `foreachBatch`:
   streaming analogue of the reference's walk-order ids,
   IndexService.java:176; ranked with the SAME two-phase
   range-partition + prefix-sum trick as the batch build — no
-  coalesce(1), no single-task window) -> Arrow SPIMI kernel -> delta
-  posting blocks appended to `postings` -> `dictionary` /
+  coalesce(1), no single-task window) -> the batch build's packed
+  SPIMI kernel + fragment encoder (build.write_partials /
+  build.write_postings) -> delta posting blocks appended to
+  `postings` -> `dictionary` /
   `dictionary_r` / `bucket_max` get per-batch SEGMENT files appended
   (LSM-style): a micro-batch writes O(delta) bytes TOTAL — the batch's
   own vocabulary, never a rewrite of the full merged dictionary.
@@ -60,18 +62,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..build import (
-    PARTIALS_SCHEMA,
-    POSTINGS_SCHEMA,
+    FRAGMENTS_SCHEMA,
+    SEGMENTED_TABLES,
     Index,
     IndexConfig,
-    _make_block_encoder,
-    _make_fragment_encoder,
-    _spimi_invert_arrow,
+    doc_len_rows,
+    doc_sha_rows,
     fold_term_rollup,
     term_bucket_rollup,
     with_global_ordinals,
+    write_partials,
+    write_postings,
 )
-from ..corpus import DOCUMENTS_SCHEMA, with_sha256
+from ..corpus import DOCUMENTS_SCHEMA
 from .segments import BatchSegments
 from ..io import TableStore
 
@@ -125,40 +128,39 @@ class IncrementalIndexer(BatchSegments):
         n_before = meta["n_before"]
 
         # -- stage 1: deterministic deltas (overwrite -> retry-safe) -----
+        # every delta is staged under tmp_batch_<id>/ through its own
+        # TableStore (overwrite writes), so a retry recomputes in place
+        stage = TableStore(self.spark, self._stage_dir(batch_id))
+        cfg = self.config
+
+        def staged(name, schema):
+            # staged re-reads name the columns they use: an explicit
+            # schema skips parquet schema inference, one job per read
+            return self.spark.read.schema(schema).parquet(stage.path(name))
+
         # docID assignment: the same two-phase global rank as the batch
         # build (range-partition the slim key projection, number rows
         # per partition once, prefix-sum the counts) — distributed, no
         # coalesce(1)/Window single-task stage, and deterministic
         # because (repo, path) keys are unique
-        batch = with_sha256(batch_df)
         order_tbl = f"tmp_batch_{batch_id}_dm_order"
         ranked = with_global_ordinals(
-            self.spark, self.store, batch.select("repo", "path"),
+            self.spark, self.store, batch_df.select("repo", "path"),
             ["repo", "path"], "ord", order_tbl, 4)
         from pyspark.sql import Observation
         doc_map_delta = (
-            ranked.join(batch, ["repo", "path"])
+            ranked.join(batch_df, ["repo", "path"])
             .select((F.col("ord") + F.lit(n_before)).cast("long").alias("docID"),
                     "repo", "path", "commit", "lang"))
         # n_delta rides the staging write as an Observation — one fewer
         # driver-synchronous job per micro-batch (retries recompute the
         # write, so the observed value is always this attempt's)
         obs_dm = Observation(f"dm_delta_{batch_id}")
-        doc_map_delta = doc_map_delta.observe(
-            obs_dm, F.count(F.lit(1)).alias("n"))
-        doc_map_delta.write.mode("overwrite").parquet(
-            self._stage_dir(batch_id, "doc_map"))
+        stage.write(doc_map_delta.observe(obs_dm, F.count(F.lit(1)).alias("n")),
+                    "doc_map")
         n_delta = int(obs_dm.get["n"])
         self.store.drop(order_tbl)
-        doc_map_delta = self.spark.read.parquet(self._stage_dir(batch_id, "doc_map"))
-        # doc_sha delta (live doc_map no longer carries sha256 — the
-        # batch build computes it in the SPIMI kernel, see
-        # build._build_doc_sha): one narrow join of the small staged
-        # doc_map against the micro-batch's sha projection
-        (doc_map_delta.select("docID", "repo", "path")
-         .join(batch.select("repo", "path", "sha256"), ["repo", "path"])
-         .select("docID", "sha256")
-         .write.mode("overwrite").parquet(self._stage_dir(batch_id, "doc_sha")))
+        doc_map_delta = staged("doc_map", "docID long, repo string, path string")
 
         if supersede and self.store.exists("doc_map"):
             # keys re-ingested by this batch tombstone their LIVE docID.
@@ -166,77 +168,58 @@ class IncrementalIndexer(BatchSegments):
             # attempt may already have linked this batch's own doc_map
             # files, and its fresh docIDs (all >= n_before by the
             # prefix-sum assignment) must not self-tombstone.
-            (self.store.read("doc_map")
-             .filter(F.col("docID") < F.lit(n_before))
-             .join(batch.select("repo", "path").distinct(), ["repo", "path"])
-             .select("docID")
-             .write.mode("overwrite")
-             .parquet(self._stage_dir(batch_id, "tombstones")))
+            stage.write(self.store.read("doc_map")
+                        .filter(F.col("docID") < F.lit(n_before))
+                        .join(batch_df.select("repo", "path").distinct(),
+                              ["repo", "path"])
+                        .select("docID"), "tombstones")
             self._ensure_live_dir("tombstones")
 
-        docs_with_id = batch.join(doc_map_delta.select("docID", "repo", "path"),
-                                  ["repo", "path"])
-        partials = docs_with_id.select("docID", "content").mapInArrow(
-            _spimi_invert_arrow, schema=PARTIALS_SCHEMA)
-        cfg = self.config
-        encode = _make_block_encoder(cfg, meta["avgdl_now"])
-        enc = (partials
-               .withColumn("bucket", (F.col("docID") / F.lit(cfg.docs_per_bucket)).cast("long"))
-               .repartition(4, "term", "bucket")
-               .sortWithinPartitions("term", "bucket", "docID")
-               .mapInArrow(encode, schema=POSTINGS_SCHEMA))
-        enc.write.mode("overwrite").parquet(self._stage_dir(batch_id, "postings"))
-        post_delta = self.spark.read.parquet(self._stage_dir(batch_id, "postings"))
-
-        # doc_len semantics match the batch build: rows only for docs with
-        # >=1 kept term (absent row == dl 0); shuffle-free via the SPIMI
-        # kernel's per-doc first-row marker (see build._build_doc_len_stats)
-        dl_delta = partials.filter(F.col("is_first")).select("docID", "dl")
-        # batch_len rides the doc_len staging write (second job saved)
+        # the batch build's own SPIMI path: ONE kernel pass staged as
+        # packed partials, then the fragment encoder for postings and the
+        # kind=m / kind=s markers for doc_len / doc_sha (same semantics
+        # as a full build: no row for a doc without kept terms / content)
+        docs_with_id = batch_df.select("repo", "path", "content").join(
+            doc_map_delta, ["repo", "path"])
+        write_partials(stage, "partials", docs_with_id, cfg.docs_per_bucket)
+        partials = staged("partials", FRAGMENTS_SCHEMA)
+        write_postings(stage, "postings", partials.filter(F.col("kind") == "f"),
+                       4, cfg, meta["avgdl_now"])
+        # batch_len rides the doc_len staging write
         obs_dl = Observation(f"dl_delta_{batch_id}")
-        dl_delta = dl_delta.observe(obs_dl, F.sum("dl").alias("s"))
-        dl_delta.write.mode("overwrite").parquet(self._stage_dir(batch_id, "doc_len"))
+        stage.write(doc_len_rows(partials).observe(obs_dl, F.sum("dl").alias("s")),
+                    "doc_len")
         batch_len = int(obs_dl.get["s"] or 0)
+        stage.write(doc_sha_rows(partials), "doc_sha")
 
-        # metadata SEGMENTS: aggregates over the batch's blocks ONLY —
-        # O(batch vocabulary) rows, independent of the live vocabulary.
-        # Readers fold duplicate term rows (build._fold_dictionary etc).
-        bmax_delta = (post_delta.groupBy("term", "bucket")
-                      .agg(F.max("block_max_wand").alias("tmax"),
-                           F.count("*").alias("n_blocks")))
-        bmax_delta.write.mode("overwrite").parquet(
-            self._stage_dir(batch_id, "bucket_max"))
-        dict_delta = (post_delta.groupBy("term")
-                      .agg(F.sum("n_docs").cast("long").alias("df"),
-                           F.sum("cf").cast("long").alias("cf"),
-                           F.count("*").alias("n_blocks"),
-                           # upper-bound semantics (a delta bucket may
-                           # also exist in the base): only used by the
-                           # WAND driver-slice size gate, where an
-                           # overestimate is safe
-                           F.countDistinct("bucket").alias("n_buckets"),
-                           F.max("block_max_wand").alias("max_block_wand"))
-                      .select("term", F.reverse("term").alias("rterm"),
-                              "df", "cf", "n_blocks", "n_buckets",
-                              "max_block_wand",
-                              # ordinals are re-ranked at compaction
-                              F.lit(None).cast("long").alias("term_ord")))
-        dict_delta.write.mode("overwrite").parquet(
-            self._stage_dir(batch_id, "dictionary"))
-        dict_r_delta = dict_delta.select("rterm", "term", "df")
-        dict_r_delta.write.mode("overwrite").parquet(
-            self._stage_dir(batch_id, "dictionary_r"))
+        # metadata SEGMENTS: the build's term-stat derivation over the
+        # batch's blocks ONLY — O(batch vocabulary) rows, independent of
+        # the live vocabulary. Readers fold duplicate term rows
+        # (build._fold_dictionary etc); a segment's n_buckets counts the
+        # batch's buckets, an upper bound after the fold (a delta bucket
+        # may also exist in the base) that only feeds the WAND
+        # driver-slice size gate, where an overestimate is safe.
+        rolled = term_bucket_rollup(staged(
+            "postings", "term string, bucket long, block_max_wand double, "
+                        "n_docs int, cf long"))
+        stage.write(rolled.select("term", "bucket", "tmax", "n_blocks"),
+                    "bucket_max")
+        # ordinals are re-ranked at compaction
+        stage.write(fold_term_rollup(rolled).withColumn(
+            "term_ord", F.lit(None).cast("long")), "dictionary")
+        stage.write(staged("dictionary", "rterm string, term string, df long"),
+                    "dictionary_r")
 
         # -- stage 2: link ALL deltas into the live tables (append-only,
         # deterministic names -> retries converge) ------------------------
         data_tables = ["doc_map", "doc_sha", "postings", "doc_len"]
-        if os.path.isdir(self._stage_dir(batch_id, "tombstones")):
+        if stage.exists("tombstones"):
             data_tables.append("tombstones")
         for table in data_tables:
-            self._append_files(self._stage_dir(batch_id, table), table, batch_id)
+            self._append_files(stage.path(table), table, batch_id)
         crash_point("links")
         for table in ("dictionary", "dictionary_r", "bucket_max"):
-            self._append_files(self._stage_dir(batch_id, table), table, batch_id)
+            self._append_files(stage.path(table), table, batch_id)
         crash_point("merges")
 
         # -- stage 3: stats (n_delta / batch_len observed during the
@@ -313,9 +296,7 @@ class IncrementalIndexer(BatchSegments):
         self._commit_batch(batch_id)
 
     # -- compaction --------------------------------------------------------
-    SEGMENTED_TABLES = ("postings", "doc_map", "doc_len", "doc_sha",
-                        "dictionary", "dictionary_r", "bucket_max",
-                        "tombstones")
+    SEGMENTED_TABLES = SEGMENTED_TABLES
 
     # compact() ships the pending-delete set to every encode task as a
     # sorted int64 array; this caps the driver/executor memory that
@@ -456,16 +437,9 @@ class IncrementalIndexer(BatchSegments):
         # docID-merges and re-cuts each (term, bucket) group AFTER the
         # shuffle, so compaction shuffles ~1 row per block fragment
         # instead of ~docs_per_block posting rows per block.
-        frags = self.store.read("postings").select(
-            "term", "bucket", "n_docs", "doc_gaps", "tfs", "dls", "pos_gaps")
-        enc = (frags
-               .repartition(n, "term", "bucket")
-               .sortWithinPartitions("term", "bucket")
-               .mapInArrow(_make_fragment_encoder(cfg, avgdl,
-                                                  drop_ids=drop_ids),
-                           schema=POSTINGS_SCHEMA))
-        self.store.write(enc, "tmp_postings_new",
-                         options={"parquet.block.size": str(8 << 20)})
+        write_postings(self.store, "tmp_postings_new",
+                       self.store.read("postings"), n, cfg, avgdl,
+                       drop_ids=drop_ids)
         self._swap("postings", "tmp_postings_new")
 
         # -- 2. metadata from the compacted postings — ONE postings scan
@@ -593,16 +567,8 @@ class IncrementalIndexer(BatchSegments):
                 # segment (physical removal stays compact()'s job)
                 src_df = src_df.select("docID").distinct()
             if table == "postings":
-                merged = (src_df
-                          .select("term", "bucket", "n_docs", "doc_gaps",
-                                  "tfs", "dls", "pos_gaps")
-                          .repartition(4, "term", "bucket")
-                          .sortWithinPartitions("term", "bucket")
-                          .mapInArrow(_make_fragment_encoder(self.config,
-                                                             avgdl),
-                                      schema=POSTINGS_SCHEMA))
-                self.store.write(merged, merged_tbl,
-                                 options={"parquet.block.size": str(8 << 20)})
+                write_postings(self.store, merged_tbl, src_df, 4,
+                               self.config, avgdl)
             else:
                 merged = (src_df.repartitionByRange(1, "docID")
                           .sortWithinPartitions("docID"))

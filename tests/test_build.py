@@ -109,32 +109,59 @@ def _index_signature(index):
     return sorted(post), sorted(dicts)
 
 
-def test_packed_build_equals_unpacked(spark, work_dir, synth_docs, synth_index):
-    # synth_index is built on the default "arrow" tokenizer => PACKED
-    # fragment partials + the fused fragment merge-encoder. The pandas
-    # tokenizer emits per-posting partials through the row-level sort +
-    # block encoder. The two pipelines must produce byte-identical
-    # postings/dictionary — an end-to-end proof of the pack -> shuffle
-    # -> merge roundtrip (incl. cross-partition docID-run interleaving).
-    cfg = IndexConfig(docs_per_block=16, blocks_per_bucket=4, n_partitions=3,
-                      tokenizer="pandas")
-    other = IndexBuilder(spark, f"{work_dir}/synth_idx_pd", cfg).build(
-        synth_docs, resume=False)
-    assert "docID" in other.store.read("partials").columns       # unpacked
-    assert "n_docs" in synth_index.store.read("partials").columns  # packed
-    assert _index_signature(other) == _index_signature(synth_index)
-    dl = sorted((r["docID"], r["dl"])
-                for r in synth_index.table("doc_len").collect())
-    dl_pd = sorted((r["docID"], r["dl"])
-                   for r in other.table("doc_len").collect())
-    assert dl == dl_pd
-    # doc_sha: kernel-emitted markers (arrow) vs the relational
-    # fallback's JVM sha2 (pandas) must agree byte-for-byte
-    sh = sorted((r["docID"], r["sha256"])
-                for r in synth_index.table("doc_sha").collect())
-    sh_pd = sorted((r["docID"], r["sha256"])
-                   for r in other.table("doc_sha").collect())
-    assert sh == sh_pd and len(sh) == synth_docs.count()
+def test_packed_build_equals_unpacked(synth_index, synth_docs):
+    # synth_index runs the packed pipeline (SPIMI fragments -> (term,
+    # bucket) shuffle -> fused fragment merge-encoder). Every stored
+    # byte of postings/dictionary/doc_len/doc_sha must equal what the
+    # pure-Python OracleIndex + the cut_blocks block cutter + hashlib
+    # derive from the raw corpus, independent of any Spark kernel — an
+    # end-to-end proof of the pack -> shuffle -> merge roundtrip (incl.
+    # cross-partition docID-run interleaving).
+    import hashlib
+
+    from test_fragment_encoder import cut_blocks
+
+    from information_retrieval_spark.oracle import OracleIndex
+
+    cfg = synth_index.config
+    docs = [(r["repo"], r["path"], r["content"]) for r in synth_docs.collect()]
+    oracle = OracleIndex(docs)
+    dpb = cfg.docs_per_bucket
+    blocks = cut_blocks(
+        [(t, d // dpb, d, len(pos), oracle.doc_len[d], pos)
+         for t, per_doc in oracle.postings.items()
+         for d, pos in per_doc.items()],
+        cfg, oracle.avgdl)
+    got = sorted((r.asDict() for r in synth_index.table("postings").collect()),
+                 key=lambda r: (r["term"], r["block_id"]))
+    assert got == blocks and len(blocks) > len(oracle.postings)
+
+    want_dict = {}
+    for b in blocks:
+        w = want_dict.setdefault(b["term"], {
+            "term": b["term"], "rterm": b["term"][::-1], "df": 0, "cf": 0,
+            "n_blocks": 0, "buckets": set(), "max_block_wand": 0.0})
+        w["df"] += b["n_docs"]
+        w["cf"] += b["cf"]
+        w["n_blocks"] += 1
+        w["buckets"].add(b["bucket"])
+        w["max_block_wand"] = max(w["max_block_wand"], b["block_max_wand"])
+    for i, t in enumerate(sorted(want_dict)):
+        w = want_dict[t]
+        w["n_buckets"] = len(w.pop("buckets"))
+        w["term_ord"] = i
+    got_dict = {r["term"]: r.asDict()
+                for r in synth_index.table("dictionary").collect()}
+    assert got_dict == want_dict
+
+    dl = {r["docID"]: r["dl"] for r in synth_index.table("doc_len").collect()}
+    assert dl == {d: n for d, n in oracle.doc_len.items() if n}
+    sha = {r["docID"]: r["sha256"]
+           for r in synth_index.table("doc_sha").collect()}
+    assert sha == {oracle.doc_id[(r, p)]:
+                   hashlib.sha256(c.encode("utf-8")).hexdigest()
+                   for r, p, c in docs if c is not None}
+    assert len(sha) == len(docs)
 
 
 def test_determinism_across_partitioning(spark, work_dir, synth_docs, synth_index):
@@ -174,14 +201,8 @@ def test_doc_len_stage_is_shuffle_free(fixture_index):
     # rows here (2->8 stage efficiency ~0.47, pure avoidable bytes on a
     # saturated memory bus) — and must FILE-prune to the kind=m
     # partition so fragment payload bytes are never read
-    from pyspark.sql import functions as F
-
-    from information_retrieval_spark.build import _decode_doclen_markers
-    partials = fixture_index.store.read("partials")
-    assert "n_docs" in partials.columns  # packed fragments
-    dl = (partials.filter(F.col("kind") == "m")
-          .select("n_docs", "doc_gaps", "dls")
-          .mapInArrow(_decode_doclen_markers, "docID long, dl int"))
+    from information_retrieval_spark.build import doc_len_rows
+    dl = doc_len_rows(fixture_index.store.read("partials"))
     plan = dl._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
     # the kind filter must prune at the FILE level (PartitionFilters),
@@ -203,12 +224,8 @@ def test_doc_sha_stage_is_shuffle_free_and_single_scan(fixture_index):
     # that the sha fingerprint costs zero shuffles and, because it is
     # served from partials, that the build never ran a second corpus
     # content scan for it
-    from information_retrieval_spark.build import _decode_sha_markers
-    partials = fixture_index.store.read("partials")
-    assert "n_docs" in partials.columns  # packed fragments
-    sha = (partials.filter(F.col("kind") == "s")
-           .select("n_docs", "doc_gaps", "pos_gaps")
-           .mapInArrow(_decode_sha_markers, "docID long, sha256 string"))
+    from information_retrieval_spark.build import doc_sha_rows
+    sha = doc_sha_rows(fixture_index.store.read("partials"))
     plan = sha._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
     assert "PartitionFilters: [isnotnull(kind" in plan, plan

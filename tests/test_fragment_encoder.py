@@ -4,21 +4,55 @@ no SparkSession. These pin the kernel paths that small end-to-end runs
 rarely force: a (term, bucket) group spanning record batches, fragment
 docID runs that interleave (post-shuffle order), and positions-off mode.
 
-The oracle is the row-input block encoder (_make_block_encoder) fed the
-same postings as sorted per-posting rows — the two kernels must emit
-byte-identical block rows (this is also what
-test_build.py::test_packed_build_equals_unpacked pins end-to-end)."""
+The oracle is `cut_blocks`, a pure-Python block cutter over the same
+postings (codec.vb_encode + the BM25 tf-norm formula, one posting at a
+time) — the kernel must emit byte-identical block rows.
+test_build.py::test_packed_build_equals_unpacked runs the same cutter
+over OracleIndex postings to pin a whole build end-to-end."""
 
 import numpy as np
 import pyarrow as pa
 import pytest
 
-from information_retrieval_spark.build import (
-    IndexConfig,
-    _make_block_encoder,
-    _make_fragment_encoder,
-)
-from information_retrieval_spark.codec import vb_encode, vb_encode_with_lengths
+from information_retrieval_spark.build import IndexConfig, _make_fragment_encoder
+from information_retrieval_spark.codec import vb_encode
+
+
+def _gaps(values):
+    """First value absolute, then deltas (the block/fragment gap coding)."""
+    return [values[0]] + [b - a for a, b in zip(values, values[1:])]
+
+
+def cut_blocks(postings, cfg, avgdl):
+    """Pure-Python oracle: postings (term, bucket, doc, tf, dl, positions)
+    -> POSTINGS_SCHEMA block rows, sorted by (term, block_id). Each
+    (term, bucket) run is cut, docID-ascending, into docs_per_block
+    blocks with per-block WAND metadata."""
+    k1, b, B = cfg.k1, cfg.b, cfg.docs_per_block
+    groups = {}
+    for p in sorted(postings, key=lambda p: p[:3]):
+        groups.setdefault((p[0], p[1]), []).append(p)
+    rows = []
+    for (term, bucket), run in groups.items():
+        for i in range(0, len(run), B):
+            blk = run[i:i + B]
+            docs = [p[2] for p in blk]
+            tfs = [p[3] for p in blk]
+            dls = [p[4] for p in blk]
+            pos = b"".join(vb_encode(_gaps([int(x) for x in p[5]]))
+                           for p in blk) if cfg.store_positions else b""
+            rows.append({
+                "term": term, "bucket": bucket,
+                "block_id": bucket * cfg.blocks_per_bucket + i // B,
+                "n_docs": len(blk), "doc_gaps": vb_encode(_gaps(docs)),
+                "tfs": vb_encode(tfs), "dls": vb_encode(dls),
+                "pos_gaps": pos, "block_max_tf": max(tfs),
+                "block_max_wand": max(
+                    tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+                    for tf, dl in zip(tfs, dls)),
+                "block_first_doc": docs[0], "block_last_doc": docs[-1],
+                "cf": sum(tfs)})
+    return sorted(rows, key=lambda r: (r["term"], r["block_id"]))
 
 
 def _fragment_batch(frags):
@@ -55,26 +89,6 @@ def _fragment_batch(frags):
                "pos_gaps"])
 
 
-def _row_batch(postings):
-    """postings: list of (term, bucket, doc, tf, dl, positions), sorted
-    by (term, bucket, doc) — the row-encoder's input contract."""
-    pos_blobs = []
-    for _, _, _, _, _, p in postings:
-        p = np.asarray(p, dtype=np.int64)
-        g = np.diff(p, prepend=0)
-        if len(g):
-            g[0] = p[0]
-        pos_blobs.append(vb_encode(g))
-    return pa.RecordBatch.from_arrays(
-        [pa.array([p[0] for p in postings], type=pa.string()),
-         pa.array([p[1] for p in postings], type=pa.int64()),
-         pa.array([p[2] for p in postings], type=pa.int64()),
-         pa.array([p[3] for p in postings], type=pa.int32()),
-         pa.array([p[4] for p in postings], type=pa.int32()),
-         pa.array(pos_blobs, type=pa.binary())],
-        names=["term", "bucket", "docID", "tf", "dl", "pos_bytes"])
-
-
 def _blocks(batches):
     rows = []
     for rb in batches:
@@ -89,7 +103,7 @@ AVGDL = 10.0
 def _postings_fixture(rng, n_terms=5, n_docs=40, frag_parts=3):
     """Random postings split into `frag_parts` interleaved fragments per
     (term, bucket) — models map partitions holding arbitrary docID
-    subsets. Returns (fragment batches input, row-encoder oracle input)."""
+    subsets. Returns (fragment batches input, cut_blocks oracle input)."""
     per_group = {}
     for t in range(n_terms):
         term = f"t{t:02d}"
@@ -121,7 +135,7 @@ def test_interleaved_fragments_match_row_encoder():
     rng = np.random.default_rng(7)
     frags, rows = _postings_fixture(rng)
     got = _blocks(_make_fragment_encoder(CFG, AVGDL)([_fragment_batch(frags)]))
-    want = _blocks(_make_block_encoder(CFG, AVGDL)([_row_batch(rows)]))
+    want = cut_blocks(rows, CFG, AVGDL)
     assert got == want
     assert len(got) > len({(r["term"], r["bucket"]) for r in got})  # multi-block
 
@@ -154,7 +168,7 @@ def test_positions_off_mode():
     rng = np.random.default_rng(5)
     frags, rows = _postings_fixture(rng, n_terms=3)
     got = _blocks(_make_fragment_encoder(cfg, AVGDL)([_fragment_batch(frags)]))
-    want = _blocks(_make_block_encoder(cfg, AVGDL)([_row_batch(rows)]))
+    want = cut_blocks(rows, cfg, AVGDL)
     assert got == want
     assert all(r["pos_gaps"] == b"" for r in got)
 

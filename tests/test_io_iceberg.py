@@ -57,6 +57,14 @@ def test_iceberg_exists_and_drop_contract(store):
     spark.sql.assert_called_once_with("DROP TABLE IF EXISTS local.irs.stats")
 
 
+def test_iceberg_refresh_contract(store):
+    # a QueryEngine refreshes its cached tables by NAME on Iceberg
+    ts, spark = store
+    ts.refresh("dictionary")
+    spark.catalog.refreshTable.assert_called_once_with("local.irs.dictionary")
+    spark.catalog.refreshByPath.assert_not_called()
+
+
 def _iceberg_available(spark) -> bool:
     try:
         spark._jvm.java.lang.Class.forName(

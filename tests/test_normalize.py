@@ -120,28 +120,27 @@ def test_whitespace_class_parity_duckdb():
 
 
 def test_whitespace_class_parity_arrow_kernel():
-    # the mapInArrow SPIMI kernel path (build._spimi_invert_arrow)
+    # the SPIMI kernel's per-batch inversion (build._invert_arrow_batch),
+    # the tokenize + invert step every index write goes through
+    import numpy as np
     import pyarrow as pa
 
-    from information_retrieval_spark.build import _spimi_invert_arrow
+    from information_retrieval_spark.build import _invert_arrow_batch
+    from information_retrieval_spark.codec import vb_decode
 
     rb = pa.RecordBatch.from_arrays(
         [pa.array(list(range(len(_WS_TEXTS))), type=pa.int64()),
          pa.array(_WS_TEXTS, type=pa.string())],
         names=["docID", "content"])
-    import numpy as np
-
-    from information_retrieval_spark.codec import vb_decode
-
-    rows = []
-    for out in _spimi_invert_arrow([rb]):
-        rows.extend(out.to_pylist())
+    term_uniq, term_code, docs, tfs, _, pos_data, pos_off, _ = \
+        _invert_arrow_batch(rb)
     got = {}
-    for r in rows:
-        positions = np.cumsum(vb_decode(r["pos_bytes"]).astype(np.int64))
-        assert len(positions) == r["tf"]
+    for g in range(len(term_code)):
+        blob = pos_data[pos_off[g]: pos_off[g + 1]].tobytes()
+        positions = np.cumsum(vb_decode(blob).astype(np.int64))
+        assert len(positions) == tfs[g]
         for p in positions:
-            got.setdefault(r["docID"], {})[int(p)] = r["term"]
+            got.setdefault(int(docs[g]), {})[int(p)] = term_uniq[term_code[g]]
     rebuilt = {d: [terms[p] for p in sorted(terms)] for d, terms in got.items()}
     expected = {i: tokenize(t) for i, t in enumerate(_WS_TEXTS) if tokenize(t)}
     assert rebuilt == expected
