@@ -5,10 +5,11 @@ Reference semantics replicated (with file:line citations into
 
 - boolean  — precedence OR < AND < NOT, no parens; query validated by
   ``\\s*\\w[\\w\\s]*`` (QueryProcessor.java:48-99). Clause evaluation is
-  intersect/difference/union over posting doc-sets — expressed here as
-  inner / left-anti / union-distinct DataFrame joins on docID, so
-  Catalyst picks the physical join (broadcast for rare terms, AQE for
-  skew).
+  intersect/difference/union over posting doc-sets. Every set query
+  (boolean, positional, phrase, joker) runs as ONE Arrow kernel per
+  docID bucket over the same block exchange BM25 uses: a bucket holds
+  every posting of its docIDs, so sorted-array ∩ / ∖ / ∪ and the
+  position probes are exact bucket by bucket (see `_make_set_kernel`).
 - positional — grammar ``term (/k term)*``; UNORDERED window
   ``|pos1-pos2| <= k``; a document is accepted if ANY adjacent query
   pair matches in it and the results of all pairs are UNIONED
@@ -18,9 +19,9 @@ Reference semantics replicated (with file:line citations into
 - joker — ``a*b``-style wildcards, <=2 stars (QueryProcessor.java:183-250):
   prefix-set ∩ suffix-set of dictionary terms (our dictionary stores
   ``rterm`` instead of the reference's second reversed vocabulary,
-  IndexBody.java:142-162), middle segment re-checked by regex; postings
-  of matched terms unioned per token, doc-sets intersected across
-  tokens. Deviation (documented in SURVEY.md §2.2 Q13): the reference
+  IndexBody.java:142-162), middle segment re-checked as a substring;
+  postings of matched terms unioned per token, doc-sets intersected
+  across tokens. Deviation (documented in SURVEY.md §2.2 Q13): the reference
   intersects a star-free token into an EMPTY initial set when it comes
   first (QueryProcessor.java:201-207) which always yields {} — we
   implement the intended semantics (the token's postings seed the base
@@ -38,7 +39,8 @@ Reference semantics replicated (with file:line citations into
 from __future__ import annotations
 
 import re
-from functools import reduce
+from functools import partial, reduce
+from operator import eq, or_
 
 import numpy as np
 import pandas as pd
@@ -46,7 +48,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .build import SEGMENTED_TABLES, Index
-from .codec import vb_decode
 from .normalize import normalize
 
 _BOOL_OK = re.compile(r"\s*\w[\w\s]*")
@@ -55,31 +56,27 @@ _PHRASE_OK = re.compile(r"\w+(\s+\w+)*")
 _JOKER_WORD = re.compile(r"(\*?\w+(\*\w+)?)|(\w+\*?\w*(\w\*\w*)?)")
 
 _DECODED_SCHEMA = "term string, docID long, tf int, dl int"
+# block columns the scoring kernels / the set kernel read
+_SCORE_COLS = ("term", "bucket", "n_docs", "doc_gaps", "tfs", "dls")
+_SET_COLS = ("term", "bucket", "n_docs", "doc_gaps")
 _DECODED_POS_SCHEMA = "term string, docID long, tf int, dl int, positions array<int>"
 
 
-def _window_match_batch(a_list, b_list, k) -> np.ndarray:
-    """Per row i: does any |a - b| <= k[i] pair exist between a_list[i]
-    and b_list[i]? Fully vectorized across the batch: both ragged sides
-    are flattened with a per-row offset M large enough that rows cannot
+def _window_match_batch(a_vals, a_lens, b_vals, b_lens, k) -> np.ndarray:
+    """Per row i: does any |a - b| <= k[i] pair exist between row i of
+    a and row i of b? Both sides are ragged: flat values, ascending
+    within a row, plus per-row lengths (the decoded positions layout).
+    Rows are shifted apart by an offset M large enough that they cannot
     collide, then ONE searchsorted + segmented any (reduceat) answers
-    every row — no per-row Python loop (a head-term pair can put 10^7
-    candidate docs through this kernel; measured ~6x faster than the
-    per-row probe it replaced in round 3)."""
-    n = len(a_list)
-    if n == 0:
-        return np.zeros(0, dtype=bool)
-    la = np.fromiter((len(x) for x in a_list), np.int64, n)
-    lb = np.fromiter((len(x) for x in b_list), np.int64, n)
-    a_flat = np.concatenate(a_list) if la.sum() else np.empty(0, np.int64)
-    b_flat = np.concatenate(b_list) if lb.sum() else np.empty(0, np.int64)
-    if not len(a_flat) or not len(b_flat):
+    every row — no per-row Python loop."""
+    n = len(a_lens)
+    if not len(a_vals) or not len(b_vals):
         return np.zeros(n, dtype=bool)
-    m = int(max(a_flat.max(), b_flat.max())) + int(k.max()) + 2
-    arow = np.repeat(np.arange(n), la)
-    brow = np.repeat(np.arange(n), lb)
-    a = a_flat + arow * m  # globally ascending (rows are disjoint)
-    b = b_flat + brow * m
+    m = int(max(a_vals.max(), b_vals.max())) + int(k.max()) + 2
+    arow = np.repeat(np.arange(n), a_lens)
+    brow = np.repeat(np.arange(n), b_lens)
+    a = a_vals + arow * m  # globally ascending (rows are disjoint)
+    b = b_vals + brow * m
     krep = k[brow]
     idx = np.searchsorted(a, b - krep, side="left")
     ok = idx < len(a)
@@ -88,51 +85,38 @@ def _window_match_batch(a_list, b_list, k) -> np.ndarray:
     # same-row mask is needed
     hit[ok] = a[idx[ok]] <= (b + krep)[ok]
     b_starts = np.zeros(n, dtype=np.int64)
-    b_starts[1:] = np.cumsum(lb[:-1])
+    b_starts[1:] = np.cumsum(b_lens[:-1])
     # empty segments: reduceat reads the NEXT segment's first value, and
     # a trailing-empty start equals len(hit) which reduceat rejects. A
     # False sentinel keeps every start index valid WITHOUT moving any
     # real segment boundary (clamping the index instead would truncate
     # the preceding row's segment — a bug hypothesis caught), and the
-    # lb==0 mask erases the leaked verdicts of mid-batch empties.
+    # b_lens==0 mask erases the leaked verdicts of mid-batch empties.
     out = np.logical_or.reduceat(
         np.concatenate([hit, np.zeros(1, dtype=bool)]), b_starts)
-    out[lb == 0] = False
+    out[b_lens == 0] = False
     return out
 
 
-def _shift_member_batch(a_list, b_list, k):
-    """Per row i: keep x in a_list[i] iff x + k[i] occurs in b_list[i].
-
-    The phrase chain's membership kernel, vectorized across the whole
-    Arrow batch: both ragged sides are flattened with a per-row offset
-    M large enough that rows cannot collide (each b row is ascending —
-    positions are stored sorted — so the flattened b is globally
-    ascending), then ONE searchsorted answers every row's probes; no
-    per-row Python loop. Returns a list of per-row kept-value lists.
-    """
-    n = len(a_list)
-    if n == 0:
-        return []
-    la = np.fromiter((len(x) for x in a_list), np.int64, n)
-    lb = np.fromiter((len(x) for x in b_list), np.int64, n)
-    a_flat = np.concatenate(a_list) if la.sum() else np.empty(0, np.int64)
-    b_flat = np.concatenate(b_list) if lb.sum() else np.empty(0, np.int64)
-    if not len(a_flat) or not len(b_flat):
-        return [[] for _ in range(n)]
-    arow = np.repeat(np.arange(n), la)
-    brow = np.repeat(np.arange(n), lb)
-    v = a_flat + k[arow]  # the position the next term must occupy
-    m = int(max(v.max(), b_flat.max())) + 2
+def _shift_member_batch(a_vals, a_lens, b_vals, b_lens, k):
+    """Per row i: keep x in row i of a iff x + k[i] occurs in row i of
+    b — the phrase chain's step, over _window_match_batch's ragged
+    layout and returning the kept (values, lengths) in it. Rows are
+    shifted apart as there, so ONE searchsorted answers every probe."""
+    n = len(a_lens)
+    if not len(a_vals) or not len(b_vals):
+        return a_vals[:0], np.zeros(n, dtype=np.int64)
+    arow = np.repeat(np.arange(n), a_lens)
+    brow = np.repeat(np.arange(n), b_lens)
+    v = a_vals + k[arow]  # the position the next term must occupy
+    m = int(max(v.max(), b_vals.max())) + 2
     a_glob = v + arow * m
-    b_glob = b_flat + brow * m
+    b_glob = b_vals + brow * m
     idx = np.searchsorted(b_glob, a_glob, side="left")
     ok = idx < len(b_glob)
     hit = np.zeros(len(a_glob), dtype=bool)
     hit[ok] = b_glob[idx[ok]] == a_glob[ok]
-    kept_row = arow[hit]
-    splits = np.searchsorted(kept_row, np.arange(1, n))
-    return [x.tolist() for x in np.split(a_flat[hit], splits)]
+    return a_vals[hit], np.bincount(arow[hit], minlength=n)
 
 
 # shared with build's compaction kernel (codec owns the buffer-level
@@ -159,13 +143,9 @@ def _decode_iter(batches, with_positions: bool):
             continue
         n_rows = rb.num_rows
         col = {nm: rb.column(i) for i, nm in enumerate(rb.schema.names)}
-        n_docs = col["n_docs"].to_numpy(zero_copy_only=False).astype(np.int64)
-        g = _flat_decode(col["doc_gaps"], n_rows).astype(np.int64)
-        if len(g) == 0:
-            continue
+        n_docs, docs = _decode_docs(col, n_rows)
         t = _flat_decode(col["tfs"], n_rows).astype(np.int64)
         l = _flat_decode(col["dls"], n_rows).astype(np.int64)
-        docs = _segmented_cumsum(g, n_docs)
         idx = pa.array(np.repeat(np.arange(n_rows, dtype=np.int64), n_docs))
         arrays = [
             pc.take(col["term"], idx),
@@ -184,6 +164,155 @@ def _decode_iter(batches, with_positions: bool):
                 pa.array(pos_vals, type=pa.int32())))
             out_names.append("positions")
         yield pa.RecordBatch.from_arrays(arrays, names=out_names)
+
+
+def _decode_docs(col, n_rows: int):
+    """(n_docs per block, absolute docID per posting) of a block batch:
+    one buffer-level varbyte decode plus one segmented gap-cumsum."""
+    n_docs = col["n_docs"].to_numpy(zero_copy_only=False).astype(np.int64)
+    g = _flat_decode(col["doc_gaps"], n_rows).astype(np.int64)
+    return n_docs, _segmented_cumsum(g, n_docs)
+
+
+class _BucketPostings:
+    """The set kernel's view of decoded postings: `member[p, s]` says
+    posting p's term belongs to query slot s, `doc[p]` is its docID and
+    `pos[off[p]:off[p] + tf[p]]` its ascending positions."""
+
+    def __init__(self, member, doc, tf=None, pos=None):
+        self.member, self.doc, self.tf, self.pos = member, doc, tf, pos
+        if tf is not None:
+            self.off = np.cumsum(tf) - tf
+
+    def docs(self, s: int) -> np.ndarray:
+        """Sorted docIDs of slot s."""
+        return np.unique(self.doc[self.member[:, s]])
+
+    def positions(self, s: int, d: np.ndarray):
+        """Ragged (values, lengths) positions of the one-term slot s in
+        each doc of the sorted set d ⊆ docs(s)."""
+        idx = np.flatnonzero(self.member[:, s])
+        idx = idx[np.argsort(self.doc[idx])]
+        idx = idx[np.isin(self.doc[idx], d, assume_unique=True)]
+        lens = self.tf[idx]
+        first = np.repeat(self.off[idx] - (np.cumsum(lens) - lens), lens)
+        return self.pos[first + np.arange(int(lens.sum()))], lens
+
+
+def _make_set_kernel(matchers, evaluate, with_positions: bool,
+                     excluded=None):
+    """mapInArrow kernel of the set queries: compressed posting blocks
+    (repartitioned + sorted by docID bucket) -> accepted docIDs.
+
+    `matchers` holds one term predicate per query slot (a term, or a
+    joker token's pattern), so a slot's docs are the union over its
+    matching terms; `evaluate(_BucketPostings)` returns the accepted
+    sorted docIDs. A bucket's blocks can straddle Arrow batches, so the
+    rows of a batch's last bucket are held until a later bucket shows
+    up; the complete buckets before it decode and evaluate together
+    (docIDs of different buckets never meet). Tombstoned docIDs
+    (`excluded`, sorted) drop inside the kernel, as in BM25's."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    classes: dict = {}  # term -> its slot-membership row
+
+    def run(rows):
+        tbl = pa.Table.from_batches(rows).combine_chunks()
+        n_rows = tbl.num_rows  # >= 1: a held bucket has rows
+        col = {nm: tbl.column(nm).chunk(0) for nm in tbl.column_names}
+        n_docs, doc = _decode_docs(col, n_rows)
+        enc = pc.dictionary_encode(col["term"])
+        rows_of = np.array(
+            [classes.setdefault(t, [m(t) for m in matchers])
+             for t in enc.dictionary.to_pylist()],
+            dtype=bool).reshape(-1, len(matchers))
+        member = np.repeat(
+            rows_of[enc.indices.to_numpy(zero_copy_only=False)], n_docs, axis=0)
+        if with_positions:
+            tf = _flat_decode(col["tfs"], n_rows).astype(np.int64)
+            pos = _segmented_cumsum(_flat_decode(col["pos_gaps"], n_rows), tf)
+            found = evaluate(_BucketPostings(member, doc, tf, pos))
+        else:
+            found = evaluate(_BucketPostings(member, doc))
+        if excluded is not None and len(excluded):
+            found = np.setdiff1d(found, excluded, assume_unique=True)
+        if len(found):
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(found, type=pa.int64())], names=["docID"])
+
+    def kernel(batches):
+        held, held_bucket = [], None
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            bucket = rb.column("bucket").to_numpy(zero_copy_only=False)
+            last = bucket[-1]
+            cut = int(np.searchsorted(bucket, last))
+            if cut or (held and held_bucket != last):
+                yield from run(held + [rb.slice(0, cut)])
+                held = []
+            held.append(rb.slice(cut))
+            held_bucket = last
+        if held:
+            yield from run(held)
+
+    return kernel
+
+
+def _exact(terms) -> list:
+    """Set-kernel matchers of slots that are single terms."""
+    return [partial(eq, t) for t in terms]
+
+
+def _joker_match(pre: str, mid, suf, term: str) -> bool:
+    """Does `term` match a joker token? A star-free token (mid None) is
+    its normalized term; a wildcard token needs the prefix, the suffix
+    and, between two stars, the middle anywhere in the term (the
+    reference's `.*mid.*` re-check)."""
+    if mid is None:
+        return term == pre
+    return term.startswith(pre) and term.endswith(suf) and mid in term
+
+
+def _intersect(doc_sets) -> np.ndarray:
+    return reduce(lambda a, b: np.intersect1d(a, b, assume_unique=True),
+                  doc_sets)
+
+
+def _eval_boolean(dnf, p: _BucketPostings) -> np.ndarray:
+    """∪ over OR-clauses of (∩ include slots) ∖ (∪ exclude slots)."""
+    out = np.empty(0, dtype=np.int64)
+    for inc, exc in dnf:
+        d = _intersect(p.docs(s) for s in inc)
+        for s in exc:
+            d = np.setdiff1d(d, p.docs(s), assume_unique=True)
+        out = np.union1d(out, d)
+    return out
+
+
+def _eval_positional(pairs, p: _BucketPostings) -> np.ndarray:
+    """Docs where ANY adjacent pair (a, b, k) has |pos_a - pos_b| <= k;
+    pair results are unioned, not chained (QueryProcessor.java:126-129)."""
+    out = np.empty(0, dtype=np.int64)
+    for a, b, k in pairs:
+        d = np.intersect1d(p.docs(a), p.docs(b), assume_unique=True)
+        hit = _window_match_batch(*p.positions(a, d), *p.positions(b, d),
+                                  np.full(len(d), k, dtype=np.int64))
+        out = np.union1d(out, d[hit])
+    return out
+
+
+def _eval_phrase(slots, p: _BucketPostings) -> np.ndarray:
+    """Docs holding the slots' terms at consecutive positions: a start
+    x survives slot i iff x + i is one of slot i's positions, so the
+    carried start set only shrinks."""
+    d = _intersect(p.docs(s) for s in set(slots))
+    starts = p.positions(slots[0], d)
+    for i in range(1, len(slots)):
+        starts = _shift_member_batch(*starts, *p.positions(slots[i], d),
+                                     np.full(len(d), i, dtype=np.int64))
+    return d[starts[1] > 0]
 
 
 def _min_window_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -585,9 +714,9 @@ class QueryEngine:
         # physical removal at the next compaction (Lucene-style: dictionary
         # stats/N/avgdl stay as-built until then — documented semantics).
         # Small sets (the steady state between compactions) ship into the
-        # scoring kernels as a sorted array, exact BEFORE the top-k cut;
-        # set-returning queries anti-join. An over-cap set keeps the
-        # relational anti-join path only (bm25 then scores emit-all).
+        # scoring and set kernels as a sorted array, exact BEFORE the
+        # top-k cut. An over-cap set keeps the relational anti-join path
+        # only (bm25 then scores emit-all).
         self._tombstones = None
         self._tomb_arr = None
         if index.store.exists("tombstones"):
@@ -601,7 +730,6 @@ class QueryEngine:
                     (r[0] for r in head), dtype=np.int64, count=len(head)))
             else:
                 self._tombstones = t
-        self._cached: list = []  # per-query caches, released on the next query
         self._term_cache: dict = {}  # term -> dictionary row (None = absent)
 
     # tombstone sets at or below this ship to the kernels as a sorted
@@ -610,22 +738,15 @@ class QueryEngine:
     TOMBSTONE_PUSHDOWN_DOCS = 1 << 21
 
     def _live(self, docs: DataFrame) -> DataFrame:
-        """Drop tombstoned docIDs from a docID-keyed relation — the
-        set-returning queries' delete filter (exact: they return full
-        result sets, so a post-hoc anti-join loses nothing). No-op on an
-        index with no pending deletes."""
+        """Drop tombstoned docIDs from a docID-keyed relation (exact for
+        a full result set: a post-hoc anti-join loses nothing). No-op on
+        an index with no pending deletes."""
         if self._tombstones is None:
             return docs
         t = self._tombstones
         if self._tomb_arr is not None:  # known-small: broadcast outright
             t = F.broadcast(t)
         return docs.join(t, "docID", "left_anti")
-
-    def _cache(self, df: DataFrame) -> DataFrame:
-        for old in self._cached:
-            old.unpersist()
-        self._cached = [df.cache()]
-        return df
 
     # ------------------------------------------------------------------
     # postings access
@@ -797,73 +918,33 @@ class QueryEngine:
     def boolean(self, q: str) -> DataFrame:
         return self._names(self.boolean_docs(q))
 
-    def _subtract_excluded(self, clause: DataFrame, exc: list) -> DataFrame:
-        """clause ANTI-JOIN (union of exc terms' docs), decoding ONLY the
-        excluded terms' posting blocks whose docID bucket occurs in the
-        clause result: a high-df excluded term never decodes its full
-        posting list when the clause is concentrated in few buckets.
-        Pruning is relational — blocks join the clause's distinct bucket
-        set (cardinality bounded by n_docs/docs_per_bucket, and by the
-        clause's own spread), so AQE broadcasts the bucket set when it
-        is small. The clause result is PERSISTED before its two
-        consumers (bucket set + anti-join) read it, so the clause
-        subtree — include-term decode + intersection joins — evaluates
-        exactly once per query (round 3 evaluated it twice; the one
-        real bench regression). The cache is released with the query's
-        other per-query caches on the next query. An exc term shared by
-        several OR-clauses decodes once per clause (rare shape; each
-        decode is bucket-pruned). dpb comes from the PERSISTED stats —
-        the bucket key must match what the index was built with, not
-        this engine's in-memory config (same rule as the BM25/WAND
-        paths)."""
-        dpb = int(self.stats["docs_per_bucket"])
-        clause = clause.persist()
-        self._cached.append(clause)
-        buckets = clause.select(
-            (F.col("docID") / F.lit(dpb)).cast("long").alias("bucket")).distinct()
-        blocks = self.blocks_for(exc).join(buckets, "bucket")
-        ex_docs = blocks.mapInArrow(
-            lambda it: _decode_iter(it, False),
-            schema=_DECODED_SCHEMA).select("docID").distinct()
-        return clause.join(ex_docs, "docID", "left_anti")
+    def _set_docs(self, blocks: DataFrame, matchers, evaluate,
+                  with_positions: bool = False) -> DataFrame:
+        """docIDs a set query accepts: its term blocks go through the
+        BM25 bucket exchange into ONE set kernel (_make_set_kernel) —
+        one shuffle, no join, no Python UDF. Small tombstone sets drop
+        inside the kernel; an over-cap set falls back to the anti-join."""
+        kernel = _make_set_kernel(matchers, evaluate, with_positions,
+                                  self._tomb_arr)
+        cols = _SET_COLS + (("tfs", "pos_gaps") if with_positions else ())
+        docs = self._kernel_scan(blocks, kernel, cols, "docID long")
+        return docs if self._tomb_arr is not None else self._live(docs)
 
     def boolean_docs(self, q: str) -> DataFrame:
-        clauses = self.parse_boolean(q)
-        # decode + cache INCLUDE terms only: excluded terms go through
-        # the bucket-pruned path in _subtract_excluded, which skips
-        # whole blocks instead of decoding the full posting list
-        all_terms = {t for inc, _ in clauses for t in inc if t is not None}
-        decoded = self.postings_for(all_terms).select("term", "docID")
-        decoded = self._cache(decoded)  # one decode pass feeds every clause
-        try:
-            parts = []
-            for inc, exc in clauses:
-                if not inc or any(t is None for t in inc):
-                    # reference seeds from the first non-null include
-                    # (QueryProcessor.java:66-81); a null include term has no
-                    # postings -> empty intersection
-                    inc = [t for t in inc if t is not None]
-                    if not inc:
-                        continue
-                    parts.append(decoded.filter(F.lit(False)).select("docID"))
-                    continue
-                # intersect in ascending-df order (SURVEY.md §4: cheap
-                # improvement over the reference's seed-from-first; same result)
-                stats = self.term_stats(inc)
-                inc = sorted(inc, key=lambda t: stats.get(t, {}).get("df", 0))
-                clause = reduce(
-                    lambda a, b: a.join(b, "docID"),
-                    [decoded.filter(F.col("term") == t).select("docID").distinct()
-                     for t in inc])
-                exc = [t for t in exc if t is not None]
-                if exc:
-                    clause = self._subtract_excluded(clause, exc)
-                parts.append(clause)
-            if not parts:
-                return decoded.select("docID").filter(F.lit(False))
-            return self._live(reduce(DataFrame.union, parts).distinct())
-        finally:
-            pass  # cache released with the session; small per-query footprint
+        # the reference seeds each clause from its first non-null include
+        # (QueryProcessor.java:66-81); a null include term has no
+        # postings, so such a clause (and one with no include) is empty
+        clauses = [(inc, [t for t in exc if t is not None])
+                   for inc, exc in self.parse_boolean(q)
+                   if inc and None not in inc]
+        terms = sorted({t for inc, exc in clauses for t in inc + exc})
+        if not terms:
+            return self._doc_map.select("docID").filter(F.lit(False))
+        slot = {t: i for i, t in enumerate(terms)}
+        dnf = [([slot[t] for t in inc], [slot[t] for t in exc])
+               for inc, exc in clauses]
+        return self._set_docs(self.blocks_for(terms), _exact(terms),
+                              partial(_eval_boolean, dnf))
 
     # ------------------------------------------------------------------
     # positional
@@ -881,53 +962,21 @@ class QueryEngine:
         return self._names(self.positional_docs(q))
 
     def positional_docs(self, q: str) -> DataFrame:
-        """Plan shape (same pivot as phrase_docs): one positional decode
-        of the term set -> ONE groupBy(docID) pivoting each query slot's
-        position list into a column -> one pandas UDF evaluating EVERY
-        adjacent pair's window probe (|a-b| <= k via the flattened
-        searchsorted kernel, _window_match_batch) and OR-ing the pair
-        verdicts — a doc qualifies if ANY adjacent pair matches, pairs
-        are not chained (QueryProcessor.java:126-129). One wide exchange
-        total; the round-4 shape ran one docID join + one Python stage
-        per pair and a union-distinct on top. A slot column is null when
-        the doc lacks that term — the kernel sees an empty list and the
-        pair contributes False, exactly the inner-join semantics."""
+        """Docs where ANY adjacent query pair lies within its window
+        (|a-b| <= k); pairs are not chained (QueryProcessor.java:126-129).
+        The distinct terms' blocks, with positions, ride the bucket
+        exchange into one set kernel (_eval_positional)."""
         terms, dists = self.parse_positional(q)
         present = self.term_stats([t for t in terms if t is not None])
         if any(t is None or t not in present for t in terms):
             # early-exit if any term is absent (QueryProcessor.java:120)
             return self._doc_map.select("docID").filter(F.lit(False))
-        decoded = self._cache(
-            self.postings_for(set(terms), with_positions=True)
-            .select("term", "docID", "positions"))
-
-        n_slots = len(terms)
-        ks = np.asarray(dists, dtype=np.int64)
-
-        @F.pandas_udf("boolean")
-        def any_pair_match(slots: pd.Series) -> pd.Series:
-            n = len(slots)
-            if n == 0:
-                return pd.Series([], dtype=bool)
-            cols = [[np.asarray(row[i], dtype=np.int64)
-                     if row[i] is not None else np.empty(0, np.int64)
-                     for row in slots] for i in range(n_slots)]
-            out = np.zeros(n, dtype=bool)
-            for i, k in enumerate(ks):
-                out |= _window_match_batch(
-                    cols[i], cols[i + 1], np.full(n, k, dtype=np.int64))
-            return pd.Series(out)
-
-        slot_aggs = [
-            F.first(F.when(F.col("term") == t, F.col("positions")),
-                    ignorenulls=True).alias(f"p{i}")
-            for i, t in enumerate(terms)]
-        pivoted = decoded.groupBy("docID").agg(*slot_aggs)
-        return self._live(
-            pivoted
-            .filter(any_pair_match(F.array(*[F.col(f"p{i}")
-                                             for i in range(n_slots)])))
-            .select("docID"))
+        uniq = sorted(set(terms))
+        slots = [uniq.index(t) for t in terms]
+        pairs = list(zip(slots, slots[1:], dists))
+        return self._set_docs(self.blocks_for(uniq), _exact(uniq),
+                              partial(_eval_positional, pairs),
+                              with_positions=True)
 
     # ------------------------------------------------------------------
     # phrase (exact ordered adjacency — north-star addition; the
@@ -955,139 +1004,83 @@ class QueryEngine:
         return self._names(self.phrase_docs(q))
 
     def phrase_docs(self, q: str) -> DataFrame:
-        """Docs containing the exact phrase. Plan shape: one positional
-        decode of the (deduped) term set -> ONE groupBy(docID) that
-        PIVOTS each phrase slot's position list into its own column
-        (conditional first() aggregates — a repeated term reuses the
-        same decoded list) -> one pandas UDF evaluating the whole
-        adjacency chain in memory: start x survives slot i iff x+i is
-        in slot i's position list, probed by the flattened-searchsorted
-        batch kernel (_shift_member_batch), so the carried start set
-        can only shrink. One wide exchange TOTAL — the round-4 shape
-        chained N-1 docID joins (each its own shuffle + Python stage)
-        over the same decoded relation; at 3 terms this halves the
-        phrase median."""
+        """Docs containing the exact phrase. The distinct terms' blocks,
+        with positions, ride the bucket exchange into one set kernel
+        (_eval_phrase); a repeated term reuses its decoded positions."""
         terms = self.parse_phrase(q)
         present = self.term_stats([t for t in terms if t is not None])
         if any(t is None or t not in present for t in terms):
             return self._doc_map.select("docID").filter(F.lit(False))
-        decoded = self._cache(
-            self.postings_for(set(terms), with_positions=True)
-            .select("term", "docID", "positions"))
-        if len(terms) == 1:
-            # degenerate membership — still a set-returning query, so
-            # the tombstone anti-join applies like everywhere else
-            return self._live(decoded.filter(F.col("term") == terms[0])
-                              .select("docID").distinct())
-
-        n_slots = len(terms)
-
-        @F.pandas_udf("boolean")
-        def chain_ok(slots: pd.Series) -> pd.Series:
-            # slots: per row an array of n_slots position lists. The
-            # whole chain runs in numpy across the batch — no per-row
-            # Python beyond list slicing.
-            n = len(slots)
-            if n == 0:
-                return pd.Series([], dtype=bool)
-            starts = [np.asarray(row[0], dtype=np.int64) for row in slots]
-            for i in range(1, n_slots):
-                nxt = [np.asarray(row[i], dtype=np.int64) for row in slots]
-                starts = [np.asarray(x, dtype=np.int64) for x in
-                          _shift_member_batch(
-                              starts, nxt, np.full(n, i, dtype=np.int64))]
-            return pd.Series([len(s) > 0 for s in starts])
-
-        # pivot: slot i's positions as column p{i}; docs missing ANY
-        # phrase term drop out via the non-null filter (the aggregate
-        # sees one row per (term, docID), so first() is deterministic)
-        slot_aggs = [
-            F.first(F.when(F.col("term") == t, F.col("positions")),
-                    ignorenulls=True).alias(f"p{i}")
-            for i, t in enumerate(terms)]
-        pivoted = decoded.groupBy("docID").agg(*slot_aggs)
-        alive = reduce(lambda d, i: d.filter(F.col(f"p{i}").isNotNull()),
-                       range(n_slots), pivoted)
-        return self._live(
-            alive
-            .filter(chain_ok(F.array(*[F.col(f"p{i}")
-                                       for i in range(n_slots)])))
-            .select("docID"))
+        uniq = sorted(set(terms))
+        return self._set_docs(self.blocks_for(uniq), _exact(uniq),
+                              partial(_eval_phrase,
+                                      [uniq.index(t) for t in terms]),
+                              with_positions=True)
 
     # ------------------------------------------------------------------
     # joker (wildcard)
     # ------------------------------------------------------------------
     # match sets up to this size become a `term IN (...)` postings-scan
-    # predicate; larger sets use a join (size-estimated by Spark)
+    # predicate; larger sets scan the tokens' prefixes and leave the
+    # exact match to the kernel
     JOKER_PUSHDOWN_TERMS = 8192
 
     def joker(self, q: str) -> DataFrame:
         return self._names(self.joker_docs(q))
 
     def joker_docs(self, q: str) -> DataFrame:
+        """Docs matching every token; a wildcard token matches the union
+        of its dictionary terms. ONE dictionary probe fetches all tokens'
+        matches up to JOKER_PUSHDOWN_TERMS: a token with none empties the
+        result, and the set becomes a `term IN (...)` postings-scan
+        predicate (row-group pruned, pure-suffix tokens included). An
+        oversized set (`s*a*` on a web-scale dictionary) scans the
+        tokens' prefixes instead; the set kernel classifies every term
+        against the token patterns itself."""
         tokens = re.split(r"\s+", q.strip())
         for tok in tokens:
             if _JOKER_WORD.fullmatch(tok) is None:
                 raise ValueError(f'"{q}" is not a valid joker query')
-        tokens = [t.lower() for t in tokens]  # QueryProcessor.java:193
-
-        empty = self._doc_map.select("docID").filter(F.lit(False))
-        token_doc_sets = []
-        for tok in tokens:
-            pushdown = None  # scan-level predicate for the postings side
+        # per token (prefix, middle, suffix); a star-free token is its
+        # normalized term with middle None
+        pats = []
+        for tok in (t.lower() for t in tokens):  # QueryProcessor.java:193
             if "*" not in tok:
                 term = normalize(tok)
-                if term is None:
-                    continue
-                matched = self._dictionary.filter(F.col("term") == term)
-                pushdown = F.col("term") == term
+                if term is not None:
+                    pats.append((term, None, None))
             else:
-                pre = tok[: tok.index("*")]
-                suf = tok[tok.rindex("*") + 1:]
-                if pre:
-                    cond = F.col("term").startswith(pre)
-                    if suf:
-                        cond = cond & F.col("rterm").startswith(suf[::-1])
-                    matched = self._dictionary.filter(cond)
-                    pushdown = F.col("term").startswith(pre)
-                else:
-                    # pure-suffix token: probe the rterm-SORTED twin
-                    # dictionary so the startswith prunes row groups
-                    # (IndexBody.java:40-53's reversed vocabulary)
-                    matched = self._dictionary_r.filter(
-                        F.col("rterm").startswith(suf[::-1]))
-                if tok.index("*") != tok.rindex("*"):
-                    mid = tok[tok.index("*") + 1: tok.rindex("*")]
-                    matched = matched.filter(F.col("term").rlike(f".*{re.escape(mid)}.*"))
-            matched = matched.select("term")
-            # ONE probe job per token: fetch up to the pushdown cap. A
-            # moderate match set becomes a `term IN (...)` predicate pushed
-            # into the postings scan (reaching parquet row-group stats of
-            # the term-sorted files) with no join at all — including for
-            # pure-suffix tokens, where the round-1 shape scanned the
-            # whole postings table. Only an oversized match set (a pattern
-            # like `s*a*` on a web-scale dictionary) falls back to a
-            # shuffle join, where Spark's size estimates pick the physical
-            # join — never an unconditional driver-side broadcast.
-            sample = [r["term"]
-                      for r in matched.limit(self.JOKER_PUSHDOWN_TERMS + 1).collect()]
-            if not sample:
-                return empty
-            if len(sample) <= self.JOKER_PUSHDOWN_TERMS:
-                blocks = self._postings.filter(F.col("term").isin(sample))
-            else:
-                pre_blocks = self._postings
-                if pushdown is not None:
-                    pre_blocks = pre_blocks.filter(pushdown)
-                blocks = pre_blocks.join(matched, "term")
-            docs = (blocks.mapInArrow(lambda it: _decode_iter(it, False),
-                                      schema=_DECODED_SCHEMA)
-                    .select("docID").distinct())
-            token_doc_sets.append(docs)
-        if not token_doc_sets:
-            return empty
-        return self._live(
-            reduce(lambda a, b: a.join(b, "docID"), token_doc_sets))
+                i, j = tok.index("*"), tok.rindex("*")
+                pats.append((tok[:i], tok[i + 1:j], tok[j + 1:]))
+        if not pats:
+            return self._doc_map.select("docID").filter(F.lit(False))
+        term = F.col("term")
+        scan = [term == pre if mid is None else term.startswith(pre)
+                for pre, mid, _ in pats]
+        probe = [c if mid is None else c & term.contains(mid)
+                 & F.col("rterm").startswith(suf[::-1])
+                 for c, (_, mid, suf) in zip(scan, pats)]
+        # all-suffix queries probe the rterm-SORTED twin dictionary so
+        # the rterm startswith prunes row groups (IndexBody.java:40-53's
+        # reversed vocabulary)
+        src = (self._dictionary_r if all(mid is not None and not pre
+                                         for pre, mid, _ in pats)
+               else self._dictionary)
+        # coalesce(1): the capped probe is ONE job (a root limit over
+        # several partitions scans them in growing waves, a job each)
+        matched = [r["term"] for r in src.filter(reduce(or_, probe))
+                   .select("term").coalesce(1)
+                   .limit(self.JOKER_PUSHDOWN_TERMS + 1).collect()]
+        matchers = [partial(_joker_match, *p) for p in pats]
+        if len(matched) <= self.JOKER_PUSHDOWN_TERMS:
+            if not all(any(m(t) for t in matched) for m in matchers):
+                return self._doc_map.select("docID").filter(F.lit(False))
+            blocks = self.blocks_for(matched)
+        else:
+            blocks = self._postings.filter(reduce(or_, scan))
+        # one AND clause over the token slots
+        return self._set_docs(blocks, matchers, partial(
+            _eval_boolean, [(list(range(len(pats))), [])]))
 
     # ------------------------------------------------------------------
     # BM25 top-k
@@ -1116,10 +1109,12 @@ class QueryEngine:
                                    excluded=self._tomb_arr)
         return self._kernel_scan(blocks, kernel)
 
-    def _kernel_scan(self, blocks: DataFrame, kernel) -> DataFrame:
-        """Repartition compressed blocks by docID bucket and run a
-        scoring kernel over them — the shared physical plan of every
-        bucket-accumulator ranker (BM25, query-likelihood).
+    def _kernel_scan(self, blocks: DataFrame, kernel, cols=_SCORE_COLS,
+                     schema: str = "docID long, score double") -> DataFrame:
+        """Repartition compressed blocks (their `cols`) by docID bucket
+        and run a bucket kernel over them — the shared physical plan of
+        every bucket-accumulator ranker (BM25, batched BM25,
+        query-likelihood) and of the set queries.
 
         EXPLICIT partition count: the compressed-block exchange is tiny
         in bytes but CPU-heavy per row, so AQE's size-based coalescing
@@ -1130,9 +1125,9 @@ class QueryEngine:
         n_buckets = max(1, -(-int(st["n_docs"]) // int(st["docs_per_bucket"])))
         n = max(1, min(int(self.spark.conf.get("spark.sql.shuffle.partitions")),
                        2 * n_buckets))
-        slim = blocks.select("term", "bucket", "n_docs", "doc_gaps", "tfs", "dls")
-        return (slim.repartition(n, "bucket").sortWithinPartitions("bucket")
-                .mapInArrow(kernel, schema="docID long, score double"))
+        return (blocks.select(*cols)
+                .repartition(n, "bucket").sortWithinPartitions("bucket")
+                .mapInArrow(kernel, schema=schema))
 
     def bm25(self, query: str, k: int = 10, wand: bool = True,
              wand_gate_blocks: int = 16384) -> DataFrame:
@@ -1430,8 +1425,7 @@ class QueryEngine:
         Shape: (1) the BM25 page gives the relevance set S (`top_docs`
         docIDs — a driver-sized list); (2) postings decode restricted to
         S's BUCKETS (|S| buckets at most, a vanishing fraction of the
-        index at scale — the same bucket-pruned decode the boolean-NOT
-        path uses) then filter docID IN S; (3) candidate terms score
+        index at scale) then filter docID IN S; (3) candidate terms score
         w = df_S · idf(term) — in-S document frequency damped by global
         rarity, so corpus-wide stopwords sink — with the query's own
         terms excluded and w ROUNDED to 6 dp before the deterministic
@@ -1566,7 +1560,7 @@ class QueryEngine:
         """Phrase-constrained ranked retrieval — the '"exact phrase"
         must appear, rank by relevance' search-box mode: the exact
         BM25 top-k of `query` over ONLY the docs matching `phrase`
-        (positional adjacency via phrase_docs' one-exchange pivot
+        (positional adjacency via phrase_docs' one-exchange set
         kernel). Composes the two primitives; the allowed set is a
         docID relation, so the selective-pushdown / broad-join scale
         split of bm25_within applies unchanged."""
@@ -1638,14 +1632,8 @@ class QueryEngine:
             term_qinfo, len(live), float(st["k1"]), float(st["b"]),
             float(st["avgdl"]) or 1.0, int(st["docs_per_bucket"]), k,
             excluded=self._tomb_arr)
-        blocks = self.blocks_for(sorted(term_qinfo))
-        n_buckets = max(1, -(-int(st["n_docs"]) // int(st["docs_per_bucket"])))
-        n = max(1, min(int(self.spark.conf.get("spark.sql.shuffle.partitions")),
-                       2 * n_buckets))
-        slim = blocks.select("term", "bucket", "n_docs", "doc_gaps", "tfs", "dls")
-        scored = (slim.repartition(n, "bucket").sortWithinPartitions("bucket")
-                  .mapInArrow(kernel,
-                              schema="qcode int, docID long, score double"))
+        scored = self._kernel_scan(self.blocks_for(sorted(term_qinfo)), kernel,
+                                   schema="qcode int, docID long, score double")
         from pyspark.sql import Window
         qmap = F.broadcast(self.spark.createDataFrame(
             [(i, q) for i, q in enumerate(live)], "qcode int, qid string"))
@@ -2008,7 +1996,7 @@ class QueryEngine:
         user is looking at), so snippet work is bounded by k, never by
         the corpus — only the query terms' posting blocks whose docID
         bucket occurs in the page are decoded (`term IN` + `bucket IN`
-        pushdown, same pruning as the boolean NOT path), and the
+        pushdown), and the
         minimal-window sweep is O(occurrences) per doc inside one
         Arrow batch per doc (applyInPandas over k groups). The exact
         same window is recomputed by the driver gate's DuckDB oracle

@@ -65,6 +65,14 @@ def test_gap_first_absolute():
 
 # --- phrase membership kernel (query._shift_member_batch) ---------------
 
+def _ragged(rows):
+    """Per-row int lists -> the kernels' (flat values, row lengths)."""
+    import numpy as np
+    rows = list(rows)
+    return (np.asarray([x for r in rows for x in r], dtype=np.int64),
+            np.asarray([len(r) for r in rows], dtype=np.int64))
+
+
 @given(st.lists(st.tuples(
            st.lists(st.integers(0, 500), max_size=30).map(sorted),
            st.lists(st.integers(0, 500), max_size=30).map(sorted),
@@ -75,10 +83,11 @@ def test_shift_member_batch_matches_set_oracle(rows):
     import numpy as np
 
     from information_retrieval_spark.query import _shift_member_batch
-    a_list = [np.asarray(a, dtype=np.int64) for a, _b, _k in rows]
-    b_list = [np.asarray(b, dtype=np.int64) for _a, b, _k in rows]
     k = np.asarray([kk for _a, _b, kk in rows], dtype=np.int64)
-    got = _shift_member_batch(a_list, b_list, k)
+    vals, lens = _shift_member_batch(*_ragged(a for a, _b, _k in rows),
+                                     *_ragged(b for _a, b, _k in rows), k)
+    got = [x.tolist() for x in np.split(vals, np.cumsum(lens)[:-1])] \
+        if len(rows) else []
     want = [[x for x in a if x + kk in set(b)] for a, b, kk in rows]
     assert got == want
 
@@ -96,10 +105,9 @@ def test_window_match_batch_matches_set_oracle(rows):
     import numpy as np
 
     from information_retrieval_spark.query import _window_match_batch
-    a_list = [np.asarray(a, dtype=np.int64) for a, _b, _k in rows]
-    b_list = [np.asarray(b, dtype=np.int64) for _a, b, _k in rows]
     k = np.asarray([kk for _a, _b, kk in rows], dtype=np.int64)
-    got = _window_match_batch(a_list, b_list, k).tolist()
+    got = _window_match_batch(*_ragged(a for a, _b, _k in rows),
+                              *_ragged(b for _a, b, _k in rows), k).tolist()
     want = [any(abs(x - y) <= kk for x in a for y in b)
             for a, b, kk in rows]
     assert got == want

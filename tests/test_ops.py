@@ -1616,6 +1616,27 @@ def test_curation_report_plan_is_map_only(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan and "BatchEvalPython" not in plan, plan
 
+
+def test_curation_fence_survives_filter_pushdown(spark, monkeypatch):
+    # _opt_fence pins each signal to one evaluation per row: a caller's
+    # .filter("kept") must not re-inline the signals into the pushed-down
+    # condition. Fails if a Spark version folds the fence away (measured
+    # on Spark 4.1: 22 regexp_replace fenced, 464 unfenced).
+    df = spark.createDataFrame(
+        [(i, f"the quick brown fox {i} jumps over the lazy dog " * 3)
+         for i in range(20)], "doc_id long, text string")
+
+    def counts(out):
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        return plan.count("regexp_replace"), plan.count("rand(7")
+
+    report = counts(textstats.curation_report(df))
+    kept = counts(textstats.curation_report(df).filter("kept"))
+    assert kept == report and kept[1] >= 1, (report, kept)
+    monkeypatch.setattr(textstats, "_opt_fence", lambda c: c)
+    unfenced = counts(textstats.curation_report(df).filter("kept"))
+    assert unfenced[0] > 10 * kept[0], (unfenced, kept)
+
 # -- exact duplicated spans (dedup.duplicated_spans) ---------------------
 
 def test_duplicated_spans_oracle(spark):

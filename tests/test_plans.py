@@ -2,6 +2,7 @@
 on must actually appear in the plans (pushdown, broadcast, no stray
 exchanges) — `.explain` as a test, per the task brief."""
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -47,13 +48,61 @@ def test_joker_suffix_pushdown_into_postings(synth_engine):
     assert docs.count() > 0
 
 
-def test_joker_oversized_match_set_uses_join(synth_engine, monkeypatch):
-    # force the big-match-set path: joins instead of isin, no driver OOM
+def test_joker_oversized_match_set_scans_prefixes(synth_engine, monkeypatch):
+    # force the big-match-set path: the postings scan filters on the
+    # token's prefix instead of an IN list, and the set kernel keeps
+    # only the terms that match the token; no driver OOM, no join
     monkeypatch.setattr(type(synth_engine), "JOKER_PUSHDOWN_TERMS", 1)
-    via_join = sorted(r["docID"] for r in synth_engine.joker_docs("sym*").collect())
+    df = synth_engine.joker_docs("sym*")
+    plan = _plan(df)
+    assert "StartsWith(term" in plan and "Join" not in plan, plan
+    via_prefix = sorted(r["docID"] for r in df.collect())
     monkeypatch.undo()
     via_isin = sorted(r["docID"] for r in synth_engine.joker_docs("sym*").collect())
-    assert via_join == via_isin and via_join
+    assert via_prefix == via_isin and via_prefix
+
+
+SET_QUERIES = {
+    "boolean": lambda e: e.boolean_docs("sym0 AND sym1 OR sym2 AND sym3"),
+    # the NOT term rides the include terms' scan into the same kernel
+    "boolean_not": lambda e: e.boolean_docs("sym0 AND NOT the"),
+    "positional": lambda e: e.positional_docs("sym0 /5 sym1"),
+    "phrase": lambda e: e.phrase_docs("needle haystack needle"),
+    "joker": lambda e: e.joker_docs("sym1* need*"),
+}
+
+
+@pytest.mark.parametrize("name", sorted(SET_QUERIES))
+def test_set_query_is_one_bucket_kernel(synth_engine, name):
+    # every set query shuffles compressed blocks on the docID bucket,
+    # exactly as bm25 does, and evaluates in ONE Arrow kernel: no
+    # second decode, no join tree, no Python UDF
+    plan = _plan(SET_QUERIES[name](synth_engine))
+    assert "hashpartitioning(bucket" in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
+    for node in ("ArrowEvalPython", "BatchEvalPython", "SortMergeJoin",
+                 "ShuffledHashJoin", "BroadcastHashJoin"):
+        assert node not in plan, plan
+
+
+@pytest.mark.parametrize("name, budget", [
+    ("boolean", 2), ("boolean_not", 2), ("positional", 2), ("phrase", 2),
+    # + the one dictionary probe that resolves every token
+    ("joker", 3),
+    # measured: scoring exchange, top-k cut and the doc_map name join
+    ("bm25", 5)])
+def test_query_job_budget(synth_engine, name, budget):
+    run = SET_QUERIES.get(name, lambda e: e.bm25("sym0 sym1 sym2", k=5))
+    run(synth_engine).collect()  # warm the term cache and cached tables
+    sc = synth_engine.spark.sparkContext
+    group = f"query_budget_{name}"
+    sc.setJobGroup(group, "job budget pin")
+    try:
+        run(synth_engine).collect()
+    finally:
+        sc.setJobGroup(f"{group}_done", "")
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= budget, len(jobs)
 
 
 def test_bm25_shuffles_blocks_not_postings(synth_engine):
@@ -140,31 +189,16 @@ def test_gated_ngram_jaccard_has_no_allpairs_shingle_join(spark):
             assert "id" in cond, cond
 
 
-def test_not_term_decode_is_bucket_pruned(synth_engine):
-    # VERDICT r2 "what's wrong #5": an excluded (NOT) term must not
-    # decode its full posting list — its blocks join the clause's
-    # distinct bucket set BEFORE the Arrow decode, so off-bucket blocks
-    # are skipped compressed
-    import re
-    df = synth_engine.boolean_docs("sym0 AND NOT the")
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    # two decode kernels: one for include terms, one (pruned) for NOT
-    assert plan.count("MapInArrow") >= 2, plan
-    assert re.search(r"Join Inner, \(bucket#", plan), plan
-
-
 def test_phrase_scan_pushdown_and_single_decode(synth_engine):
     # the phrase plan must (a) push its deduped term set into the
     # postings scan as an In/term filter, (b) run ONE positional decode
-    # kernel, and (c) evaluate the adjacency chain over ONE
-    # groupBy(docID) pivot — no per-slot docID joins (the round-4 shape
-    # shuffled once per phrase slot)
+    # kernel, and (c) evaluate the adjacency chain inside it — no
+    # per-slot docID joins (the round-4 shape shuffled once per slot)
     df = synth_engine.phrase_docs("needle haystack needle")
     plan = df._jdf.queryExecution().sparkPlan().toString()
     assert "In(term" in plan or ("PushedFilters" in plan and "term" in plan), plan
     assert "Join" not in plan, plan
     opt = df._jdf.queryExecution().optimizedPlan().toString()
-    # the decoded relation is cached: steps re-read the InMemoryRelation
     assert "InMemoryRelation" in opt or opt.count("MapInArrow") == 1, opt
 
 

@@ -162,6 +162,25 @@ def test_phrase_from_real_token_streams(synth_engine, synth_oracle, synth_docs):
         assert got == want and len(want) >= 1, f"phrase {q!r}"
 
 
+def test_set_queries_with_buckets_straddling_arrow_batches(
+        spark, synth_engine, synth_oracle):
+    """The set kernel evaluates whole docID buckets; a bucket's blocks
+    span several Arrow batches once a partition holds more block rows
+    than one batch. Three-row batches force that on every bucket."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        for cls, q in [("boolean", "sym0 OR sym5 AND NOT sym1"),
+                       ("positional", "the /2 for /3 sym0"),
+                       ("phrase", "needle haystack needle"),
+                       ("joker", "sym1* need*")]:
+            got = sorted(names(getattr(synth_engine, cls)(q)))
+            assert got == getattr(synth_oracle, cls)(q), (cls, q)
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_phrase_absent_term(synth_engine):
     assert names(synth_engine.phrase("needle zzzmissing")) == []
 

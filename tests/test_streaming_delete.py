@@ -88,6 +88,36 @@ def test_delete_excludes_everywhere_before_compact(spark, work_dir):
     assert qe.stats["n_docs"] == 7
 
 
+def test_set_queries_exclude_deletes_on_both_tombstone_gates(
+        spark, work_dir, monkeypatch):
+    """Every set query drops a pending delete on both sides of
+    TOMBSTONE_PUSHDOWN_DOCS: at the default the tombstones ship into
+    the set kernel; at 0 (over the cap) the result anti-joins them."""
+    inc = _grown_index(spark, work_dir, "del_gate_idx")
+    inc.delete_batch(_keys(spark, [("ref/testing_files", "test6.txt")]),
+                     batch_id=2)
+    oracle = OracleIndex(
+        [(r["repo"], r["path"], r["content"])
+         for r in fixture_docs(spark).collect()]
+        + [(r, p, c) for r, p, _, _, c in NEW_DOCS])
+    kernel_side = QueryEngine(inc.index())
+    monkeypatch.setattr(QueryEngine, "TOMBSTONE_PUSHDOWN_DOCS", 0)
+    join_side = QueryEngine(inc.index())
+    assert kernel_side._tomb_arr is not None
+    assert join_side._tomb_arr is None and join_side._tombstones is not None
+    for cls, q in [("boolean", "already AND streaming"),
+                   ("boolean", "fell AND NOT engine OR pen"),
+                   ("positional", "fell /2 trigger"),
+                   ("phrase", "fell already"),
+                   ("joker", "stream* al*")]:
+        full = getattr(oracle, cls)(q)
+        assert "test6.txt" in full, (cls, q)  # the delete must matter
+        want = [n for n in full if n != "test6.txt"]
+        for qe in (kernel_side, join_side):
+            got = [r["name"] for r in getattr(qe, cls)(q).collect()]
+            assert got == want, (cls, q, qe._tomb_arr)
+
+
 def test_delete_crash_retry_and_replay(spark, work_dir):
     inc = _grown_index(spark, work_dir, "del_retry_idx")
     keys = _keys(spark, [("ref/testing_files", "test6.txt")])
