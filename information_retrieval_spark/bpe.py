@@ -46,6 +46,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import plan_policy
+
 # the empty string cannot be a symbol (symbols are non-empty character
 # runs), so it is safe as the fold accumulator's "no pending symbol"
 _NONE = ""
@@ -162,9 +164,10 @@ def train(df: DataFrame, n_merges: int, text_col: str = "text",
     batch degenerates to 1 merge per round — exactly the sequential
     algorithm; typical text dictionaries admit near-`batch_max` per
     round. Each round's re-segmentation chains the batch's folds into
-    ONE projection and ONE localCheckpoint, and the superseded
-    checkpoint is released (the connected_components discipline), so
-    block-manager storage stays O(1) in n_merges.
+    ONE projection and ONE localCheckpoint; each checkpoint is released
+    once superseded, the last once the merge table is on the driver
+    (the connected_components discipline), so block-manager storage
+    stays O(1) in n_merges.
     """
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
@@ -176,44 +179,48 @@ def train(df: DataFrame, n_merges: int, text_col: str = "text",
     seg = seg.localCheckpoint(eager=True)
     spark = df.sparkSession
     merges: list[tuple[int, str, str, int]] = []
-    while len(merges) < n_merges:
-        rows = (_pair_count_df(seg)
-                .orderBy(F.desc("count"), "left", "right")
-                .limit(int(scan_k)).collect())
-        if not rows:
-            break
-        remaining = n_merges - len(merges)
-        used: set = set()
-        created: set = set()
-        accepted: list = []
-        c_stop = None
-        for r in rows:
-            l, rt, c = r["left"], r["right"], int(r["count"])
-            if {l, rt} & (used | created):
-                c_stop = c
+    try:
+        while len(merges) < n_merges:
+            rows = (_pair_count_df(seg)
+                    .orderBy(F.desc("count"), "left", "right")
+                    .limit(int(scan_k)).collect())
+            if not rows:
                 break
-            if len(accepted) < min(remaining, int(batch_max)):
-                accepted.append((l, rt, c))
-                used.update((l, rt))
-                created.add(l + rt)
-        if c_stop is None:
-            # no sharing pair inside the horizon: if the whole table was
-            # scanned there is none at all; otherwise pairs beyond the
-            # horizon count <= the last scanned row
-            c_stop = -1 if len(rows) < int(scan_k) else int(rows[-1]["count"])
-        batch = [m for i, m in enumerate(accepted)
-                 if i == 0 or m[2] > c_stop]
-        for l, rt, c in batch:
-            merges.append((len(merges) + 1, l, rt, c))
-        if len(merges) >= n_merges:
-            break
-        syms = F.col("syms")
-        for l, rt, _ in batch:
-            syms = _merge_fold_expr(syms, l, rt)
-        prev = seg
-        seg = prev.select("freq", syms.alias("syms")).localCheckpoint(
-            eager=True)
-        prev.unpersist()  # release the superseded round's checkpoint
+            remaining = n_merges - len(merges)
+            used: set = set()
+            created: set = set()
+            accepted: list = []
+            c_stop = None
+            for r in rows:
+                l, rt, c = r["left"], r["right"], int(r["count"])
+                if {l, rt} & (used | created):
+                    c_stop = c
+                    break
+                if len(accepted) < min(remaining, int(batch_max)):
+                    accepted.append((l, rt, c))
+                    used.update((l, rt))
+                    created.add(l + rt)
+            if c_stop is None:
+                # no sharing pair inside the horizon: if the whole table
+                # was scanned there is none at all; otherwise pairs beyond
+                # the horizon count <= the last scanned row
+                c_stop = (-1 if len(rows) < int(scan_k)
+                          else int(rows[-1]["count"]))
+            batch = [m for i, m in enumerate(accepted)
+                     if i == 0 or m[2] > c_stop]
+            for l, rt, c in batch:
+                merges.append((len(merges) + 1, l, rt, c))
+            if len(merges) >= n_merges:
+                break
+            syms = F.col("syms")
+            for l, rt, _ in batch:
+                syms = _merge_fold_expr(syms, l, rt)
+            prev = seg
+            seg = prev.select("freq", syms.alias("syms")).localCheckpoint(
+                eager=True)
+            plan_policy.release(prev)  # the superseded round's checkpoint
+    finally:
+        plan_policy.release(seg)
     return spark.createDataFrame(
         merges, "merge_rank int, left string, right string, pair_count long")
 

@@ -41,6 +41,7 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import plan_policy
 from .normalize import spark_tokens_expr
 
 
@@ -234,9 +235,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", num_hashes: int = 8,
                       band_size: int = 2, n: int = 1,
                       seed: int = 7,
-                      features: DataFrame | None = None,
-                      collapse_identical_above_bytes: int | None = 2 << 30
-                      ) -> DataFrame:
+                      features: DataFrame | None = None) -> DataFrame:
     """Candidate near-duplicate pairs: docs sharing >=1 LSH band bucket.
 
     bands = num_hashes / band_size; band key = ':'-joined minhashes of
@@ -252,9 +251,9 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     page boilerplated M times puts M identical signatures in one band
     bucket, making the band self-join's WORK quadratic in M — and it
     re-discovers each such pair in EVERY band (x n_bands) before the
-    distinct. Above `collapse_identical_above_bytes` of estimated input
-    (leaf-size estimate; >= so 0 forces, None disables) the join runs
-    over ONE REPRESENTATIVE per distinct signature instead:
+    distinct. From `plan_policy.GATES["collapse"]` of estimated input
+    the join runs over ONE REPRESENTATIVE per distinct signature
+    instead:
 
       - pairs within an identical-signature group are emitted directly
         (they collide in every band by definition);
@@ -273,8 +272,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     """
     sig = minhash_signatures(df, id_col, text_col, num_hashes, n=n, seed=seed,
                              features=features)
-    if collapse_identical_above_bytes is not None and \
-            _estimated_input_bytes(df) >= collapse_identical_above_bytes:
+    if plan_policy.above(df, "collapse"):
         return _minhash_pairs_collapsed(sig, num_hashes, band_size)
     banded = sig.select("id", _minhash_bands_expr(num_hashes, band_size)).select(
         "id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
@@ -291,17 +289,14 @@ def _minhash_pairs_collapsed(sig: DataFrame, num_hashes: int,
                              band_size: int) -> DataFrame:
     """Signature-collapsed band join (see minhash_lsh_pairs): exact
     pair set, band-join input bounded by DISTINCT signatures."""
-    from pyspark.storagelevel import StorageLevel
-    _release_candidate_caches()
     skey = F.array_join(F.transform("minhash",
                                     lambda x: x.cast("string")), ":")
-    rel = (sig.select("id", skey.alias("__sig"))
-           .persist(StorageLevel.MEMORY_AND_DISK))
-    _CANDIDATE_CACHES.append(rel)
-    groups = (sig.select(skey.alias("__sig"), "minhash")
-              .groupBy("__sig", "minhash").agg(F.count(F.lit(1)).alias("__m"))
-              .persist(StorageLevel.MEMORY_AND_DISK))
-    _CANDIDATE_CACHES.append(groups)
+    rel = plan_policy.hold(sig.select("id", skey.alias("__sig")),
+                           "minhash.signatures")
+    groups = plan_policy.hold(
+        sig.select(skey.alias("__sig"), "minhash")
+        .groupBy("__sig", "minhash").agg(F.count(F.lit(1)).alias("__m")),
+        "minhash.groups")
     # pairs among identical signatures: they agree on every band
     a = rel.select(F.col("__sig").alias("__s"), F.col("id").alias("id_a"))
     b = rel.select(F.col("__sig").alias("__s"), F.col("id").alias("id_b"))
@@ -325,33 +320,6 @@ def _minhash_pairs_collapsed(sig: DataFrame, num_hashes: int,
     return intra.union(cross).distinct()
 
 
-def _estimated_input_bytes(df: DataFrame) -> int:
-    """Size estimate for the input relation — the signal the shingle /
-    gram auto-materialization switch keys on. Two hardenings over the
-    raw root `stats().sizeInBytes()`:
-
-    - the estimate is the SUM OF LEAF sizes (file stats for parquet
-      scans, materialized bytes for cached relations), because root
-      stats are inflated multiplicatively through joins (a broadcast-
-      joined 2 MB corpus reported 738 GB at the root, which flipped the
-      switch on and wrote a fresh gram cache per call);
-    - a plan whose leaves include an RDD barrier (`LogicalRDD`, i.e. a
-      checkpointed or RDD-sourced input) reports 0 ("unknown, assume
-      small"): such leaves carry inherited guesses, not measurements.
-      A caller at true scale feeding checkpointed inputs passes an
-      explicit grams_path/shingles_path instead. (The switch compares
-      with >=, so a 0 threshold still FORCES materialization even for
-      such unknown-size inputs.)"""
-    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-    total = 0
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        if leaf.nodeName() == "LogicalRDD":
-            return 0
-        total += int(leaf.stats().sizeInBytes())
-    return total
-
-
 def _auto_cache_path(df: DataFrame, kind: str, *params) -> str:
     """Deterministic session-temp cache path for a materialized derived
     relation, keyed by the input plan's semantic hash, the operator
@@ -373,13 +341,6 @@ def _auto_cache_path(df: DataFrame, kind: str, *params) -> str:
         "|".join([f"v{INDEX_FORMAT_VERSION}", plan_key]
                  + [str(p) for p in params]).encode()).hexdigest()[:16]
     return os.path.join(tempfile.gettempdir(), f"irs_{kind}_{key}")
-
-
-def _auto_shingles_path(df: DataFrame, n: int, id_col: str,
-                        text_col: str) -> str:
-    """Cache path for the materialized shingle relation (see
-    _auto_cache_path for the keying + reuse contract)."""
-    return _auto_cache_path(df, "shingles", n, id_col, text_col)
 
 
 def _materialize_once(rel: DataFrame, path: str) -> DataFrame:
@@ -411,8 +372,7 @@ def near_duplicates(df: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text", n: int = 3,
                     threshold: float = 0.8, num_hashes: int = 64,
                     band_size: int = 8,
-                    shingles_path: str | None = None,
-                    materialize_above_bytes: int | None = 2 << 30) -> DataFrame:
+                    shingles_path: str | None = None) -> DataFrame:
     """The 100 TB near-dup pipeline in one operator: banded MinHash-LSH
     candidate generation CHAINED into exact n-gram-shingle Jaccard
     verification computed on the candidate pairs only.
@@ -448,13 +408,12 @@ def near_duplicates(df: DataFrame, id_col: str = "doc_id",
     # deployment should route the marker check through its
     # Iceberg/Hadoop catalog instead.
     sh = shingle_sets(df, id_col, text_col, n)
-    if shingles_path is None and materialize_above_bytes is not None and \
-            _estimated_input_bytes(df) >= materialize_above_bytes:
+    if shingles_path is None and plan_policy.above(df, "materialize"):
         # the scale path engages ITSELF above the size estimate
         # (round-4 shipped the mechanism but nothing selected it):
         # at 10^12 docs the tokenize+shingle pass must run once total,
         # not once per consumer
-        shingles_path = _auto_shingles_path(df, n, id_col, text_col)
+        shingles_path = _auto_cache_path(df, "shingles", n, id_col, text_col)
     if shingles_path is not None:
         sh = _materialize_once(sh, shingles_path)
     cand = minhash_lsh_pairs(df, id_col, text_col, num_hashes, band_size,
@@ -541,14 +500,13 @@ def connected_components(pairs: DataFrame, a_col: str = "id_a",
     for i in range(max_iter):
         nxt, cur = checkpoint_with_fingerprint(
             small_star(large_star(edges)), f"cc_round_{i}")
-        if cur == prev and same_edge_set(nxt, edges):
-            edges.unpersist()
-            edges = nxt
+        converged = cur == prev and same_edge_set(nxt, edges)
+        plan_policy.release(edges)  # the superseded round's checkpoint
+        edges, prev = nxt, cur
+        if converged:
             break
-        edges.unpersist()  # release the superseded round's checkpoint
-        edges = nxt
-        prev = cur
     else:
+        plan_policy.release(edges)
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds")
     # fixed point = stars (child, center): sym min-neighbor of a child is
@@ -601,8 +559,7 @@ def duplicate_clusters(df: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text", n: int = 3,
                        threshold: float = 0.8, num_hashes: int = 64,
                        band_size: int = 8,
-                       shingles_path: str | None = None,
-                       materialize_above_bytes: int | None = 2 << 30) -> DataFrame:
+                       shingles_path: str | None = None) -> DataFrame:
     """End-to-end dedup grouping: near_duplicates pairs -> connected
     components -> (id, cluster_id, cluster_size) for every document in
     a near-duplicate cluster (size >= 2). cluster_id = min doc id of
@@ -611,8 +568,7 @@ def duplicate_clusters(df: DataFrame, id_col: str = "doc_id",
     shingle relation once (see near_duplicates)."""
     pairs = near_duplicates(df, id_col, text_col, n, threshold,
                             num_hashes, band_size,
-                            shingles_path=shingles_path,
-                            materialize_above_bytes=materialize_above_bytes)
+                            shingles_path=shingles_path)
     comp = connected_components(pairs)
     sizes = comp.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("cluster_size"))
     return comp.join(sizes, "cluster_id").select("id", "cluster_id", "cluster_size")
@@ -753,9 +709,13 @@ def _group_val_expr(full, bits: int, intervals):
     return expr.cast("long")
 
 
+# Hot-bucket candidate volume (sum of squared sizes of buckets over
+# bucket_cap) above which _simhash_candidates re-bands; 0 always does.
+SIMHASH_SPLIT_CANDIDATES = 50_000_000
+
+
 def _simhash_candidates(signatures: DataFrame, max_hamming: int, bits: int,
-                        bucket_cap: int | None,
-                        split_above_candidates: int = 0) -> DataFrame:
+                        bucket_cap: int | None) -> DataFrame:
     """Candidate pair generation for simhash_near_duplicates: returns
     (id_a, id_b, a_w*, b_w*) rows (NOT yet verified or deduplicated).
 
@@ -791,11 +751,9 @@ def _simhash_candidates(signatures: DataFrame, max_hamming: int, bits: int,
     group extraction on both join sides, and on corpora whose COMPLEMENT
     bits are as biased as the block bits it cannot discriminate
     (measured at sf0.1: 6.28M -> 4.89M candidates for 2.7x the time) —
-    so below `split_above_candidates` the complete-but-plain block join
-    wins. Above it (a true web-scale hot bucket), the sub-split bounds
-    the quadratic. Callers wanting the old unconditional behavior pass
-    split_above_candidates=0 (the default here; the public operator
-    defaults to the measured crossover).
+    so up to `SIMHASH_SPLIT_CANDIDATES` the complete-but-plain block
+    join wins. Above it (a true web-scale hot bucket), the sub-split
+    bounds the quadratic.
 
     The exploded block relation feeds its consumers (sizes, both join
     sides) via a MEMORY_AND_DISK persist — it is slim: (id, <=2 longs,
@@ -845,17 +803,14 @@ def _simhash_candidates(signatures: DataFrame, max_hamming: int, bits: int,
     if not split:
         return joined(blocks, ["blk", "val"])
 
-    from pyspark.storagelevel import StorageLevel
-    _release_candidate_caches()  # previous call's persists (see below)
-    blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)
-    _CANDIDATE_CACHES.append(blocks)
+    blocks = plan_policy.hold(blocks, "simhash.blocks")
     sizes = blocks.groupBy("blk", "val").agg(F.count(F.lit(1)).alias("bsz"))
-    if split_above_candidates > 0:
+    if SIMHASH_SPLIT_CANDIDATES > 0:
         # one scalar job over the tiny histogram: the plain join's
         # hot-bucket candidate volume, exactly
         hot = sizes.filter(F.col("bsz") > bucket_cap).agg(
             F.sum(F.col("bsz") * F.col("bsz")).alias("sq")).collect()[0]
-        if int(hot["sq"] or 0) <= split_above_candidates:
+        if int(hot["sq"] or 0) <= SIMHASH_SPLIT_CANDIDATES:
             return joined(blocks, ["blk", "val"])
     # hot keys are FEW by construction (each covers > bucket_cap docs),
     # so the marker join broadcasts them
@@ -891,41 +846,18 @@ def _simhash_candidates(signatures: DataFrame, max_hamming: int, bits: int,
                                .otherwise(dummy)).alias("sb"))
              .select("id", *wcols, "blk", "val",
                      F.col("sb.sub").alias("sub"),
-                     F.col("sb.sval").alias("sval"))
-             # both join sides read keyed: persist so the packed-word
-             # group extraction (a wide codegen'd bit-op tree) runs once
-             .persist(StorageLevel.MEMORY_AND_DISK))
-    _CANDIDATE_CACHES.append(keyed)
+                     F.col("sb.sval").alias("sval")))
+    # both join sides read keyed: hold it so the packed-word group
+    # extraction (a wide codegen'd bit-op tree) runs once
+    keyed = plan_policy.hold(keyed, "simhash.keyed")
     return joined(keyed, ["blk", "val", "sub", "sval"])
-
-
-# DataFrame persists live in Spark's CacheManager until explicitly
-# unpersisted — they are NOT GC-evicted — so a long-running session
-# calling the simhash pairing per corpus snapshot would accumulate one
-# or two cached relations per call forever. Scope them per call
-# instead (the QueryEngine._cache discipline): each new candidate
-# generation releases the previous call's caches, bounding the
-# footprint to one call. A caller that holds an UNMATERIALIZED result
-# across a second call recomputes (correct, just uncached).
-_CANDIDATE_CACHES: list = []
-
-
-def _release_candidate_caches() -> None:
-    while _CANDIDATE_CACHES:
-        try:
-            _CANDIDATE_CACHES.pop().unpersist(False)
-        except Exception:
-            pass  # session already stopped — nothing left to release
 
 
 def simhash_near_duplicates(df: DataFrame | None = None,
                             max_hamming: int = 3, bits: int = 64,
                             id_col: str = "doc_id", text_col: str = "text",
                             signatures: DataFrame | None = None,
-                            bucket_cap: int | None = 256,
-                            split_above_candidates: int = 50_000_000,
-                            defend_above_bytes: int | None = 4 << 20
-                            ) -> DataFrame:
+                            bucket_cap: int | None = 256) -> DataFrame:
     """(id_a, id_b, hamming) for every pair within `max_hamming` bits of
     simhash distance — the pairing operator over simhash_signatures.
 
@@ -940,14 +872,12 @@ def simhash_near_duplicates(df: DataFrame | None = None,
     second pigeonhole split of the block's complement bits
     (`_simhash_candidates`), so bias-driven hot buckets never go
     quadratic — but only when the per-bucket histogram says the plain
-    join's hot-bucket candidate volume exceeds `split_above_candidates`
-    (default 50M ~ a few CPU-seconds of integer verify: below the
-    crossover the re-banding machinery costs more than the candidates
-    it removes, measured 2.7x at sf0.1; above it the quadratic join is
-    the cost that matters and the split bounds it). `bucket_cap=None`
-    disables the defense entirely (pure block banding, no histogram
-    job); `split_above_candidates=0` forces the split whenever any
-    bucket exceeds the cap.
+    join's hot-bucket candidate volume exceeds `SIMHASH_SPLIT_CANDIDATES`
+    (50M ~ a few CPU-seconds of integer verify: below the crossover the
+    re-banding machinery costs more than the candidates it removes,
+    measured 2.7x at sf0.1; above it the quadratic join is the cost
+    that matters and the split bounds it). `bucket_cap=None` disables
+    the defense entirely (pure block banding, no histogram job).
     The exact Hamming verify — integer bit_count over packed int64
     words riding the explode — then makes the result set exactly
     {(a, b) : H(sig_a, sig_b) <= max_hamming}.
@@ -963,9 +893,9 @@ def simhash_near_duplicates(df: DataFrame | None = None,
     shorter string would silently truncate the packed words and produce
     wrong Hamming distances).
 
-    `defend_above_bytes` (round 6): below this leaf-size input
-    estimate, the skew defense is skipped entirely — plain complete
-    block banding, no histogram job, no scoped persists. The defense
+    Below `plan_policy.GATES["defend"]` of estimated input the skew
+    defense is skipped entirely — plain complete block banding, no
+    histogram job, no scoped persists. The defense
     machinery's fixed cost (persist barriers + the scalar histogram
     collect) measured ~0.3 s per call at bench scale (alternating
     within-session A/B with cache clearing, min-of-4: 4.19 s vs
@@ -975,18 +905,16 @@ def simhash_near_duplicates(df: DataFrame | None = None,
     join work). The 4 MB default is calibrated from the measured
     quadratic: ~3.1M worst-case candidates at a 1.8 MB corpus estimate
     (5k docs) reaches the 50M crossover near ~20k docs / ~7 MB — the
-    gate hands over to the histogram well before that. `>=` comparison,
-    so 0 forces the defense on (tests); None always runs it (the
-    pre-round-6 behavior). The gate applies to the `df=` path only — a caller
-    supplying `signatures=` (whose input estimate says nothing about
-    the corpus) controls the defense explicitly via `bucket_cap`.
+    gate hands over to the histogram well before that. The gate applies
+    to the `df=` path only — a caller supplying `signatures=` (whose
+    input estimate says nothing about the corpus) controls the defense
+    explicitly via `bucket_cap`.
     """
     if signatures is None:
         if df is None:
             raise ValueError(
                 "simhash_near_duplicates needs either df= or signatures=")
-        if bucket_cap is not None and defend_above_bytes is not None and \
-                _estimated_input_bytes(df) < defend_above_bytes:
+        if bucket_cap is not None and not plan_policy.above(df, "defend"):
             bucket_cap = None
         signatures = simhash_signatures(df, id_col, text_col, bits)
     else:
@@ -1001,8 +929,7 @@ def simhash_near_duplicates(df: DataFrame | None = None,
                       "got: "), F.col("simhash")))))
     nwords = (bits + 31) // 32
     wcols = [f"w{w}" for w in range(nwords)]
-    cand = _simhash_candidates(signatures, max_hamming, bits, bucket_cap,
-                               split_above_candidates)
+    cand = _simhash_candidates(signatures, max_hamming, bits, bucket_cap)
     ham = reduce(
         lambda x, y: x + y,
         [F.expr(f"bit_count(a_{w} ^ b_{w})") for w in wcols]).cast("long")
@@ -1026,18 +953,17 @@ _SPAN_HASH_CHARS = 32
 
 
 def _span_positions(df: DataFrame, k: int, id_col: str, text_col: str,
-                    min_doc_freq: int, grams_path: str | None,
-                    materialize_above_bytes: int | None) -> DataFrame:
+                    min_doc_freq: int, grams_path: str | None) -> DataFrame:
     """(id, p): token positions whose k-token gram (whitespace pieces)
     appears in >= min_doc_freq DISTINCT documents.
 
     The grams relation feeds BOTH the doc-frequency aggregate and the
     position join — without materialization Spark derives it twice
-    (two full tokenize+hash corpus scans). Above the Catalyst
-    input-size estimate (`materialize_above_bytes`, the near_duplicates
-    switch) the relation is written once to `grams_path` (auto-derived,
-    idempotent on `_SUCCESS`) and both consumers read the parquet —
-    at 10^12 docs that halves the dominant cost."""
+    (two full tokenize+hash corpus scans). From the materialize gate
+    (`plan_policy`, the near_duplicates switch) the relation is written
+    once to `grams_path` (auto-derived, idempotent on `_SUCCESS`) and
+    both consumers read the parquet — at 10^12 docs that halves the
+    dominant cost."""
     toks = df.select(
         F.col(id_col).alias("id"),
         F.filter(F.split(F.col(text_col), r"\s+"),
@@ -1049,8 +975,7 @@ def _span_positions(df: DataFrame, k: int, id_col: str, text_col: str,
             f"{_SPAN_HASH_CHARS}) AS gh)) ELSE array() END")
     grams = toks.select("id", F.explode(F.expr(gram)).alias("g")) \
         .select("id", F.col("g.p").alias("p"), F.col("g.gh").alias("gh"))
-    if grams_path is None and materialize_above_bytes is not None and \
-            _estimated_input_bytes(df) >= materialize_above_bytes:
+    if grams_path is None and plan_policy.above(df, "materialize"):
         grams_path = _auto_cache_path(df, "spangrams", k, id_col, text_col)
     if grams_path is not None:
         grams = _materialize_once(grams, grams_path)
@@ -1071,9 +996,7 @@ def _span_positions(df: DataFrame, k: int, id_col: str, text_col: str,
 
 def duplicated_spans(df: DataFrame, k: int = 50, id_col: str = "doc_id",
                      text_col: str = "text", min_doc_freq: int = 2,
-                     grams_path: str | None = None,
-                     materialize_above_bytes: int | None = 2 << 30
-                     ) -> DataFrame:
+                     grams_path: str | None = None) -> DataFrame:
     """(id, start_tok, end_tok, n_tokens): MAXIMAL token runs covered by
     k-token grams that appear verbatim in >= `min_doc_freq` distinct
     docs — the spans Lee et al.'s suffix-array pass cuts out of
@@ -1098,8 +1021,7 @@ def duplicated_spans(df: DataFrame, k: int = 50, id_col: str = "doc_id",
         raise ValueError(
             f"min_doc_freq must be >= 2 (cross-document duplication), "
             f"got {min_doc_freq}")
-    pos = _span_positions(df, k, id_col, text_col, min_doc_freq,
-                          grams_path, materialize_above_bytes)
+    pos = _span_positions(df, k, id_col, text_col, min_doc_freq, grams_path)
     w = Window.partitionBy("id").orderBy("p")
     lag = F.lag("p").over(w)
     new_run = F.when(lag.isNull() | (F.col("p") - lag > k), 1).otherwise(0)
@@ -1118,9 +1040,7 @@ def duplicated_spans(df: DataFrame, k: int = 50, id_col: str = "doc_id",
 def span_duplication_stats(df: DataFrame, k: int = 50,
                            id_col: str = "doc_id", text_col: str = "text",
                            min_doc_freq: int = 2,
-                           grams_path: str | None = None,
-                           materialize_above_bytes: int | None = 2 << 30
-                           ) -> DataFrame:
+                           grams_path: str | None = None) -> DataFrame:
     """(id, n_ws_tokens, n_dup_tokens, dup_frac) for EVERY document:
     how much of each doc is covered by cross-document verbatim >=k-token
     spans — the per-doc number a curation pipeline thresholds on (docs
@@ -1129,7 +1049,7 @@ def span_duplication_stats(df: DataFrame, k: int = 50,
     engine-portable comparison grain); docs with no duplicated span
     (or < k tokens) report 0."""
     spans = duplicated_spans(df, k, id_col, text_col, min_doc_freq,
-                             grams_path, materialize_above_bytes)
+                             grams_path)
     per_doc = spans.groupBy("id").agg(F.sum("n_tokens").alias("n_dup_tokens"))
     # null text counts 0 tokens (split(NULL) is NULL and size(NULL)
     # would poison the fraction)
@@ -1150,9 +1070,7 @@ def span_duplication_stats(df: DataFrame, k: int = 50,
 def cut_duplicated_spans(df: DataFrame, k: int = 50,
                          id_col: str = "doc_id", text_col: str = "text",
                          min_doc_freq: int = 2,
-                         grams_path: str | None = None,
-                         materialize_above_bytes: int | None = 2 << 30
-                         ) -> DataFrame:
+                         grams_path: str | None = None) -> DataFrame:
     """(id, clean_text, n_kept_tokens, n_removed_tokens): the corpus
     with every cross-document duplicated span CUT OUT — the actionable
     output of exact-substring dedup (Lee et al. remove every occurrence
@@ -1170,7 +1088,7 @@ def cut_duplicated_spans(df: DataFrame, k: int = 50,
     map-only filter-by-position expression per doc (no explode of the
     corpus back through a shuffle)."""
     spans = (duplicated_spans(df, k, id_col, text_col, min_doc_freq,
-                              grams_path, materialize_above_bytes)
+                              grams_path)
              .groupBy("id")
              .agg(F.collect_list(
                  F.struct("start_tok", "end_tok")).alias("__spans")))

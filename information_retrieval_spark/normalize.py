@@ -215,11 +215,6 @@ def _lexicon_whens() -> str:
                     for w, lemma in sorted(IRREGULAR_LEMMAS.items()))
 
 
-def _spark_norm_lambda(var: str = "t") -> str:
-    base = f"regexp_replace(lower({var}), '[^a-z0-9_]', '')"
-    return _render_stem_chain(base, "spark")
-
-
 def spark_tokens_expr(col: str = "content") -> str:
     """Spark SQL expression: string column -> array<string> of kept terms.
     Two-level transform: the inner one strips/lowercases once per token,

@@ -47,6 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import plan_policy
 from .build import SEGMENTED_TABLES, Index
 from .normalize import normalize
 
@@ -1263,8 +1264,7 @@ class QueryEngine:
     # ------------------------------------------------------------------
     # query-by-document ("more like this" — north-star addition)
     # ------------------------------------------------------------------
-    def build_forward_index(self, n_partitions: int = 32,
-                            pin_above_bytes: int = 256 << 20) -> None:
+    def build_forward_index(self, n_partitions: int = 32) -> None:
         """Materialize the doc-major FORWARD index `doc_vec(docID,
         term, tf)` — the acceleration structure for query-by-document
         traffic (doc_term_vector / more_like_this): one decode pass
@@ -1290,20 +1290,15 @@ class QueryEngine:
         # plan a second time, and here the child is the full postings
         # decode kernel. The docID RANGE layout itself is load-bearing
         # (contiguous docID files are what make a doc's vector one
-        # file-pruned read), so above `pin_above_bytes` of postings
-        # (leaf estimate, >= so 0 forces) the decode is pinned once and
-        # both the sampling pass and the shuffle read the pinned copy.
-        # Below the gate the double decode of a small postings table is
-        # cheaper than the checkpoint barrier (A/B-measured at sf0.1).
-        from .dedup import _estimated_input_bytes
-        pinned = _estimated_input_bytes(self._postings) >= int(pin_above_bytes)
-        if pinned:
-            slim = slim.localCheckpoint(eager=True)
-        fwd = (slim.repartitionByRange(n_partitions, "docID")
-               .sortWithinPartitions("docID", "term"))
-        self.index.store.write(fwd, "doc_vec")
-        if pinned:
-            slim.unpersist()  # doc_vec is persisted; release the pin
+        # file-pruned read), so from the pin gate (`plan_policy`) the
+        # decode is pinned once and both the sampling pass and the
+        # shuffle read the pinned copy. Below the gate the double decode
+        # of a small postings table is cheaper than the checkpoint
+        # barrier (A/B-measured at sf0.1).
+        with plan_policy.pinned(slim, "pin") as src:
+            self.index.store.write(
+                src.repartitionByRange(n_partitions, "docID")
+                .sortWithinPartitions("docID", "term"), "doc_vec")
 
     def doc_term_vector(self, doc_id: int) -> DataFrame:
         """(term, tf) of ONE document.

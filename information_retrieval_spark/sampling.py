@@ -22,9 +22,12 @@ from __future__ import annotations
 
 import hashlib
 import re
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from . import plan_policy
 
 _U32 = float(1 << 32)
 
@@ -156,8 +159,7 @@ def _cumsum_partitions(batches):
 def shard_by_token_budget(df: DataFrame, budget_tokens: int,
                           id_col: str = "doc_id", tokens_col: str | None = None,
                           text_col: str = "text",
-                          n_partitions: int | None = None,
-                          pin_above_bytes: int = 256 << 20) -> DataFrame:
+                          n_partitions: int | None = None) -> DataFrame:
     """Token-budget sharding: pack documents (ordered by id) into
     contiguous shards of ~`budget_tokens` tokens each — the standard
     step that turns a curated corpus into uniformly-sized training
@@ -190,30 +192,26 @@ def shard_by_token_budget(df: DataFrame, budget_tokens: int,
         n_tokens = F.size(F.filter(F.split(F.col(text_col), r"\s+"),
                                    lambda t: t != "")).cast("long")
     base = df.select(F.col(id_col), n_tokens.alias("n_tokens"))
-    pinned_base = None
-    if tokens_col is None:
-        # The range partitioner's bounds-sampling job executes the child
-        # plan a second time, and here the child is a full content scan
-        # + whitespace split. Above `pin_above_bytes` (leaf estimate,
-        # >= so 0 forces — the module family's gate convention) the
-        # (id, n_tokens) relation — two narrow columns, tiny at any
-        # scale — is pinned once so both the sampling pass and the
-        # shuffle read it instead of re-splitting the corpus. Below the
-        # gate the double pass over a small (usually cached) input is
-        # cheaper than the checkpoint barrier (A/B-measured at sf0.1).
-        from .dedup import _estimated_input_bytes
-        if _estimated_input_bytes(df) >= int(pin_above_bytes):
-            base = pinned_base = base.localCheckpoint(eager=True)
+    # The range partitioner's bounds-sampling job executes the child
+    # plan a second time, and without `tokens_col` the child is a full
+    # content scan + whitespace split. From the pin gate (`plan_policy`)
+    # the (id, n_tokens) relation — two narrow columns, tiny at any
+    # scale — is pinned until the numbered checkpoint supersedes it, so
+    # both the sampling pass and the shuffle read it instead of
+    # re-splitting the corpus. Below the gate the double pass over a
+    # small (usually cached) input is cheaper than the checkpoint
+    # barrier (A/B-measured at sf0.1).
     n = n_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    d = base.repartitionByRange(n, id_col).sortWithinPartitions(id_col)
     id_type = [f.dataType.simpleString() for f in base.schema.fields
                if f.name == id_col][0]
-    numbered = d.mapInArrow(
-        _cumsum_partitions,
-        schema=(f"{id_col} {id_type}, n_tokens long, "
-                f"pid int, before_local long")).localCheckpoint(eager=True)
-    if pinned_base is not None:
-        pinned_base.unpersist()  # superseded by the numbered checkpoint
+    with (plan_policy.pinned(base, "pin") if tokens_col is None
+          else nullcontext(base)) as src:
+        numbered = (src.repartitionByRange(n, id_col)
+                    .sortWithinPartitions(id_col)
+                    .mapInArrow(_cumsum_partitions,
+                                schema=(f"{id_col} {id_type}, n_tokens long, "
+                                        f"pid int, before_local long"))
+                    .localCheckpoint(eager=True))
     totals = {r["pid"]: int(r["s"]) for r in
               numbered.groupBy("pid").agg(F.sum("n_tokens").alias("s")).collect()}
     offsets, acc = [], 0

@@ -602,11 +602,14 @@ def persist_ivf(df: DataFrame, path: str, n_lists: int = 8, iters: int = 2,
         # Hash-cluster on list_id, NOT repartitionByRange: the
         # RangePartitioner's sampling job executes the child plan — the
         # assignment kernel including the full vector scan — a second
-        # time before the real shuffle. Hash keeps every property the
-        # probe relies on (each list wholly in one file, rows sorted by
-        # list_id within the file, so `list_id IN (...)` prunes row
-        # groups identically) for ONE pass instead of two; the only
-        # trade is file-size balance across the n_partitions files.
+        # time before the real shuffle. Hash keeps what the probe
+        # relies on (each list wholly in one file, rows sorted by
+        # list_id within the file, so `list_id IN (...)` still prunes
+        # row groups) for ONE pass instead of two. The trades: file-size
+        # balance across the n_partitions files, and looser pruning —
+        # a file can hold non-contiguous lists (0 and 7 of 8 over 4
+        # files), so its min/max and boundary row-group ranges span
+        # wider than under a range layout.
         (ivf_assignments(df, cents, id_col, vec_col)
          .repartition(n_partitions, "list_id")
          .sortWithinPartitions("list_id")

@@ -49,6 +49,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import plan_policy
 from ..dedup import minhash_signatures
 from ..io import TableStore
 from .segments import BatchSegments
@@ -266,14 +267,19 @@ class IncrementalDeduper(BatchSegments):
         replay (marker present) just re-reads its recorded pairs."""
         if not os.path.exists(self._marker(batch_id)):
             sig = self._signatures(batch_df).localCheckpoint(eager=True)
-            pairs = self.probe(batch_df, _batch_sigs=sig)
-            # pairs segment first, marker last (inside append): a crash
-            # anywhere replays the whole unit idempotently
-            self._stage_and_link(
-                pairs.withColumn("batch_id",
-                                 F.lit(batch_id).cast("long")),
-                "dup_pairs", batch_id)
-            self.append(batch_df, batch_id, _batch_sigs=sig)
+            try:
+                pairs = self.probe(batch_df, _batch_sigs=sig)
+                # pairs segment first, marker last (inside append): a
+                # crash anywhere replays the whole unit idempotently
+                self._stage_and_link(
+                    pairs.withColumn("batch_id",
+                                     F.lit(batch_id).cast("long")),
+                    "dup_pairs", batch_id)
+                self.append(batch_df, batch_id, _batch_sigs=sig)
+            finally:
+                # sig's last reader (append) has run; the result below
+                # reads the dup_pairs segment
+                plan_policy.release(sig)
         return (self.spark.read.parquet(self._path("dup_pairs"))
                 .filter(F.col("batch_id") == batch_id)
                 .drop("batch_id"))

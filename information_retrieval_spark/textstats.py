@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import plan_policy
 from .normalize import spark_tokens_expr
 
 # marker-word profiles for the n-gram/stopword language heuristic
@@ -486,19 +487,6 @@ def curation_report(df: DataFrame, lang: str = "en",
         "dup_line_frac", "dup_ngram_frac")
 
 
-# call-scoped cache registry for the LM filter's unigram model (see
-# lm_bigram_logprob_scores; the dedup._CANDIDATE_CACHES discipline)
-_LM_CACHES: list = []
-
-
-def _release_lm_caches() -> None:
-    while _LM_CACHES:
-        try:
-            _LM_CACHES.pop().unpersist(False)
-        except Exception:
-            pass  # session already stopped — nothing left to release
-
-
 def lm_bigram_logprob_scores(df: DataFrame, ref_rate: float = 0.5,
                              lam: float = 0.9, seed: str = "lmref",
                              id_col: str = "doc_id",
@@ -545,15 +533,11 @@ def lm_bigram_logprob_scores(df: DataFrame, ref_rate: float = 0.5,
     # c1 feeds THREE consumers (the u-join, the v-join and the T/V
     # totals); uncached, each re-tokenizes the reference corpus — at
     # 100 TB that is three redundant scans. The relation is
-    # vocabulary-sized (Heaps' law), so caching it is the right trade.
-    # The cache is CALL-SCOPED: each new call releases the previous
-    # call's relation (cached DataFrames are never GC-evicted, so a
-    # long-lived session scoring corpus snapshots in a loop would
-    # otherwise accumulate one pinned relation per call).
-    _release_lm_caches()
-    c1 = (ref.select(F.explode("__toks").alias("term"))
-          .groupBy("term").agg(F.count(F.lit(1)).alias("c1"))).cache()
-    _LM_CACHES.append(c1)
+    # vocabulary-sized (Heaps' law), so caching it is the right trade;
+    # the hold is call-scoped (plan_policy.hold).
+    c1 = plan_policy.hold(
+        ref.select(F.explode("__toks").alias("term"))
+        .groupBy("term").agg(F.count(F.lit(1)).alias("c1")), "lm.unigrams")
     c2 = (ref.select(F.explode(pair_expr).alias("p"))
           .groupBy(F.col("p.u").alias("u"), F.col("p.v").alias("v"))
           .agg(F.count(F.lit(1)).alias("c2")))

@@ -6,6 +6,7 @@ import math
 
 import pytest
 
+from information_retrieval_spark import plan_policy
 from information_retrieval_spark.corpus import FIXTURE_DOCS
 from information_retrieval_spark.normalize import normalize
 from information_retrieval_spark.oracle import OracleIndex
@@ -436,7 +437,7 @@ def test_doc_term_vector_matches_tokenizer(synth_engine, synth_docs):
         assert got == want, d
 
 
-def test_forward_index_pin_path_identical(synth_engine):
+def test_forward_index_pin_path_identical(synth_engine, monkeypatch):
     # the pinned-decode path (range-sampling reads a checkpointed copy
     # of the decoded postings instead of re-running the decode kernel)
     # must persist the same doc_vec table; 0 forces the pin
@@ -447,7 +448,8 @@ def test_forward_index_pin_path_identical(synth_engine):
         plain = sorted(map(tuple, store.read("doc_vec")
                            .select("docID", "term", "tf").collect()))
         store.drop("doc_vec")
-        synth_engine.build_forward_index(n_partitions=4, pin_above_bytes=0)
+        monkeypatch.setitem(plan_policy.GATES, "pin", 0)
+        synth_engine.build_forward_index(n_partitions=4)
         pinned = sorted(map(tuple, store.read("doc_vec")
                             .select("docID", "term", "tf").collect()))
         assert pinned == plain

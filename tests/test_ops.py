@@ -5,12 +5,14 @@ small pure-Python oracle."""
 import hashlib
 import itertools
 import math
+import re
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from information_retrieval_spark import dedup, multimodal, similarity, textstats
+from information_retrieval_spark import (dedup, multimodal, plan_policy,
+                                         similarity, textstats)
 from information_retrieval_spark.normalize import tokenize
 
 DOCS = [
@@ -173,7 +175,7 @@ def test_duplicate_clusters_chain(docs_df):
     assert {0, 1, 2} <= {i for i, _, _ in got}
 
 
-def test_minhash_collapsed_pairs_exact_and_bounded(spark):
+def test_minhash_collapsed_pairs_exact_and_bounded(spark, monkeypatch):
     # Hot-bucket defense: a boilerplate page duplicated M times must
     # not drive the band self-join quadratic. The collapsed path
     # (forced via threshold 0; leaf-size gated off at driver scale)
@@ -187,10 +189,12 @@ def test_minhash_collapsed_pairs_exact_and_bounded(spark):
             (301, "entirely other text that matches nobody else at all")]
     df = spark.createDataFrame(hot + uniq + near, "doc_id long, text string")
     kw = dict(num_hashes=8, band_size=2)
+    monkeypatch.setitem(plan_policy.GATES, "collapse", 1 << 62)
     plain = {(r["id_a"], r["id_b"]) for r in dedup.minhash_lsh_pairs(
-        df, collapse_identical_above_bytes=None, **kw).collect()}
+        df, **kw).collect()}
+    monkeypatch.setitem(plan_policy.GATES, "collapse", 0)
     coll = {(r["id_a"], r["id_b"]) for r in dedup.minhash_lsh_pairs(
-        df, collapse_identical_above_bytes=0, **kw).collect()}
+        df, **kw).collect()}
     assert coll == plain
     assert all((a, b) in coll for a, b in itertools.combinations(range(200), 2))
     # volume pin: band-join input of the collapsed path is bounded by
@@ -1026,7 +1030,7 @@ def _rand_sigs(n, bits, rng, force_block=None):
     return ["".join("1" if b else "0" for b in row) for row in sigs]
 
 
-def test_simhash_bucket_cap_bounds_candidates(spark):
+def test_simhash_bucket_cap_bounds_candidates(spark, monkeypatch):
     # deliberately biased corpus: every signature shares block 0's value
     # (the skew shape of real corpora — shared vocabulary biases simhash
     # bits), so uncapped block banding goes quadratic in that bucket.
@@ -1044,6 +1048,8 @@ def test_simhash_bucket_cap_bounds_candidates(spark):
     sigs = spark.createDataFrame(
         [(i, s) for i, s in enumerate(sig_strs)], "id long, simhash string")
 
+    # 0 splits every bucket over the cap (no histogram gate)
+    monkeypatch.setattr(dedup, "SIMHASH_SPLIT_CANDIDATES", 0)
     uncapped = dedup._simhash_candidates(sigs, k, 64, None).count()
     capped = dedup._simhash_candidates(sigs, k, 64, 64).count()
     # uncapped: the shared block-0 bucket alone contributes n^2 ordered
@@ -1067,7 +1073,7 @@ def test_simhash_bucket_cap_bounds_candidates(spark):
     assert (7, 100) in got and got[(7, 100)] == 2
 
 
-def test_simhash_split_gate_is_adaptive(spark):
+def test_simhash_split_gate_is_adaptive(spark, monkeypatch):
     # the histogram gate: hot-bucket sum(bsz^2) below the threshold ->
     # plain block join (no sub/sval key columns in the plan); above (or
     # forced with 0) -> the re-banded join. Results identical either way
@@ -1077,30 +1083,40 @@ def test_simhash_split_gate_is_adaptive(spark):
     sig_strs = _rand_sigs(n, 64, rng, force_block=(0, 16, 0))
     sigs = spark.createDataFrame(
         [(i, s) for i, s in enumerate(sig_strs)], "id long, simhash string")
-    plain = dedup._simhash_candidates(sigs, k, 64, 64,
-                                      split_above_candidates=10**12)
-    split = dedup._simhash_candidates(sigs, k, 64, 64,
-                                      split_above_candidates=0)
+    monkeypatch.setattr(dedup, "SIMHASH_SPLIT_CANDIDATES", 10**12)
+    plain = dedup._simhash_candidates(sigs, k, 64, 64)
+    monkeypatch.setattr(dedup, "SIMHASH_SPLIT_CANDIDATES", 0)
+    split = dedup._simhash_candidates(sigs, k, 64, 64)
     # hot bucket (block 0, n=300 members, 300^2=90k < 10^12) stays plain
     assert plain.count() >= n * n
     assert split.count() < plain.count() / 10
     for gate in (10**12, 0):
+        monkeypatch.setattr(dedup, "SIMHASH_SPLIT_CANDIDATES", gate)
         got = {(r["id_a"], r["id_b"]) for r in
                dedup.simhash_near_duplicates(
-                   signatures=sigs, max_hamming=k, bucket_cap=64,
-                   split_above_candidates=gate).collect()}
+                   signatures=sigs, max_hamming=k,
+                   bucket_cap=64).collect()}
         want = {(a, b) for a, b in itertools.combinations(range(n), 2)
                 if sum(x != y for x, y in zip(sig_strs[a], sig_strs[b])) <= k}
         assert got == want, gate
 
 
-def test_simhash_near_duplicates_cap_vs_uncapped_on_docs(docs_df):
+def test_simhash_near_duplicates_cap_vs_uncapped_on_docs(docs_df,
+                                                         monkeypatch):
     # same result with the cap engaged at a threshold low enough to
-    # split every bucket on the tiny corpus
+    # split every bucket on the tiny corpus; the defend gate at 0 keeps
+    # the cap (its 4 MB default would drop it on this corpus), so the
+    # capped plan really carries the re-banded (sub, sval) join keys
+    monkeypatch.setitem(plan_policy.GATES, "defend", 0)
+    monkeypatch.setattr(dedup, "SIMHASH_SPLIT_CANDIDATES", 0)
     for cap in (None, 1):
-        got = {(r["id_a"], r["id_b"]): r["hamming"] for r in
-               dedup.simhash_near_duplicates(docs_df, max_hamming=6,
-                                             bucket_cap=cap).collect()}
+        pairs = dedup.simhash_near_duplicates(docs_df, max_hamming=6,
+                                              bucket_cap=cap)
+        plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+        keys = set(re.findall(r"\b(sub|sval)#\d+", plan))
+        assert keys == ({"sub", "sval"} if cap else set()), plan
+        got = {(r["id_a"], r["id_b"]): r["hamming"]
+               for r in pairs.collect()}
         assert (0, 1) in got and got[(0, 1)] == 0
 
 
@@ -1112,7 +1128,7 @@ def test_simhash_signatures_length_validated(spark):
     with pytest.raises(Exception, match="simhash signature"):
         dedup.simhash_near_duplicates(signatures=bad, max_hamming=3).collect()
 
-def test_near_duplicates_auto_materializes_shingles(docs_df):
+def test_near_duplicates_auto_materializes_shingles(docs_df, monkeypatch):
     # the size switch engages itself (threshold 0 forces it here): the
     # shared shingle relation is written once to the session-temp cache
     # and every consumer — LSH candidate generation AND the exact
@@ -1121,14 +1137,14 @@ def test_near_duplicates_auto_materializes_shingles(docs_df):
     import glob
     import shutil
 
-    path = dedup._auto_shingles_path(docs_df, 3, "doc_id", "text")
+    path = dedup._auto_cache_path(docs_df, "shingles", 3, "doc_id", "text")
     shutil.rmtree(path, ignore_errors=True)
 
+    monkeypatch.setitem(plan_policy.GATES, "materialize", 1 << 62)
     base = {(r["id_a"], r["id_b"], r["jaccard"]) for r in
-            dedup.near_duplicates(docs_df, threshold=0.6,
-                                  materialize_above_bytes=None).collect()}
-    nd = dedup.near_duplicates(docs_df, threshold=0.6,
-                               materialize_above_bytes=0)
+            dedup.near_duplicates(docs_df, threshold=0.6).collect()}
+    monkeypatch.setitem(plan_policy.GATES, "materialize", 0)
+    nd = dedup.near_duplicates(docs_df, threshold=0.6)
     got = {(r["id_a"], r["id_b"], r["jaccard"]) for r in nd.collect()}
     assert got == base and (0, 1, 1.0) in {(a, b, j) for a, b, j in got}
     # the relation was materialized exactly once, and the plan's shingle
@@ -1140,8 +1156,7 @@ def test_near_duplicates_auto_materializes_shingles(docs_df):
     # again after dropping write permission to prove no re-write
     n_files = len(glob.glob(f"{path}/*"))
     assert {(r["id_a"], r["id_b"], r["jaccard"]) for r in
-            dedup.near_duplicates(docs_df, threshold=0.6,
-                                  materialize_above_bytes=0).collect()} == base
+            dedup.near_duplicates(docs_df, threshold=0.6).collect()} == base
     assert len(glob.glob(f"{path}/*")) == n_files
     shutil.rmtree(path, ignore_errors=True)
 
@@ -1273,7 +1288,7 @@ def test_shard_by_token_budget_matches_window_oracle(spark):
         before += nt[i]
 
 
-def test_shard_by_token_budget_pin_path_identical(spark):
+def test_shard_by_token_budget_pin_path_identical(spark, monkeypatch):
     # the pinned-base path (range-sampling reads a checkpointed
     # (id, n_tokens) relation instead of re-splitting the corpus) must
     # produce the same shards as the unpinned path; 0 forces the pin
@@ -1285,8 +1300,9 @@ def test_shard_by_token_budget_pin_path_identical(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     plain = sorted(tuple(r) for r in sampling.shard_by_token_budget(
         df, 80, n_partitions=5).collect())
+    monkeypatch.setitem(plan_policy.GATES, "pin", 0)
     pinned = sorted(tuple(r) for r in sampling.shard_by_token_budget(
-        df, 80, n_partitions=5, pin_above_bytes=0).collect())
+        df, 80, n_partitions=5).collect())
     assert pinned == plain
 
 

@@ -2,6 +2,8 @@
 on must actually appear in the plans (pushdown, broadcast, no stray
 exchanges) — `.explain` as a test, per the task brief."""
 
+import pathlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -244,3 +246,15 @@ def test_heaps_fit_postings_scan_is_metadata_only(synth_engine):
         head = seg.split("\n")[0]
         for payload in ("doc_gaps", "tfs", "dls", "pos_gaps"):
             assert payload not in head, head
+
+
+def test_releases_go_through_plan_policy():
+    # DataFrame.unpersist() frees nothing for a localCheckpoint, so a
+    # release written by hand is easily a silent no-op: only
+    # plan_policy (release for checkpoints, hold for persists) may call it
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "information_retrieval_spark"
+    offenders = [f"{p.relative_to(pkg)}:{i}"
+                 for p in sorted(pkg.rglob("*.py")) if p.name != "plan_policy.py"
+                 for i, line in enumerate(p.read_text().splitlines(), 1)
+                 if ".unpersist(" in line]
+    assert not offenders, offenders
