@@ -61,11 +61,13 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .codec import vb_encode, vb_encode_with_lengths
-from .io import TableStore
+from .io import (FRAGMENTS_SCHEMA, POSTINGS_SCHEMA, TABLE_SCHEMAS, TableStore,
+                 arrow_rows)
 
 def _invert_arrow_batch(rb):
     """Tokenize + invert ONE Arrow record batch of (docID, content) rows.
@@ -155,23 +157,6 @@ def _invert_arrow_batch(rb):
             doc_ids[g_doc[starts]], tf,
             dl_per_doc[g_doc[starts]].astype(np.int32),
             np.frombuffer(pos_data, dtype=np.uint8), offsets, first)
-
-
-# Packed map-side fragments: one row per (term, docID-bucket) per input
-# partition instead of one row per posting. Column names and payload
-# layout deliberately match POSTINGS_SCHEMA's data columns, so the same
-# buffer-level decode serves both (fragments ARE un-blocked postings).
-# Rows with kind == "m" (and bucket == -1) are per-partition doc_len
-# markers: doc_gaps carries the partition's sorted docIDs (gap-coded),
-# dls their kept-term counts. Rows with kind == "s" are the matching
-# sha256 markers (pos_gaps = fixed-width 64-char hex digests in docID
-# order — see _sha_marker_batch). The table is written partitionBy(kind),
-# so stage 3's marker scans file-prune to the tiny kind=m / kind=s files
-# and never touch fragment payload bytes (at 10^12 docs the fragment
-# table is TB-scale, the markers GB-scale).
-FRAGMENTS_SCHEMA = ("term string, bucket long, n_docs int, "
-                    "doc_gaps binary, tfs binary, dls binary, "
-                    "pos_gaps binary, kind string")
 
 
 def _make_spimi_packed(docs_per_bucket: int):
@@ -690,40 +675,39 @@ def pid_counts_from_footers(store: "TableStore", name: str) -> dict | None:
     return counts
 
 
-def with_global_ordinals(spark: SparkSession, store: "TableStore",
-                         df: DataFrame, sort_cols: list, ord_name: str,
-                         staging: str, n_partitions: int) -> DataFrame:
-    """Global rank of `sort_cols` WITHOUT a global sort: range-partition,
-    sort within partitions, number rows per partition ONCE (materialized
-    to `staging` — range boundaries are not stable across actions),
-    exclusive-prefix-sum the partition counts, add the offset. The
-    broadcast offsets join preserves the range-sorted file order. Caller
-    writes the result and drops `staging`."""
-    d = (df.repartitionByRange(n_partitions, *sort_cols)
-         .sortWithinPartitions(*sort_cols))
-    numbered = d.mapInArrow(
-        _number_partitions, schema=_schema_plus(d, "pid int, local_idx long"))
-    store.write(numbered, staging)
-    numbered = store.read(staging)
-    counts = pid_counts_from_footers(store, staging) or {
-        r["pid"]: r["cnt"] for r in
-        numbered.groupBy("pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets, acc = {}, 0
+def pid_offsets(counts: dict) -> Column:
+    """Exclusive prefix sum of per-partition `counts` (pid -> rows) as a
+    literal lookup on the `pid` column: an array literal indexed by pid,
+    applied in the projection that uses it. No offsets table, no join,
+    and the rows keep their file order."""
+    offsets, acc = [0] * (max(counts, default=0) + 1), 0
     for pid in sorted(counts):
         offsets[pid] = acc
         acc += counts[pid]
-    offsets_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()], "pid int, offset long")
-    return (numbered.join(F.broadcast(offsets_df), "pid")
-            .withColumn(ord_name, F.col("offset") + F.col("local_idx"))
-            .drop("pid", "local_idx", "offset"))
+    return F.array(*[F.lit(o).cast("long") for o in offsets])[F.col("pid")]
 
-POSTINGS_SCHEMA = (
-    "term string, bucket long, block_id long, n_docs int, "
-    "doc_gaps binary, tfs binary, dls binary, pos_gaps binary, "
-    "block_max_tf int, block_max_wand double, "
-    "block_first_doc long, block_last_doc long, cf long"
-)
+
+def with_global_ordinals(store: "TableStore", df: DataFrame, sort_cols: list,
+                         ord_name: str, staging: str,
+                         n_partitions: int) -> DataFrame:
+    """Global rank of `sort_cols` WITHOUT a global sort: range-partition,
+    sort within partitions, number rows per partition ONCE (materialized
+    to `staging` — range boundaries are not stable across actions),
+    exclusive-prefix-sum the partition counts from the staging footers
+    and add the offset (pid_offsets) in a narrow projection, which
+    keeps the range-sorted file order. Two jobs: the range sampler and
+    the staged write. Caller writes the result and drops `staging`."""
+    d = (df.repartitionByRange(n_partitions, *sort_cols)
+         .sortWithinPartitions(*sort_cols))
+    schema = _schema_plus(d, "pid int, local_idx long")
+    store.write(d.mapInArrow(_number_partitions, schema=schema), staging)
+    numbered = store.read(staging, schema=schema)
+    counts = pid_counts_from_footers(store, staging) or {
+        r["pid"]: r["cnt"] for r in
+        numbered.groupBy("pid").agg(F.count("*").alias("cnt")).collect()}
+    return numbered.select(
+        *df.columns,
+        (pid_offsets(counts) + F.col("local_idx")).alias(ord_name))
 
 
 @dataclass
@@ -745,6 +729,13 @@ class IndexConfig:
 
 
 # --- the SPIMI stages shared by the batch build and the streaming append ---
+
+def doc_meta(docs: DataFrame) -> DataFrame:
+    """The (repo, path, commit, lang) doc_map columns of an input
+    documents frame, cast to the declared string columns."""
+    return docs.select(*[F.col(c).cast("string").alias(c)
+                         for c in ("repo", "path", "commit", "lang")])
+
 
 def write_partials(store: TableStore, name: str, docs: DataFrame,
                    docs_per_bucket: int) -> None:
@@ -841,6 +832,11 @@ _SEGMENT_FOLDS = {
 }
 
 
+# term_bucket_rollup's output, as staged in `tmp_term_rollup`
+TERM_ROLLUP_SCHEMA = ("term string, bucket long, tmax double, n_blocks long, "
+                      "df long, cf long")
+
+
 def term_bucket_rollup(postings: DataFrame) -> DataFrame:
     """The per-(term, docID-bucket) metadata rollup EVERY dictionary /
     bucket_max derivation goes through: WAND threshold max, block count,
@@ -907,6 +903,7 @@ class IndexBuilder:
         self.config = config or IndexConfig()
         self.store = TableStore(spark, index_dir, use_iceberg=use_iceberg)
         self._lineage_rows: list = []
+        self._stats: dict | None = None  # set when a build writes stats
 
     # ------------------------------------------------------------------
     def build(self, docs: DataFrame, resume: bool = True) -> Index:
@@ -915,6 +912,7 @@ class IndexBuilder:
         if not resume:
             self.store.drop_all()
         self._lineage_rows = []
+        self._stats = None
         self.stage_times: dict = {}
 
         def run(name, done, fn, *args):
@@ -939,7 +937,8 @@ class IndexBuilder:
             self._build_dictionary_r)
         self._write_lineage()
 
-        idx = Index(store=self.store, config=self.config)
+        idx = Index(store=self.store, config=self.config,
+                    stats=dict(self._stats or {}))
         idx.load_stats()
         return idx
 
@@ -1009,7 +1008,10 @@ class IndexBuilder:
         two-phase rank the dictionary's term_ord uses): the range sampler
         pass, the staged numbered write, and the final write. Partition
         counts come from the staging table's parquet FOOTERS — metadata
-        only, no counting job — and the staged parquet pins the numbered
+        only, no counting job — the staging table is read back with the
+        schema its writer declared (no inference job), and the offsets
+        are a literal pid lookup in the final projection (no offsets
+        table, no broadcast job). The staged parquet pins the numbered
         rows, so the offsets can never be applied to rows from a
         different range-boundary draw (the round-4 shape pinned with two
         eager localCheckpoints + a collect: two extra corpus-meta
@@ -1017,10 +1019,9 @@ class IndexBuilder:
         cores was pure serial time — measured stage efficiency 0.52).
         """
         n = self._n_partitions()
-        meta = docs.select("repo", "path", "commit", "lang")
-        final = with_global_ordinals(self.spark, self.store, meta,
-                                     ["repo", "path"], "docID",
-                                     "tmp_doc_order", n)
+        meta = doc_meta(docs)
+        final = with_global_ordinals(self.store, meta, ["repo", "path"],
+                                     "docID", "tmp_doc_order", n)
         acc = sum((pid_counts_from_footers(self.store, "tmp_doc_order")
                    or {}).values())
         doc_map = final.select("docID", "repo", "path", "commit", "lang")
@@ -1107,12 +1108,16 @@ class IndexBuilder:
         if n_docs is None:  # resume path: doc_map exists, stats lost
             n_docs = self._table_rows_from_footers("doc_map")
         avgdl = (total_len / n_docs) if n_docs else 0.0
-        stats = self.spark.createDataFrame(
-            [(n_docs, total_len, float(avgdl), self.config.k1, self.config.b,
-              self.config.docs_per_block, self.config.docs_per_bucket)],
-            "n_docs long, total_len long, avgdl double, k1 double, b double, "
-            "docs_per_block int, docs_per_bucket long")
-        self.store.write(stats, "stats")
+        # every block is encoded under this avgdl: avgdl_enc_min = avgdl
+        row = (n_docs, total_len, float(avgdl), float(self.config.k1),
+               float(self.config.b), self.config.docs_per_block,
+               self.config.docs_per_bucket, float(avgdl))
+        self.store.write(arrow_rows(self.spark, [row], TABLE_SCHEMAS["stats"]),
+                         "stats")
+        # later stages and the returned Index use the row written here
+        # instead of a collect job on the stats table
+        self._stats = dict(zip(StructType.fromDDL(TABLE_SCHEMAS["stats"]).names,
+                               row))
         self._record_lineage("doc_len", "doc_len")
 
     # -- stage 3b: per-doc content fingerprints --------------------------
@@ -1142,7 +1147,7 @@ class IndexBuilder:
         (a group may span batches) but never across partitions (hash
         partitioning on the group key guarantees that).
         """
-        stats = self.store.read("stats").collect()[0]
+        stats = self._stats or self.store.read("stats").collect()[0].asDict()
         partials = self.store.read("partials")
         write_postings(self.store, "postings",
                        partials.filter(F.col("kind") == "f"),
@@ -1174,7 +1179,7 @@ class IndexBuilder:
         self.store.write(rolled, "tmp_term_rollup")
         # public projection: a shuffle-free narrow rewrite of the staged
         # rollup (file order — term-sorted — is preserved)
-        bm = (self.store.read("tmp_term_rollup")
+        bm = (self.store.read("tmp_term_rollup", schema=TERM_ROLLUP_SCHEMA)
               .select("term", "bucket", "tmax", "n_blocks"))
         self.store.write(bm, "bucket_max")
         self._record_lineage("bucket_max", "bucket_max")
@@ -1187,7 +1192,7 @@ class IndexBuilder:
         covers resume from an index whose rollup staging was already
         dropped (older layout or a crash between the two stages)."""
         if self.store.exists("tmp_term_rollup"):
-            src = self.store.read("tmp_term_rollup")
+            src = self.store.read("tmp_term_rollup", schema=TERM_ROLLUP_SCHEMA)
         else:  # resume fallback: re-derive the rollup from postings
             src = term_bucket_rollup(self.store.read("postings"))
         dictionary = fold_term_rollup(src)
@@ -1195,8 +1200,8 @@ class IndexBuilder:
         # reference's getTermDictPos surface (IndexBody.java:86-88);
         # assigned with the same no-global-sort two-phase rank trick as
         # docIDs, and the final files stay term-sorted for pushdown.
-        final = with_global_ordinals(self.spark, self.store, dictionary,
-                                     ["term"], "term_ord", "tmp_dict_order",
+        final = with_global_ordinals(self.store, dictionary, ["term"],
+                                     "term_ord", "tmp_dict_order",
                                      self._n_partitions())
         self.store.write(final, "dictionary")
         self.store.drop("tmp_dict_order")
@@ -1220,7 +1225,6 @@ class IndexBuilder:
     def _write_lineage(self) -> None:
         if not self._lineage_rows:
             return
-        df = self.spark.createDataFrame(
-            self._lineage_rows, "stage string, partition_id int, rows_out long, detail string")
+        df = arrow_rows(self.spark, self._lineage_rows, TABLE_SCHEMAS["lineage"])
         mode = "append" if self.store.exists("lineage") else "overwrite"
         self.store.write(df, "lineage", mode=mode)

@@ -2,17 +2,10 @@
 
 The engine's persistent state is a set of relational tables (SURVEY.md
 §1.1: the index IS the persisted tables — no separate cache layer like
-the reference's Java-serialized index.bin, CacheManager.java:33-47):
-
-    doc_map(docID, repo, path, commit, lang)
-    doc_len(docID, dl)
-    doc_sha(docID, sha256)   -- per-row content fingerprint (input_hint)
-    stats(n_docs, total_len, avgdl)
-    dictionary(term, rterm, df, cf, n_blocks, max_block_score)
-    postings(term, bucket, block_id, n_docs, doc_gaps, tfs, dls,
-             pos_gaps, block_max_tf, block_max_score, block_first_doc,
-             block_last_doc, cf)
-    lineage(stage, partition_id, rows_out, detail)
+the reference's Java-serialized index.bin, CacheManager.java:33-47),
+each with the schema declared once in TABLE_SCHEMAS below. Readers
+use the declared schema, so opening a table never runs a parquet
+schema-inference job (one 1-task Spark job per read otherwise).
 
 On a cluster these are Iceberg tables (`spark.read.format("iceberg")`);
 the sandbox has no Iceberg runtime jar, so TableStore writes plain
@@ -29,6 +22,72 @@ import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# Packed map-side fragments: one row per (term, docID-bucket) per input
+# partition instead of one row per posting. Column names and payload
+# layout deliberately match POSTINGS_SCHEMA's data columns, so the same
+# buffer-level decode serves both (fragments ARE un-blocked postings).
+# Rows with kind == "m" (and bucket == -1) are per-partition doc_len
+# markers: doc_gaps carries the partition's sorted docIDs (gap-coded),
+# dls their kept-term counts. Rows with kind == "s" are the matching
+# sha256 markers (pos_gaps = fixed-width 64-char hex digests in docID
+# order — see build._sha_marker_batch). The table is written
+# partitionBy(kind), so the marker scans file-prune to the tiny kind=m /
+# kind=s files and never touch fragment payload bytes (at 10^12 docs
+# the fragment table is TB-scale, the markers GB-scale).
+FRAGMENTS_SCHEMA = ("term string, bucket long, n_docs int, "
+                    "doc_gaps binary, tfs binary, dls binary, "
+                    "pos_gaps binary, kind string")
+
+POSTINGS_SCHEMA = (
+    "term string, bucket long, block_id long, n_docs int, "
+    "doc_gaps binary, tfs binary, dls binary, pos_gaps binary, "
+    "block_max_tf int, block_max_wand double, "
+    "block_first_doc long, block_last_doc long, cf long"
+)
+
+# The one declaration of every index table's columns, in file order.
+# Writers produce exactly these (tests/test_streaming.py compares them
+# with the parquet footers after a build, an append, a delete and both
+# compactions); TableStore.read uses them instead of inferring a schema.
+TABLE_SCHEMAS = {
+    "doc_map": "docID long, repo string, path string, commit string, "
+               "lang string",
+    "doc_len": "docID long, dl int",
+    "doc_sha": "docID long, sha256 string",
+    # avgdl_enc_min: smallest avgdl any live posting block was encoded
+    # under (streaming/incremental.py); a fresh build writes avgdl
+    "stats": "n_docs long, total_len long, avgdl double, k1 double, "
+             "b double, docs_per_block int, docs_per_bucket long, "
+             "avgdl_enc_min double",
+    "partials": FRAGMENTS_SCHEMA,  # kind is the partition column
+    "postings": POSTINGS_SCHEMA,
+    "bucket_max": "term string, bucket long, tmax double, n_blocks long",
+    "dictionary": "term string, rterm string, df long, cf long, "
+                  "n_blocks long, n_buckets long, max_block_wand double, "
+                  "term_ord long",
+    "dictionary_r": "rterm string, term string, df long",
+    "tombstones": "docID long",
+    "lineage": "stage string, partition_id int, rows_out long, "
+               "detail string",
+    # doc-major forward index (QueryEngine.build_forward_index)
+    "doc_vec": "docID long, term string, tf int",
+}
+
+
+def arrow_rows(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """A few driver-side rows as a DataFrame through Arrow: the JVM reads
+    the batch directly, where `createDataFrame(<list>)` parallelizes a
+    Python RDD and starts Python workers to decode it (~0.5 s even for
+    one row)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    st = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist([dict(zip(st.names, r)) for r in rows],
+                                 schema=to_arrow_schema(st))
+    return spark.createDataFrame(table, st)
 
 
 class TableStore:
@@ -154,10 +213,17 @@ class TableStore:
         else:
             w.parquet(self.path(name))
 
-    def read(self, name: str) -> DataFrame:
+    def read(self, name: str, schema: str | StructType | None = None,
+             files: list | None = None) -> DataFrame:
+        """Table `name` (or only its parquet `files`), read with `schema`,
+        else the declared TABLE_SCHEMAS entry; only a table with neither
+        (a staging table of unknown shape) is left to schema inference."""
         if self.use_iceberg:
             return self.spark.read.format("iceberg").table(self.ident(name))
-        return self.spark.read.parquet(self.path(name))
+        schema = schema or TABLE_SCHEMAS.get(name)
+        reader = self.spark.read if schema is None \
+            else self.spark.read.schema(schema)
+        return reader.parquet(*(files or [self.path(name)]))
 
     def refresh(self, name: str) -> None:
         """Invalidate Spark's cached data and file listing for a table.
@@ -195,8 +261,7 @@ class TableStore:
 
     def drop_all(self) -> None:
         if self.use_iceberg:
-            for name in ("doc_map", "partials", "doc_len", "stats", "postings",
-                         "bucket_max", "dictionary", "dictionary_r", "lineage"):
+            for name in TABLE_SCHEMAS:
                 self.drop(name)
             return
         if os.path.exists(self.root):

@@ -4,7 +4,9 @@ takes the materializing path) and log each decision at DEBUG.
 `pinned`/`release` checkpoint and free at RDD level — a checkpoint's
 `DataFrame.unpersist()` frees nothing, and a released checkpoint cannot
 be recomputed, so never release one a returned lazy frame still reads.
-`hold` is a call-scoped persist (recomputed if read after release).
+`hold` is a call-scoped persist (recomputed if read after release);
+`collected` keeps a small relation on the driver, freed with the last
+frame that reads it.
 """
 
 from __future__ import annotations
@@ -91,3 +93,12 @@ def hold(df: DataFrame, scope: str) -> DataFrame:
             pass  # its session already stopped: nothing left to free
     _HELD[scope] = df = df.cache()
     return df
+
+
+def collected(df: DataFrame) -> DataFrame:
+    """`df` computed once (one Arrow collect job) and served from the
+    driver, for a relation its consumers broadcast anyway. It holds no
+    executor blocks, so unlike a checkpoint it needs no release; unlike
+    `hold` it keeps the partitioning AQE gave it (a cached plan keeps
+    all its shuffle partitions, ~4x the tasks of each small read)."""
+    return df.sparkSession.createDataFrame(df.toArrow(), df.schema)

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from . import plan_policy
+from .build import pid_offsets
 
 _U32 = float(1 << 32)
 
@@ -177,8 +178,9 @@ def shard_by_token_budget(df: DataFrame, budget_tokens: int,
     two-phase trick as docID assignment (build.with_global_ordinals):
     range-partition by id, ONE Arrow kernel emits each partition's
     exclusive running sum, the P per-partition totals (P rows, not
-    corpus rows) prefix-sum on the driver and broadcast back as
-    offsets. The numbered relation is pinned by an eager
+    corpus rows) prefix-sum on the driver and come back as a literal
+    pid -> offset lookup (build.pid_offsets) in the final projection:
+    no offsets table, no join. The numbered relation is pinned by an eager
     localCheckpoint so the range boundaries (sampled, not stable
     across actions) are computed exactly once; the totals pass and the
     final projection both read the pinned copy.
@@ -214,16 +216,11 @@ def shard_by_token_budget(df: DataFrame, budget_tokens: int,
                     .localCheckpoint(eager=True))
     totals = {r["pid"]: int(r["s"]) for r in
               numbered.groupBy("pid").agg(F.sum("n_tokens").alias("s")).collect()}
-    offsets, acc = [], 0
-    for pid in sorted(totals):
-        offsets.append((pid, acc))
-        acc += totals[pid]
-    offsets_df = spark.createDataFrame(offsets, "pid int, offset long")
     # integer division (Spark DIV / DuckDB //): exact at any magnitude,
     # where floor(double/double) could misround near 2^53
-    shard = F.expr(f"CAST((offset + before_local) DIV {int(budget_tokens)} "
-                   f"AS LONG)")
-    return (numbered.join(F.broadcast(offsets_df), "pid")
+    shard = F.expr(f"CAST(cum_before DIV {int(budget_tokens)} AS LONG)")
+    return (numbered.select(id_col, "n_tokens", (
+                pid_offsets(totals) + F.col("before_local")).alias("cum_before"))
             .select(id_col, "n_tokens", shard.alias("shard")))
 
 

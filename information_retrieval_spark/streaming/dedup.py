@@ -180,14 +180,16 @@ class IncrementalDeduper(BatchSegments):
         the store state at call time: run it BEFORE append()ing the
         same batch, or use probe_and_append."""
         p = self.params
-        # checkpoint the SIGNATURES once, derive the banded relation
-        # from the checkpointed table per consumer: the minhash
-        # aggregation runs once total, and re-deriving the bands is a
-        # cheap explode over the materialized batch rows (a second
-        # checkpoint job costs more than the recomputes). The batch
-        # side is the small one, so both relations broadcast.
+        # materialize the SIGNATURES once, derive the banded relation
+        # from them per consumer: the minhash aggregation runs once
+        # total, and re-deriving the bands is a cheap explode over the
+        # materialized batch rows (a second materialization costs more
+        # than the recomputes). The batch side is the small one, so both
+        # relations broadcast — which is why they are held on the driver
+        # (`plan_policy.collected`): the returned lazy frame reads them,
+        # so an executor checkpoint here could never be released.
         new_sig = _batch_sigs if _batch_sigs is not None \
-            else self._signatures(batch_df).localCheckpoint(eager=True)
+            else plan_policy.collected(self._signatures(batch_df))
         new_banded = F.broadcast(
             _banded(new_sig, p["num_hashes"], p["band_size"]))
         new_sig = F.broadcast(new_sig)

@@ -62,11 +62,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..build import (
-    FRAGMENTS_SCHEMA,
     SEGMENTED_TABLES,
+    TERM_ROLLUP_SCHEMA,
     Index,
     IndexConfig,
     doc_len_rows,
+    doc_meta,
     doc_sha_rows,
     fold_term_rollup,
     term_bucket_rollup,
@@ -76,7 +77,7 @@ from ..build import (
 )
 from ..corpus import DOCUMENTS_SCHEMA
 from .segments import BatchSegments
-from ..io import TableStore
+from ..io import TABLE_SCHEMAS, TableStore, arrow_rows
 
 
 class IncrementalIndexer(BatchSegments):
@@ -129,29 +130,26 @@ class IncrementalIndexer(BatchSegments):
 
         # -- stage 1: deterministic deltas (overwrite -> retry-safe) -----
         # every delta is staged under tmp_batch_<id>/ through its own
-        # TableStore (overwrite writes), so a retry recomputes in place
+        # TableStore (overwrite writes), so a retry recomputes in place;
+        # the staged tables carry index table names, so their re-reads
+        # use the declared schemas (no inference job per read)
         stage = TableStore(self.spark, self._stage_dir(batch_id))
         cfg = self.config
 
-        def staged(name, schema):
-            # staged re-reads name the columns they use: an explicit
-            # schema skips parquet schema inference, one job per read
-            return self.spark.read.schema(schema).parquet(stage.path(name))
-
         # docID assignment: the same two-phase global rank as the batch
-        # build (range-partition the slim key projection, number rows
-        # per partition once, prefix-sum the counts) — distributed, no
-        # coalesce(1)/Window single-task stage, and deterministic
-        # because (repo, path) keys are unique
+        # build (range-partition the doc_map columns, which ride the
+        # shuffle as in the build, number rows per partition once,
+        # prefix-sum the counts) — distributed, no coalesce(1)/Window
+        # single-task stage, no re-join, and deterministic because
+        # (repo, path) keys are unique
         order_tbl = f"tmp_batch_{batch_id}_dm_order"
         ranked = with_global_ordinals(
-            self.spark, self.store, batch_df.select("repo", "path"),
-            ["repo", "path"], "ord", order_tbl, 4)
+            self.store, doc_meta(batch_df), ["repo", "path"], "ord",
+            order_tbl, 4)
         from pyspark.sql import Observation
-        doc_map_delta = (
-            ranked.join(batch_df, ["repo", "path"])
-            .select((F.col("ord") + F.lit(n_before)).cast("long").alias("docID"),
-                    "repo", "path", "commit", "lang"))
+        doc_map_delta = ranked.select(
+            (F.col("ord") + F.lit(n_before)).cast("long").alias("docID"),
+            "repo", "path", "commit", "lang")
         # n_delta rides the staging write as an Observation — one fewer
         # driver-synchronous job per micro-batch (retries recompute the
         # write, so the observed value is always this attempt's)
@@ -160,7 +158,7 @@ class IncrementalIndexer(BatchSegments):
                     "doc_map")
         n_delta = int(obs_dm.get["n"])
         self.store.drop(order_tbl)
-        doc_map_delta = staged("doc_map", "docID long, repo string, path string")
+        doc_map_delta = stage.read("doc_map").select("docID", "repo", "path")
 
         if supersede and self.store.exists("doc_map"):
             # keys re-ingested by this batch tombstone their LIVE docID.
@@ -182,7 +180,7 @@ class IncrementalIndexer(BatchSegments):
         docs_with_id = batch_df.select("repo", "path", "content").join(
             doc_map_delta, ["repo", "path"])
         write_partials(stage, "partials", docs_with_id, cfg.docs_per_bucket)
-        partials = staged("partials", FRAGMENTS_SCHEMA)
+        partials = stage.read("partials")
         write_postings(stage, "postings", partials.filter(F.col("kind") == "f"),
                        4, cfg, meta["avgdl_now"])
         # batch_len rides the doc_len staging write
@@ -199,15 +197,13 @@ class IncrementalIndexer(BatchSegments):
         # batch's buckets, an upper bound after the fold (a delta bucket
         # may also exist in the base) that only feeds the WAND
         # driver-slice size gate, where an overestimate is safe.
-        rolled = term_bucket_rollup(staged(
-            "postings", "term string, bucket long, block_max_wand double, "
-                        "n_docs int, cf long"))
+        rolled = term_bucket_rollup(stage.read("postings"))
         stage.write(rolled.select("term", "bucket", "tmax", "n_blocks"),
                     "bucket_max")
         # ordinals are re-ranked at compaction
         stage.write(fold_term_rollup(rolled).withColumn(
             "term_ord", F.lit(None).cast("long")), "dictionary")
-        stage.write(staged("dictionary", "rterm string, term string, df long"),
+        stage.write(stage.read("dictionary").select("rterm", "term", "df"),
                     "dictionary_r")
 
         # -- stage 2: link ALL deltas into the live tables (append-only,
@@ -226,12 +222,11 @@ class IncrementalIndexer(BatchSegments):
         # stage-1 writes — no standalone count/sum jobs here)
         n_new = n_before + n_delta
         total_len = meta["total_len_before"] + batch_len
-        new_stats = self.spark.createDataFrame(
-            [(n_new, total_len, float(total_len / n_new) if n_new else 0.0,
-              cfg.k1, cfg.b, cfg.docs_per_block, cfg.docs_per_bucket,
-              min(meta["avgdl_enc_min"], meta["avgdl_now"]))],
-            "n_docs long, total_len long, avgdl double, k1 double, b double, "
-            "docs_per_block int, docs_per_bucket long, avgdl_enc_min double")
+        new_stats = arrow_rows(self.spark, [
+            (n_new, total_len, float(total_len / n_new) if n_new else 0.0,
+             cfg.k1, cfg.b, cfg.docs_per_block, cfg.docs_per_bucket,
+             min(meta["avgdl_enc_min"], meta["avgdl_now"]))],
+            TABLE_SCHEMAS["stats"])
         self.store.write(new_stats, "tmp_stats_new")
         self._swap("stats", "tmp_stats_new")
         crash_point("stats")
@@ -247,8 +242,8 @@ class IncrementalIndexer(BatchSegments):
         No-op once the table exists (overwriting later would delete
         linked segments)."""
         if not self.store.exists(table):
-            empty = self.spark.createDataFrame([], "docID long")
-            self.store.write(empty, table)
+            self.store.write(
+                arrow_rows(self.spark, [], TABLE_SCHEMAS[table]), table)
 
     # -- deletes -----------------------------------------------------------
     def delete_batch(self, keys_df: DataFrame | None = None,
@@ -277,7 +272,7 @@ class IncrementalIndexer(BatchSegments):
         if os.path.exists(self._marker(batch_id)):
             return  # replayed batch: NO-OP
         if doc_ids is not None:
-            tomb = doc_ids.select("docID")
+            tomb = doc_ids.select(F.col("docID").cast("long").alias("docID"))
         elif keys_df is not None:
             tomb = (self.store.read("doc_map")
                     .join(keys_df.select("repo", "path").distinct(),
@@ -421,13 +416,10 @@ class IncrementalIndexer(BatchSegments):
             # (too-large) floor — an UNDER-estimate. Lowering only
             # enc_min up front keeps every crash state over-inflated,
             # i.e. safe (the mirror of the flip-stats-last rule below).
-            pre = self.spark.createDataFrame(
-                [(int(stats["n_docs"]), int(stats["total_len"]),
-                  float(stats["avgdl"]), cfg.k1, cfg.b,
-                  cfg.docs_per_block, dpb, avgdl)],
-                "n_docs long, total_len long, avgdl double, k1 double, "
-                "b double, docs_per_block int, docs_per_bucket long, "
-                "avgdl_enc_min double")
+            pre = arrow_rows(self.spark, [
+                (int(stats["n_docs"]), int(stats["total_len"]),
+                 float(stats["avgdl"]), cfg.k1, cfg.b,
+                 cfg.docs_per_block, dpb, avgdl)], TABLE_SCHEMAS["stats"])
             self.store.write(pre, "tmp_stats_new")
             self._swap("stats", "tmp_stats_new")
 
@@ -449,14 +441,13 @@ class IncrementalIndexer(BatchSegments):
                   .repartitionByRange(n, "term")
                   .sortWithinPartitions("term", "bucket"))
         self.store.write(rolled, "tmp_term_rollup")
-        rolled = self.store.read("tmp_term_rollup")
+        rolled = self.store.read("tmp_term_rollup", schema=TERM_ROLLUP_SCHEMA)
         self.store.write(rolled.select("term", "bucket", "tmax", "n_blocks"),
                          "tmp_bucket_max_new")
         self._swap("bucket_max", "tmp_bucket_max_new")
         merged = fold_term_rollup(rolled)
         merged = with_global_ordinals(
-            self.spark, self.store, merged, ["term"], "term_ord",
-            "tmp_compact_order", n)
+            self.store, merged, ["term"], "term_ord", "tmp_compact_order", n)
         self.store.write(merged, "tmp_dictionary_new")
         self.store.drop("tmp_compact_order")
         self.store.drop("tmp_term_rollup")
@@ -480,12 +471,10 @@ class IncrementalIndexer(BatchSegments):
         # current avgdl, and N/total_len reflect the surviving corpus —
         # BM25 semantics heal to exactly what a fresh build of the live
         # docs would compute
-        new_stats = self.spark.createDataFrame(
-            [(n_docs_new, total_len_new, avgdl_new,
-              cfg.k1, cfg.b, cfg.docs_per_block, dpb, avgdl)],
-            "n_docs long, total_len long, avgdl double, k1 double, "
-            "b double, docs_per_block int, docs_per_bucket long, "
-            "avgdl_enc_min double")
+        new_stats = arrow_rows(self.spark, [
+            (n_docs_new, total_len_new, avgdl_new,
+             cfg.k1, cfg.b, cfg.docs_per_block, dpb, avgdl)],
+            TABLE_SCHEMAS["stats"])
         self.store.write(new_stats, "tmp_stats_new")
         self._swap("stats", "tmp_stats_new")
 
@@ -493,8 +482,9 @@ class IncrementalIndexer(BatchSegments):
         # them applied (over the already-filtered tables the anti-join /
         # kernel exclusion is a no-op — consistent either way)
         if self.store.exists("tombstones"):
-            empty = self.spark.createDataFrame([], "docID long")
-            self.store.write(empty, "tmp_tombstones_new")
+            self.store.write(
+                arrow_rows(self.spark, [], TABLE_SCHEMAS["tombstones"]),
+                "tmp_tombstones_new")
             self._swap("tombstones", "tmp_tombstones_new")
 
     def _publish_with_merged_segments(self, table: str, merged_dir: str,
@@ -561,7 +551,7 @@ class IncrementalIndexer(BatchSegments):
             max_id = max(int(os.path.basename(f).split("_")[0][5:])
                          for f in seg_files)
             merged_tbl = f"tmp_{table}_minor"
-            src_df = self.spark.read.parquet(*seg_files)
+            src_df = self.store.read(table, files=seg_files)
             if table == "tombstones":
                 # fold per-batch delete segments into one sorted, deduped
                 # segment (physical removal stays compact()'s job)

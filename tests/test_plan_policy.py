@@ -112,6 +112,33 @@ def test_probe_and_append_releases_signatures(spark, tmp_path):
     assert set(_stored(spark)) <= before
 
 
+def test_repeated_probes_leave_no_signature_relation(spark, tmp_path):
+    # probe's returned frame reads the batch signatures, so a checkpoint
+    # of them could never be released (one stayed resident per probe);
+    # they are held on the driver instead, freed with the frame
+    dd = IncrementalDeduper(spark, str(tmp_path / "store"), num_hashes=8,
+                            band_size=2, n=2)
+    schema = "doc_id long, text string"
+    dd.append(spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, "an entirely different text")],
+        schema), batch_id=0)
+    before = set(_stored(spark))
+    for i in range(3):
+        batch = spark.createDataFrame(
+            [(10 + i, "the quick brown fox jumps"),
+             (20 + i, f"unrelated words number {i} here")], schema)
+        got = {tuple(r) for r in dd.probe(batch).collect()}
+        # the checkpointed-signature path probe_and_append runs
+        sig = dd._signatures(batch).localCheckpoint(eager=True)
+        try:
+            want = {tuple(r) for r in dd.probe(batch, _batch_sigs=sig).collect()}
+        finally:
+            plan_policy.release(sig)
+        assert got == want
+        assert (1, 10 + i) in {(a, b) for a, b, _ in got}
+    assert set(_stored(spark)) <= before
+
+
 def test_gate_decisions_are_logged(spark, monkeypatch, caplog):
     df = spark.range(10)
     est = plan_policy.estimated_bytes(df)

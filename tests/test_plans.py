@@ -214,13 +214,13 @@ def test_shard_plan_range_partition_no_global_sort_no_window(spark):
     out = sampling.shard_by_token_budget(df, 25, tokens_col="ntok",
                                          n_partitions=5)
     plan = _plan(out)
-    assert "BroadcastHashJoin" in plan, plan
     assert "Window" not in plan and "Sort" not in plan, plan
     # the numbered relation is pinned by a localCheckpoint, so the final
     # plan reads an ExistingRDD (the range exchange lives upstream of
-    # the checkpoint); the ONLY exchange left is the offsets broadcast
+    # the checkpoint); the offsets are a literal pid lookup in the
+    # projection, so no join and no exchange is left
     assert "Scan ExistingRDD" in plan, plan
-    assert plan.count("Exchange") == plan.count("BroadcastExchange"), plan
+    assert "Join" not in plan and "Exchange" not in plan, plan
 
 
 def test_bm25_filtered_mask_path_adds_no_exchange(synth_engine):
@@ -246,6 +246,19 @@ def test_heaps_fit_postings_scan_is_metadata_only(synth_engine):
         head = seg.split("\n")[0]
         for payload in ("doc_gaps", "tfs", "dls", "pos_gaps"):
             assert payload not in head, head
+
+
+def test_write_path_reads_through_table_store():
+    # a direct `.read.parquet(` infers the schema in a 1-task Spark job
+    # per read, and a `createDataFrame(` of driver rows parallelizes a
+    # Python RDD: the SPIMI write path reads through TableStore (declared
+    # schemas) and builds driver rows with io.arrow_rows
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "information_retrieval_spark"
+    offenders = [f"{p.relative_to(pkg)}:{i}"
+                 for p in (pkg / "build.py", pkg / "streaming" / "incremental.py")
+                 for i, line in enumerate(p.read_text().splitlines(), 1)
+                 if ".read.parquet(" in line or "createDataFrame(" in line]
+    assert not offenders, offenders
 
 
 def test_releases_go_through_plan_policy():

@@ -5,7 +5,9 @@ the avgdl inflation correction)."""
 
 import math
 
-from information_retrieval_spark.build import IndexBuilder, IndexConfig
+from pyspark.sql import functions as F
+
+from information_retrieval_spark.build import Index, IndexBuilder, IndexConfig
 from information_retrieval_spark.corpus import DOCUMENTS_SCHEMA, fixture_docs
 from information_retrieval_spark.oracle import OracleIndex
 from information_retrieval_spark.query import QueryEngine
@@ -512,27 +514,126 @@ def test_data_compaction_merges_posting_fragments(spark, work_dir):
     stats = store.read("stats").collect()[0].asDict()
     assert stats["avgdl_enc_min"] == stats["avgdl"]
 
+
+def _jobs(spark, group: str, fn) -> list:
+    """Spark job ids `fn()` ran, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job budget pin")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(f"{group}_done", "")
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_build_driver_job_budget(spark, work_dir):
+    """A full build of this fixture is pinned at 25 Spark jobs (41 when
+    every read inferred its parquet schema). Every index table is read
+    back with its declared schema (no schema-inference job per read),
+    the ordinal offsets are a literal lookup (no offsets table or
+    broadcast job), the stats and lineage rows come from Arrow, not a
+    Python RDD, and the stats the build wrote are not collected back."""
+    cfg = IndexConfig(docs_per_block=4, blocks_per_bucket=4)
+    docs = fixture_docs(spark)
+    jobs = _jobs(spark, "build_budget", lambda: IndexBuilder(
+        spark, f"{work_dir}/build_budget_idx", cfg).build(docs, resume=False))
+    assert len(jobs) <= 25, len(jobs)
+
+
 def test_append_batch_driver_job_budget(spark, work_dir):
-    """Per-micro-batch Spark job count is pinned at 23 on this fixture.
-    The append runs the build's SPIMI path: ONE kernel pass staged as
-    packed partials feeds postings (fragment encoder) and doc_len /
-    doc_sha (marker decodes), so no stage re-runs the kernel; n_delta
-    and batch_len ride the staging writes as Observations; and the
-    staged re-reads pass their columns as an explicit schema, which
-    skips the one-job parquet schema inference per read."""
+    """Per-micro-batch Spark job count is pinned at 18 on this fixture
+    (23 when every read inferred its parquet schema). The append runs
+    the build's SPIMI path: ONE kernel pass staged as packed partials
+    feeds postings (fragment encoder) and doc_len / doc_sha (marker
+    decodes), so no stage re-runs the kernel; n_delta and batch_len
+    ride the staging writes as Observations; commit and lang ride the
+    docID rank, so the batch is not joined back to its ranked keys; and
+    every read (live stats, staged tables, the rank's staging table)
+    uses a declared schema, which skips the one-job parquet schema
+    inference per read."""
     cfg = IndexConfig(docs_per_block=4, blocks_per_bucket=4)
     idx_dir = f"{work_dir}/jobbudget_idx"
     IndexBuilder(spark, idx_dir, cfg).build(fixture_docs(spark), resume=False)
     inc = IncrementalIndexer(spark, idx_dir, cfg)
-    sc = spark.sparkContext
-    sc.setJobGroup("append_budget", "job budget pin")
-    try:
-        inc.append_batch(
-            spark.createDataFrame(NEW_DOCS, DOCUMENTS_SCHEMA), batch_id=0)
-    finally:
-        sc.setJobGroup("append_budget_done", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("append_budget")
-    assert len(jobs) <= 23, len(jobs)
+    delta = spark.createDataFrame(NEW_DOCS, DOCUMENTS_SCHEMA)
+    jobs = _jobs(spark, "append_budget",
+                 lambda: inc.append_batch(delta, batch_id=0))
+    assert len(jobs) <= 18, len(jobs)
+
+
+def _footer_mismatches(store) -> list:
+    """(table, file, footer) for every parquet file of every existing
+    index table whose footer columns differ from TABLE_SCHEMAS (names
+    and types in order; a partition column is not in the footer)."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    from information_retrieval_spark.io import TABLE_SCHEMAS
+
+    bad = []
+    for name, ddl in TABLE_SCHEMAS.items():
+        if not store.exists(name):
+            continue
+        want = [(f.name, f.type) for f in
+                to_arrow_schema(StructType.fromDDL(ddl))
+                if not (name == "partials" and f.name == "kind")]
+        files = glob.glob(os.path.join(store.path(name), "**", "*.parquet"),
+                          recursive=True)
+        assert files, name
+        for fp in files:
+            got = [(f.name, f.type) for f in pq.read_schema(fp)]
+            if got != want:
+                bad.append((name, os.path.basename(fp), got))
+    return bad
+
+
+def test_declared_schemas_match_footers_and_read_without_jobs(spark, work_dir):
+    """Every index table's declared schema (io.TABLE_SCHEMAS) equals the
+    parquet footer of every file it holds after a build, a superseding
+    append (tombstones), a delete, compact_minor, compact and a forward
+    index build; and reading each table — through a fresh TableStore,
+    as another process would — runs no Spark job."""
+    from pyspark.sql.types import StructType
+
+    from information_retrieval_spark.io import TABLE_SCHEMAS, TableStore
+
+    cfg = IndexConfig(docs_per_block=4, blocks_per_bucket=4)
+    idx_dir = f"{work_dir}/schema_idx"
+    inc = IncrementalIndexer(spark, idx_dir, cfg)
+
+    def check(step):
+        assert _footer_mismatches(inc.store) == [], step
+        store = TableStore(spark, idx_dir)
+        idx = Index(store=store, config=cfg)
+        names = [n for n in TABLE_SCHEMAS if store.exists(n)]
+        frames = []
+        jobs = _jobs(spark, f"schema_read_{step}", lambda: frames.extend(
+            [store.read(n) for n in names] + [idx.table(n) for n in names]))
+        assert jobs == [], (step, jobs)
+        for n, df in zip(names, frames):
+            assert df.schema == StructType.fromDDL(TABLE_SCHEMAS[n]), n
+
+    IndexBuilder(spark, idx_dir, cfg).build(fixture_docs(spark), resume=False)
+    check("build")
+    upsert = [NEW_DOCS[0], ("ref/testing_files", "test1.txt", "c1b", "txt",
+                            "a superseding version of an indexed file")]
+    inc.append_batch(spark.createDataFrame(upsert, DOCUMENTS_SCHEMA),
+                     batch_id=0, supersede=True)
+    check("append")
+    inc.delete_batch(doc_ids=spark.range(1).select(
+        F.col("id").cast("int").alias("docID")), batch_id=1)
+    check("delete")
+    inc.compact_minor()
+    check("compact_minor")
+    inc.compact()
+    check("compact")
+    QueryEngine(inc.index()).build_forward_index(n_partitions=2)
+    check("forward_index")
+
 
 def test_compact_refuses_uncommitted_batches(spark, work_dir):
     """A batch that crashed between linking its files and writing its
