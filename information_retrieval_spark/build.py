@@ -434,7 +434,7 @@ def _make_fragment_encoder(cfg: "IndexConfig", avgdl: float,
     is bounded by docs_per_bucket postings."""
     import pyarrow as pa
     import pyarrow.compute as pc
-
+    from .codec import flat_decode, member, segmented_cumsum
     from .codec import flat_decode, segmented_cumsum
 
     k1, b_, B = cfg.k1, cfg.b, cfg.docs_per_block
@@ -542,10 +542,8 @@ def _make_fragment_encoder(cfg: "IndexConfig", avgdl: float,
                 blob = empty8
                 row_len = np.zeros(len(t), dtype=np.int64)
 
-            if drop_ids is not None and len(drop_ids) and len(d):
-                p = np.searchsorted(drop_ids, d)
-                p[p == len(drop_ids)] = 0
-                keep = drop_ids[p] != d
+            if drop_ids is not None:
+                keep = ~member(drop_ids, d)
                 if not keep.all():
                     if len(blob):
                         blob = blob[np.repeat(keep, row_len)]

@@ -123,3 +123,14 @@ def segmented_cumsum(gaps, seg_lens) -> np.ndarray:
     corr = np.zeros(len(seg_lens), dtype=np.int64)
     corr[1:] = csum[starts[1:] - 1]
     return csum - np.repeat(corr, np.asarray(seg_lens, dtype=np.int64))
+
+
+def member(sorted_values, x) -> np.ndarray:
+    """Boolean mask: which entries of `x` occur in the ascending array
+    `sorted_values` — one binary search per entry."""
+    x = np.asarray(x)
+    if not len(sorted_values):
+        return np.zeros(len(x), dtype=bool)
+    p = np.searchsorted(sorted_values, x)
+    p[p == len(sorted_values)] = 0
+    return sorted_values[p] == x

@@ -29,11 +29,15 @@ Reference semantics replicated (with file:line citations into
   order).
 - BM25 top-k (north-star addition) — score(q,d) = Σ_t idf(t) ·
   tf·(k1+1)/(tf + k1·(1-b+b·dl/avgdl)), idf = ln(1+(N-df+0.5)/(df+0.5)),
-  k1=1.2 b=0.75. Baseline path decodes all query-term blocks and
-  aggregates JVM-side; the WAND path prunes blocks with the block-max
-  skip structure before any decoding (see `_bm25_wand`) — safe for
-  exact top-k because a pruned block's documents provably cannot reach
-  the kth score.
+  k1=1.2 b=0.75. Every ranker — BM25, boosted BM25, batched BM25
+  (`bm25_many`, one qcode per query) and Dirichlet query-likelihood —
+  is ONE rank kernel over the same bucket exchange (see
+  `_make_rank_kernel`): decode, per-posting weight, a dense per-bucket
+  accumulator, allow/tombstone membership, then a per-bucket top-k that
+  keeps kth-score ties. The WAND path prunes blocks with the block-max
+  skip structure before any decoding (see `_wand_candidate_blocks`) —
+  safe for exact top-k because a pruned block's documents provably
+  cannot reach the kth score.
 """
 
 from __future__ import annotations
@@ -103,7 +107,8 @@ def _shift_member_batch(a_vals, a_lens, b_vals, b_lens, k):
     """Per row i: keep x in row i of a iff x + k[i] occurs in row i of
     b — the phrase chain's step, over _window_match_batch's ragged
     layout and returning the kept (values, lengths) in it. Rows are
-    shifted apart as there, so ONE searchsorted answers every probe."""
+    shifted apart as there, so ONE sorted-membership test answers every
+    probe."""
     n = len(a_lens)
     if not len(a_vals) or not len(b_vals):
         return a_vals[:0], np.zeros(n, dtype=np.int64)
@@ -111,18 +116,14 @@ def _shift_member_batch(a_vals, a_lens, b_vals, b_lens, k):
     brow = np.repeat(np.arange(n), b_lens)
     v = a_vals + k[arow]  # the position the next term must occupy
     m = int(max(v.max(), b_vals.max())) + 2
-    a_glob = v + arow * m
-    b_glob = b_vals + brow * m
-    idx = np.searchsorted(b_glob, a_glob, side="left")
-    ok = idx < len(b_glob)
-    hit = np.zeros(len(a_glob), dtype=bool)
-    hit[ok] = b_glob[idx[ok]] == a_glob[ok]
+    hit = _member(b_vals + brow * m, v + arow * m)
     return a_vals[hit], np.bincount(arow[hit], minlength=n)
 
 
 # shared with build's compaction kernel (codec owns the buffer-level
 # varbyte helpers; query/build both import them)
 from .codec import flat_decode as _flat_decode  # noqa: E402
+from .codec import member as _member  # noqa: E402
 from .codec import segmented_cumsum as _segmented_cumsum  # noqa: E402
 
 
@@ -200,6 +201,34 @@ class _BucketPostings:
         return self.pos[first + np.arange(int(lens.sum()))], lens
 
 
+def _bucket_runs(batches):
+    """Group a bucket-sorted stream of block batches into runs of
+    COMPLETE docID buckets, one column dict per run. A bucket's blocks
+    can straddle Arrow batches, so the rows of a batch's last bucket are
+    held until a later bucket shows up; the complete buckets before it
+    go out together (docIDs of different buckets never meet)."""
+    import pyarrow as pa
+
+    def run(rows):
+        tbl = pa.Table.from_batches(rows).combine_chunks()
+        return {nm: tbl.column(nm).chunk(0) for nm in tbl.column_names}
+
+    held, held_bucket = [], None
+    for rb in batches:
+        if rb.num_rows == 0:
+            continue
+        bucket = rb.column("bucket").to_numpy(zero_copy_only=False)
+        last = bucket[-1]
+        cut = int(np.searchsorted(bucket, last))
+        if cut or (held and held_bucket != last):
+            yield run(held + [rb.slice(0, cut)])
+            held = []
+        held.append(rb.slice(cut))
+        held_bucket = last
+    if held:
+        yield run(held)
+
+
 def _make_set_kernel(matchers, evaluate, with_positions: bool,
                      excluded=None):
     """mapInArrow kernel of the set queries: compressed posting blocks
@@ -208,57 +237,45 @@ def _make_set_kernel(matchers, evaluate, with_positions: bool,
     `matchers` holds one term predicate per query slot (a term, or a
     joker token's pattern), so a slot's docs are the union over its
     matching terms; `evaluate(_BucketPostings)` returns the accepted
-    sorted docIDs. A bucket's blocks can straddle Arrow batches, so the
-    rows of a batch's last bucket are held until a later bucket shows
-    up; the complete buckets before it decode and evaluate together
-    (docIDs of different buckets never meet). Tombstoned docIDs
-    (`excluded`, sorted) drop inside the kernel, as in BM25's."""
+    sorted docIDs. The complete buckets of each `_bucket_runs` run
+    decode and evaluate together. Tombstoned docIDs (`excluded`,
+    sorted) drop inside the kernel, as in the rankers'."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     classes: dict = {}  # term -> its slot-membership row
 
-    def run(rows):
-        tbl = pa.Table.from_batches(rows).combine_chunks()
-        n_rows = tbl.num_rows  # >= 1: a held bucket has rows
-        col = {nm: tbl.column(nm).chunk(0) for nm in tbl.column_names}
-        n_docs, doc = _decode_docs(col, n_rows)
-        enc = pc.dictionary_encode(col["term"])
-        rows_of = np.array(
-            [classes.setdefault(t, [m(t) for m in matchers])
-             for t in enc.dictionary.to_pylist()],
-            dtype=bool).reshape(-1, len(matchers))
-        member = np.repeat(
-            rows_of[enc.indices.to_numpy(zero_copy_only=False)], n_docs, axis=0)
-        if with_positions:
-            tf = _flat_decode(col["tfs"], n_rows).astype(np.int64)
-            pos = _segmented_cumsum(_flat_decode(col["pos_gaps"], n_rows), tf)
-            found = evaluate(_BucketPostings(member, doc, tf, pos))
-        else:
-            found = evaluate(_BucketPostings(member, doc))
-        if excluded is not None and len(excluded):
-            found = np.setdiff1d(found, excluded, assume_unique=True)
-        if len(found):
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(found, type=pa.int64())], names=["docID"])
-
     def kernel(batches):
-        held, held_bucket = [], None
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            bucket = rb.column("bucket").to_numpy(zero_copy_only=False)
-            last = bucket[-1]
-            cut = int(np.searchsorted(bucket, last))
-            if cut or (held and held_bucket != last):
-                yield from run(held + [rb.slice(0, cut)])
-                held = []
-            held.append(rb.slice(cut))
-            held_bucket = last
-        if held:
-            yield from run(held)
+        for col in _bucket_runs(batches):
+            n_rows = len(col["term"])
+            n_docs, doc = _decode_docs(col, n_rows)
+            enc = pc.dictionary_encode(col["term"])
+            rows_of = np.array(
+                [classes.setdefault(t, [m(t) for m in matchers])
+                 for t in enc.dictionary.to_pylist()],
+                dtype=bool).reshape(-1, len(matchers))
+            member = np.repeat(rows_of[enc.indices.to_numpy(
+                zero_copy_only=False)], n_docs, axis=0)
+            if with_positions:
+                tf = _flat_decode(col["tfs"], n_rows).astype(np.int64)
+                pos = _segmented_cumsum(
+                    _flat_decode(col["pos_gaps"], n_rows), tf)
+                found = evaluate(_BucketPostings(member, doc, tf, pos))
+            else:
+                found = evaluate(_BucketPostings(member, doc))
+            if excluded is not None:
+                found = found[~_member(excluded, found)]
+            if len(found):
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(found, type=pa.int64())], names=["docID"])
 
     return kernel
+
+
+def _query_terms(query: str) -> list:
+    """Sorted distinct normalized terms of a free-text query."""
+    return sorted({t for t in map(normalize, re.split(r"\s+", query.strip()))
+                   if t is not None})
 
 
 def _exact(terms) -> list:
@@ -348,334 +365,151 @@ def _min_window_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
                          "n_terms": [need]})
 
 
-def _decode_scored_batch(rb, k1: float, b: float, avgdl: float,
-                         tf_norm: bool = True) -> dict:
-    """Decode ONE compressed posting-block record batch for scoring:
-    buffer-level varbyte decode (one call per column per batch), absolute
-    docIDs via a per-block-reset gap cumsum, and the per-posting BM25
-    tf-norm. Shared by the single-query kernel (_make_bm25_kernel), the
-    batched multi-query kernel (_make_bm25_many_kernel) and the
-    query-likelihood kernel (_make_qlm_kernel, tf_norm=False: it scores
-    from the raw tf/dl columns and skips the BM25 tf-norm)."""
+# one bucket's score accumulator holds at most this many doubles: a
+# query batch wider than ACC_DOUBLES // docs_per_bucket is scored in
+# qcode chunks of that width
+ACC_DOUBLES = 1 << 22
+_RANK_SCHEMA = "qcode int, docID long, score double"
+
+
+def _lone(params: dict) -> dict:
+    """Rank-kernel term_info of a lone query (qcode 0) from its
+    term -> weight parameter map."""
+    lone = np.zeros(1, dtype=np.int64)
+    return {t: (lone, p) for t, p in params.items()}
+
+
+def _bm25_weight(k1: float, b: float, avgdl: float, idf, tf, dl):
+    """Per-posting BM25 contribution idf·tf(k1+1)/(tf + k1(1-b+b·dl/avgdl))."""
+    return idf * (tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl)))
+
+
+def _qlm_weight(w, tf, dl):
+    """Per-posting query-likelihood contribution ln(1 + tf/w_t)."""
+    return np.log(1.0 + tf / w)
+
+
+def _qlm_finalize(mu: float, qlen: int, score, dl):
+    """QLM's per-doc length term |q|·(ln mu - ln(mu + dl)), added once
+    per candidate doc (see QueryEngine.qlm for the decomposition)."""
+    return score + qlen * (np.log(mu) - np.log(mu + dl))
+
+
+def _cut_topk(group, score, k) -> np.ndarray:
+    """Mask of the rows that reach their group's kth best score — every
+    kth-score tie stays, so the global (score desc, docID asc) order
+    downstream is exact. `group` is ascending; k=None keeps every row."""
+    keep = np.ones(len(score), dtype=bool)
+    if k is None:
+        return keep
+    starts = np.flatnonzero(np.diff(group, prepend=-1))
+    for s, e in zip(starts, np.append(starts[1:], len(group))):
+        if e - s > k:
+            thresh = np.partition(score[s:e], e - s - k)[e - s - k]
+            keep[s:e] = score[s:e] >= thresh
+    return keep
+
+
+def _make_rank_kernel(term_info: dict, weight, docs_per_bucket: int, k,
+                      allowed=None, excluded=None, finalize=None):
+    """mapInArrow kernel of every ranker (BM25, boosted and batched BM25,
+    query-likelihood): compressed posting blocks (repartitioned + sorted
+    by docID bucket) -> per-(query, bucket) exact top-k rows
+    (qcode, docID, score).
+
+    `term_info` maps each term to (the qcodes of the queries holding
+    it, its weight parameter); a lone query is qcode 0.
+    `weight(param, tf, dl)` is the per-posting contribution (BM25
+    idf·tfn, QLM ln(1+tf/w_t)) and `finalize(score, dl)` an optional
+    per-doc term added after the sum (QLM's length term).
+
+    A bucket is a complete docID range: every posting of a docID lives
+    in that docID's bucket, so per-bucket sums are the FINAL per-doc
+    scores and a per-bucket top-k is globally safe. Each run of complete
+    buckets (`_bucket_runs`) decodes and weighs its postings once; a
+    posting then fans out to every query holding its term, so a term
+    shared across a batch is decoded and weighted once. Per bucket, ONE
+    dense bincount over the flattened key qcode·docs_per_bucket + local
+    docID sums the scores (at most ACC_DOUBLES wide: wider batches go in
+    qcode chunks). Contributions are strictly positive, so the
+    accumulator's non-zeros are exactly the candidate docs. Then, before
+    the cut: `allowed` (sorted int64, bm25_within) keeps only its members
+    and `excluded` (sorted int64, pending streaming deletes) drops its
+    members, so neither a disallowed nor a deleted doc can shadow a live
+    one out of the page. `k=None` disables the cut (the emit-all path of
+    an over-cap tombstone set or a broad allow list)."""
+    import pyarrow as pa
     import pyarrow.compute as pc
 
-    col = {nm: rb.column(i) for i, nm in enumerate(rb.schema.names)}
-    n_rows = rb.num_rows
-    bucket = col["bucket"].to_numpy(zero_copy_only=False).astype(np.int64)
-    n_docs = col["n_docs"].to_numpy(zero_copy_only=False).astype(np.int64)
-    # term identity per block via dictionary codes (no per-row strings)
-    term_enc = pc.dictionary_encode(col["term"])
-    t_codes = term_enc.indices.to_numpy(zero_copy_only=False)
-    terms = term_enc.dictionary.to_pylist()
+    dpb = docs_per_bucket
+    n_q = 1 + max(int(q.max()) for q, _ in term_info.values())
+    chunk = max(1, ACC_DOUBLES // dpb)
 
-    g = _flat_decode(col["doc_gaps"], n_rows).astype(np.int64)
-    t = _flat_decode(col["tfs"], n_rows).astype(np.float64)
-    l = _flat_decode(col["dls"], n_rows).astype(np.float64)
-    starts = np.zeros(n_rows, dtype=np.int64)
-    starts[1:] = np.cumsum(n_docs[:-1])
-    # docIDs: gap cumsum with a reset at each block start (first value
-    # of each block is absolute)
-    csum = np.cumsum(g)
-    corr = np.zeros(n_rows, dtype=np.int64)
-    corr[1:] = csum[starts[1:] - 1]
-    d_abs = csum - np.repeat(corr, n_docs)
-    out = {"bucket": bucket, "n_docs": n_docs, "starts": starts,
-           "t_codes": t_codes, "terms": terms, "d_abs": d_abs,
-           "tf": t, "dl": l}
-    if tf_norm:
-        out["tfn"] = t * (k1 + 1.0) / (t + k1 * (1.0 - b + b * l / avgdl))
-    return out
-
-
-def _make_bm25_many_kernel(term_qinfo: dict, n_queries: int, k1: float,
-                           b: float, avgdl: float, docs_per_bucket: int,
-                           k: int, excluded=None):
-    """mapInArrow kernel for BATCHED BM25: compressed posting blocks
-    (repartitioned + sorted by docID bucket) -> per-(query, bucket) exact
-    top-k rows (qcode, docID, score) — Q queries scored in ONE pass over
-    the UNION of their terms' blocks.
-
-    term_qinfo: term -> (int32[] query codes containing it, float64 idf).
-    A block is decoded ONCE; its idf·tfnorm contribution vector is
-    buffered per subscribing query, and at each bucket boundary every
-    touched query folds its buffered slices through one bincount into a
-    dense bucket-local accumulator + top-k cut (identical arithmetic and
-    tie handling to the single-query kernel, per query). Shared terms
-    across the query batch are therefore decoded and scored once, and
-    the whole batch costs ONE Spark job instead of Q — the throughput
-    shape a query frontend needs (per-job scheduling overhead amortizes
-    across the batch; measured ~N times fewer jobs at equal results).
-    """
-    import pyarrow as pa
+    def score_bucket(base, code, local, w, dl, qcs):
+        """(qcode, docID, score) parts of one bucket's cut; `code`
+        indexes a posting's term in `qcs`, its queries' qcodes."""
+        n_sub = np.array([len(q) for q in qcs])
+        first = np.cumsum(n_sub) - n_sub  # a term's offset in the qcodes
+        rep = n_sub[code]  # a posting fans out to rep entries
+        # entry j of a posting's fan-out takes its term's jth qcode
+        at = np.repeat(first[code] - (np.cumsum(rep) - rep), rep)
+        qc = np.concatenate(qcs)[at + np.arange(len(at))]
+        key, w = np.repeat(local, rep), np.repeat(w, rep)
+        key += qc * dpb
+        parts = []
+        for c0 in range(0, n_q, chunk):
+            n = min(chunk, n_q - c0)
+            if n < n_q:  # this chunk's entries, keyed from its first qcode
+                sel = (qc >= c0) & (qc < c0 + n)
+                acc = np.bincount(key[sel] - c0 * dpb, weights=w[sel],
+                                  minlength=n * dpb)
+            else:
+                acc = np.bincount(key, weights=w, minlength=n * dpb)
+            idx = np.flatnonzero(acc > 0)
+            loc = idx % dpb
+            if allowed is not None:
+                keep = _member(allowed, base + loc)
+                idx, loc = idx[keep], loc[keep]
+            if excluded is not None:
+                keep = ~_member(excluded, base + loc)
+                idx, loc = idx[keep], loc[keep]
+            score = acc[idx]
+            if finalize is not None:
+                dlv = np.zeros(dpb)
+                dlv[local] = dl  # every posting of a doc stores its dl
+                score = finalize(score, dlv[loc])
+            group = idx // dpb
+            top = _cut_topk(group, score, k)
+            parts.append((group[top] + c0, base + loc[top], score[top]))
+        return parts
 
     def kernel(batches):
-        cur_bucket = None
-        bufs: dict = {}  # qcode -> list[(local_idx slice, score slice)]
-        out_q: list = []
-        out_d: list = []
-        out_s: list = []
-
-        def flush():
-            nonlocal cur_bucket, bufs
-            if cur_bucket is None:
-                return
-            for qc, parts in bufs.items():
-                ld = np.concatenate([p[0] for p in parts])
-                sc = np.concatenate([p[1] for p in parts])
-                acc = np.bincount(ld, weights=sc, minlength=docs_per_bucket)
-                idxs = np.flatnonzero(acc)
-                if not len(idxs):
-                    continue
-                s = acc[idxs]
-                glob = idxs.astype(np.int64) + cur_bucket * docs_per_bucket
-                if excluded is not None and len(excluded):
-                    # tombstoned docs drop BEFORE the per-query cut
-                    # (same contract as the single-query kernel)
-                    p = np.searchsorted(excluded, glob)
-                    p[p == len(excluded)] = 0
-                    live = excluded[p] != glob
-                    glob, s = glob[live], s[live]
-                    if not len(glob):
-                        continue
-                if len(glob) > k:
-                    thresh = np.partition(s, len(s) - k)[len(s) - k]
-                    keep = s >= thresh  # keep ALL kth-score ties
-                    glob, s = glob[keep], s[keep]
-                out_q.append(np.full(len(glob), qc, dtype=np.int32))
-                out_d.append(glob)
-                out_s.append(s.copy())
-            cur_bucket = None
-            bufs = {}
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            dec = _decode_scored_batch(rb, k1, b, avgdl)
-            bucket, n_docs, starts = dec["bucket"], dec["n_docs"], dec["starts"]
-            qinfo_of_code = [term_qinfo.get(t) for t in dec["terms"]]
-            local = dec["d_abs"] - np.repeat(bucket, n_docs) * docs_per_bucket
-            tfn = dec["tfn"]
-            ends = starts + n_docs
-            for i in range(rb.num_rows):
-                info = qinfo_of_code[dec["t_codes"][i]]
-                if info is None:
-                    continue  # safety: a block of a term no query uses
-                qcs, idf = info
-                bkt = int(bucket[i])
-                if bkt != cur_bucket:
-                    flush()
-                    cur_bucket = bkt
-                s, e = starts[i], ends[i]
-                contrib = idf * tfn[s:e]
-                ld = local[s:e]
-                for qc in qcs:
-                    bufs.setdefault(int(qc), []).append((ld, contrib))
-        flush()
-        if out_d:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(out_q), type=pa.int32()),
-                 pa.array(np.concatenate(out_d), type=pa.int64()),
-                 pa.array(np.concatenate(out_s), type=pa.float64())],
-                names=["qcode", "docID", "score"])
-
-    return kernel
-
-
-def _make_bm25_kernel(idf_map: dict, k1: float, b: float, avgdl: float,
-                      docs_per_bucket: int, k, allowed=None,
-                      excluded=None):
-    """mapInArrow kernel: compressed posting blocks (repartitioned by
-    docID bucket, sorted by bucket) -> per-bucket exact BM25 top-k rows.
-
-    A bucket is a complete docID range: every query-term posting of a
-    docID lives in that docID's bucket, so per-bucket score sums are the
-    FINAL per-doc scores and a per-bucket top-k is globally safe. The
-    aggregation is a dense numpy accumulator indexed by bucket-local
-    docID — the shuffle moves ~blocks compressed rows instead of the
-    decoded posting stream (at 1M docs: 2*10^4 block rows vs 10^6+
-    posting rows through a hash aggregate). Ties at the kth score are
-    ALL emitted so the global (score desc, docID asc) order stays exact.
-
-    Filtered mode (bm25_filtered): `allowed` is a SORTED int64 array of
-    admissible docIDs — scored docs outside it are dropped BEFORE the
-    per-bucket cut, so the filtered top-k is exact, not a re-filter of
-    the unfiltered page. `k=None` disables the per-bucket cut entirely
-    (the emit-all path a downstream join-filter needs when the allowed
-    set is too large to ship to every task).
-
-    `excluded` is the mirror image for TOMBSTONED docIDs (sorted int64;
-    streaming deletes pending compaction): members are dropped before
-    the cut, so a deleted doc can never shadow a live doc out of the
-    page — filtering the unfiltered top-k after the fact would.
-    """
-    import pyarrow as pa
-
-    def kernel(batches):
-        cur_bucket = None
-        acc = None
-        out_d: list = []
-        out_s: list = []
-
-        def flush():
-            nonlocal cur_bucket, acc
-            if cur_bucket is None:
-                return
-            idxs = np.flatnonzero(acc)  # partial scores are strictly > 0
-            if len(idxs):
-                sc = acc[idxs]
-                glob = idxs.astype(np.int64) + cur_bucket * docs_per_bucket
-                if allowed is not None:
-                    if len(allowed) == 0:
-                        member = np.zeros(len(glob), dtype=bool)
-                    else:
-                        p = np.searchsorted(allowed, glob)
-                        p[p == len(allowed)] = 0
-                        member = allowed[p] == glob
-                    glob, sc = glob[member], sc[member]
-                if excluded is not None and len(excluded) and len(glob):
-                    p = np.searchsorted(excluded, glob)
-                    p[p == len(excluded)] = 0
-                    live = excluded[p] != glob
-                    glob, sc = glob[live], sc[live]
-                if k is not None and len(glob) > k:
-                    thresh = np.partition(sc, len(sc) - k)[len(sc) - k]
-                    keep = sc >= thresh  # keep ALL kth-score ties
-                    glob, sc = glob[keep], sc[keep]
-                if len(glob):
-                    out_d.append(glob)
-                    out_s.append(sc.copy())
-            cur_bucket = None
-            acc = None
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            dec = _decode_scored_batch(rb, k1, b, avgdl)
-            bucket, n_docs, starts = dec["bucket"], dec["n_docs"], dec["starts"]
-            n_rows = rb.num_rows
-            idf_of_code = np.array([idf_map[t] for t in dec["terms"]])
-            score = np.repeat(idf_of_code[dec["t_codes"]], n_docs) * dec["tfn"]
-            local = dec["d_abs"] - np.repeat(bucket, n_docs) * docs_per_bucket
-
-            # bucket segments at the POSTING level (rows sorted by bucket)
-            b_change = np.ones(n_rows, dtype=bool)
-            b_change[1:] = bucket[1:] != bucket[:-1]
-            seg_rows = np.flatnonzero(b_change)
-            seg_starts = starts[seg_rows]
-            seg_ends = np.append(seg_starts[1:], len(local))
-            for si, (s, e) in enumerate(zip(seg_starts, seg_ends)):
-                bkt = int(bucket[seg_rows[si]])
-                if bkt != cur_bucket:
-                    flush()
-                    cur_bucket = bkt
-                    acc = np.zeros(docs_per_bucket, dtype=np.float64)
-                acc += np.bincount(local[s:e], weights=score[s:e],
-                                   minlength=docs_per_bucket)
-        flush()
-        if out_d:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(out_d), type=pa.int64()),
-                 pa.array(np.concatenate(out_s), type=pa.float64())],
-                names=["docID", "score"])
-
-    return kernel
-
-
-def _make_qlm_kernel(w_map: dict, mu: float, qlen: int,
-                     docs_per_bucket: int, k, excluded=None):
-    """mapInArrow kernel: compressed posting blocks -> per-bucket exact
-    Dirichlet query-likelihood top-k rows (docID, score).
-
-    Rank-equivalent decomposition of log P(q|d) under Dirichlet
-    smoothing (Zhai & Lafferty, "A Study of Smoothing Methods for
-    Language Models Applied to Ad Hoc Information Retrieval",
-    SIGIR 2001):
-
-        score(d) = sum_{t in q, tf_td > 0} ln(1 + tf_td / w_t)
-                   + |q| * (ln mu - ln(mu + dl_d)),
-        w_t = mu * (cf_t / total_len)
-
-    (the doc-independent sum of ln(mu * p_t) is dropped — identical for
-    every doc, so ranks and score DELTAS are exact). Candidate set =
-    docs matching >=1 query term, the same inverted-index contract as
-    BM25's kernel; per-bucket sums are final because a bucket is a
-    complete docID range.
-
-    Same dense bucket-accumulator shape as _make_bm25_kernel with one
-    addition: a second per-bucket array carries dl by ASSIGNMENT (every
-    posting of a doc stores the same dl), so the length-normalization
-    term applies once per doc at flush, not once per matched term.
-    Matched-term contributions are strictly positive (tf >= 1), so
-    flatnonzero(acc) still finds exactly the candidate docs even though
-    final scores are negative.
-    """
-    import pyarrow as pa
-
-    log_mu = float(np.log(mu))
-
-    def kernel(batches):
-        cur_bucket = None
-        acc = None   # sum of ln(1 + tf/w_t) over matched query terms
-        dlv = None   # per-doc dl, assigned (not summed)
-        out_d: list = []
-        out_s: list = []
-
-        def flush():
-            nonlocal cur_bucket, acc, dlv
-            if cur_bucket is None:
-                return
-            idxs = np.flatnonzero(acc)
-            if len(idxs):
-                sc = acc[idxs] + qlen * (log_mu - np.log(mu + dlv[idxs]))
-                glob = idxs.astype(np.int64) + cur_bucket * docs_per_bucket
-                if excluded is not None and len(excluded):
-                    p = np.searchsorted(excluded, glob)
-                    p[p == len(excluded)] = 0
-                    live = excluded[p] != glob
-                    glob, sc = glob[live], sc[live]
-                if k is not None and len(glob) > k:
-                    thresh = np.partition(sc, len(sc) - k)[len(sc) - k]
-                    keep = sc >= thresh  # keep ALL kth-score ties
-                    glob, sc = glob[keep], sc[keep]
-                if len(glob):
-                    out_d.append(glob)
-                    out_s.append(sc.copy())
-            cur_bucket = None
-            acc = None
-            dlv = None
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            dec = _decode_scored_batch(rb, 0.0, 0.0, 1.0, tf_norm=False)
-            bucket, n_docs, starts = dec["bucket"], dec["n_docs"], dec["starts"]
-            n_rows = rb.num_rows
-            w_of_code = np.array([w_map[t] for t in dec["terms"]])
-            contrib = np.log(1.0 + dec["tf"]
-                             / np.repeat(w_of_code[dec["t_codes"]], n_docs))
-            local = dec["d_abs"] - np.repeat(bucket, n_docs) * docs_per_bucket
-
-            b_change = np.ones(n_rows, dtype=bool)
-            b_change[1:] = bucket[1:] != bucket[:-1]
-            seg_rows = np.flatnonzero(b_change)
-            seg_starts = starts[seg_rows]
-            seg_ends = np.append(seg_starts[1:], len(local))
-            for si, (s, e) in enumerate(zip(seg_starts, seg_ends)):
-                bkt = int(bucket[seg_rows[si]])
-                if bkt != cur_bucket:
-                    flush()
-                    cur_bucket = bkt
-                    acc = np.zeros(docs_per_bucket, dtype=np.float64)
-                    dlv = np.zeros(docs_per_bucket, dtype=np.float64)
-                acc += np.bincount(local[s:e], weights=contrib[s:e],
-                                   minlength=docs_per_bucket)
-                dlv[local[s:e]] = dec["dl"][s:e]
-        flush()
-        if out_d:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(out_d), type=pa.int64()),
-                 pa.array(np.concatenate(out_s), type=pa.float64())],
-                names=["docID", "score"])
+        for col in _bucket_runs(batches):
+            n_rows = len(col["term"])
+            n_docs, doc = _decode_docs(col, n_rows)
+            tf = _flat_decode(col["tfs"], n_rows).astype(np.float64)
+            dl = _flat_decode(col["dls"], n_rows).astype(np.float64)
+            enc = pc.dictionary_encode(col["term"])
+            qcs, params = zip(*(term_info[t]
+                                for t in enc.dictionary.to_pylist()))
+            code = np.repeat(enc.indices.to_numpy(zero_copy_only=False),
+                             n_docs)
+            w = weight(np.asarray(params)[code], tf, dl)
+            bucket = np.repeat(col["bucket"].to_numpy(zero_copy_only=False)
+                               .astype(np.int64), n_docs)
+            local = doc - bucket * dpb
+            starts = np.flatnonzero(np.diff(bucket, prepend=-1))
+            parts = []
+            for s, e in zip(starts, np.append(starts[1:], len(bucket))):
+                parts += score_bucket(int(bucket[s]) * dpb, code[s:e],
+                                      local[s:e], w[s:e], dl[s:e], qcs)
+            q, d, sc = (np.concatenate(p) for p in zip(*parts))
+            if len(d):
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(q, type=pa.int32()),
+                     pa.array(d, type=pa.int64()),
+                     pa.array(sc, type=pa.float64())],
+                    names=["qcode", "docID", "score"])
 
     return kernel
 
@@ -717,7 +551,7 @@ class QueryEngine:
         # Small sets (the steady state between compactions) ship into the
         # scoring and set kernels as a sorted array, exact BEFORE the
         # top-k cut. An over-cap set keeps the relational anti-join path
-        # only (bm25 then scores emit-all).
+        # only (the rankers then score emit-all, see _rank).
         self._tombstones = None
         self._tomb_arr = None
         if index.store.exists("tombstones"):
@@ -1090,38 +924,50 @@ class QueryEngine:
         n = self.stats["n_docs"]
         return float(np.log(1.0 + (n - df + 0.5) / (df + 0.5)))
 
-    def _score_blocks(self, blocks: DataFrame, idf_map: dict, k,
-                      allowed=None) -> DataFrame:
-        """Compressed blocks -> exact per-bucket BM25 top-k (docID, score).
+    def _rank(self, blocks: DataFrame, term_info: dict, weight, k,
+              allowed=None, finalize=None) -> DataFrame:
+        """Compressed blocks -> (qcode, docID, score): every query's
+        exact per-bucket top-k, from ONE rank kernel over the bucket
+        exchange (see _make_rank_kernel). Pending streaming deletes ride
+        every scoring pass (incl. the WAND θ0 seed — a threshold seeded
+        from a deleted doc's score could over-prune live docs): a small
+        tombstone set drops inside the kernel before the cut; an
+        over-cap one cannot ship, so the kernel emits every score and
+        the anti-join runs before the caller's own cut — exact."""
+        over_cap = self._tomb_arr is None and self._tombstones is not None
+        kernel = _make_rank_kernel(term_info, weight,
+                                   int(self.stats["docs_per_bucket"]),
+                                   None if over_cap else k, allowed,
+                                   self._tomb_arr, finalize)
+        scores = self._kernel_scan(blocks, kernel, schema=_RANK_SCHEMA)
+        return self._live(scores) if over_cap else scores
 
-        The shuffle key is the docID BUCKET and the payload is compressed
-        blocks — decode, scoring, aggregation and the first top-k cut all
-        happen inside one Arrow kernel (see _make_bm25_kernel). The
-        repartition carries no explicit partition count so AQE coalesces
-        the (tiny) block exchange."""
+    def _score_blocks(self, blocks: DataFrame, term_info: dict, k,
+                      allowed=None) -> DataFrame:
+        """BM25 over compressed blocks: `_rank` with the per-posting
+        weight idf·tfn (term_info: term -> (qcodes, idf), the idf
+        boosted or not)."""
         st = self.stats
-        # pending streaming deletes ride every scoring pass (incl. the
-        # WAND θ0 seed — a threshold seeded from a deleted doc's score
-        # could over-prune live docs)
-        kernel = _make_bm25_kernel(idf_map, float(st["k1"]), float(st["b"]),
-                                   float(st["avgdl"]) or 1.0,
-                                   int(st["docs_per_bucket"]), k,
-                                   allowed=allowed,
-                                   excluded=self._tomb_arr)
-        return self._kernel_scan(blocks, kernel)
+        weight = partial(_bm25_weight, float(st["k1"]), float(st["b"]),
+                         float(st["avgdl"]) or 1.0)
+        return self._rank(blocks, term_info, weight, k, allowed)
 
     def _kernel_scan(self, blocks: DataFrame, kernel, cols=_SCORE_COLS,
-                     schema: str = "docID long, score double") -> DataFrame:
-        """Repartition compressed blocks (their `cols`) by docID bucket
-        and run a bucket kernel over them — the shared physical plan of
-        every bucket-accumulator ranker (BM25, batched BM25,
-        query-likelihood) and of the set queries.
+                     schema: str = _RANK_SCHEMA) -> DataFrame:
+        """Repartition compressed blocks (their `cols`) by docID bucket,
+        sort each partition by bucket and run a bucket kernel over them
+        — the ONE physical plan of bucket-local query evaluation: the
+        rank kernel (BM25, batched BM25, query-likelihood) and the set
+        kernel both read it through `_bucket_runs`.
 
-        EXPLICIT partition count: the compressed-block exchange is tiny
-        in bytes but CPU-heavy per row, so AQE's size-based coalescing
-        would collapse it onto one core. One bucket = one docID range =
-        one unit of kernel work; 2x over-partitioning smooths hash
-        collisions among bucket keys."""
+        The shuffle key is the docID BUCKET and the payload is
+        compressed blocks, so decode, scoring or set algebra and the
+        first top-k cut all happen inside the kernel. EXPLICIT partition
+        count: the compressed-block exchange is tiny in bytes but
+        CPU-heavy per row, so AQE's size-based coalescing would collapse
+        it onto one core. One bucket = one docID range = one unit of
+        kernel work; 2x over-partitioning smooths hash collisions among
+        bucket keys."""
         st = self.stats
         n_buckets = max(1, -(-int(st["n_docs"]) // int(st["docs_per_bucket"])))
         n = max(1, min(int(self.spark.conf.get("spark.sql.shuffle.partitions")),
@@ -1130,12 +976,20 @@ class QueryEngine:
                 .repartition(n, "bucket").sortWithinPartitions("bucket")
                 .mapInArrow(kernel, schema=schema))
 
+    def _named_page(self, scores: DataFrame, k: int) -> DataFrame:
+        """The top k of a scored docID relation as (docID, score, name),
+        score desc, docID asc."""
+        top = scores.orderBy(F.desc("score"), F.asc("docID")).limit(k)
+        name = F.element_at(F.split(F.col("path"), "/"), -1).alias("name")
+        return (top.join(self._doc_map, "docID")
+                .select("docID", "score", name)
+                .orderBy(F.desc("score"), F.asc("docID")))
+
     def bm25(self, query: str, k: int = 10, wand: bool = True,
              wand_gate_blocks: int = 16384) -> DataFrame:
         """Free-text query -> top-k (docID, score, name), score desc, docID asc."""
-        terms = sorted({t for t in (normalize(tok) for tok in re.split(r"\s+", query.strip()))
-                        if t is not None})
-        return self._bm25_for_terms(terms, k, wand, wand_gate_blocks)
+        return self._bm25_for_terms(_query_terms(query), k, wand,
+                                    wand_gate_blocks)
 
     def bm25_boosted(self, boosts: dict, k: int = 10,
                      wand: bool = True) -> DataFrame:
@@ -1189,77 +1043,53 @@ class QueryEngine:
         # candidate postings), so with few buckets the seed approaches the
         # cost of just scoring everything. Dictionary stats are already in
         # hand, so the gate is free. At the 10^12-doc design point
-        # n_buckets ~ 1.5e7 and the gate is always open.
+        # n_buckets ~ 1.5e7 and the gate is always open. WAND stays off
+        # under an over-cap delete set: its θ0 seed would be cut before
+        # the anti-join drops the deleted docs.
         total_blocks = sum(int(stats[t]["n_blocks"]) for t in terms)
         n_buckets = max(1, -(-int(self.stats["n_docs"])
                              // int(self.stats["docs_per_bucket"])))
-        if self._tombstones is not None and self._tomb_arr is None:
-            # over-cap delete set: the kernel can't ship it, so score
-            # emit-all, anti-join, THEN cut — exact, and WAND stays off
-            # (its θ0 seed would be scored without the exclusion)
-            scores = (self._live(
-                self._score_blocks(self.blocks_for(terms), idf_map, None))
-                .orderBy(F.desc("score"), F.asc("docID")).limit(k))
+        over_cap = self._tomb_arr is None and self._tombstones is not None
+        if wand and not over_cap and total_blocks >= wand_gate_blocks \
+                and (n_buckets >= self.WAND_MIN_BUCKETS
+                     or wand_gate_blocks <= 0):
+            candidates = self._wand_candidate_blocks(terms, idf_map, k, stats)
         else:
-            if wand and total_blocks >= wand_gate_blocks \
-                    and (n_buckets >= self.WAND_MIN_BUCKETS
-                         or wand_gate_blocks <= 0):
-                candidates = self._wand_candidate_blocks(terms, idf_map, k,
-                                                         stats)
-            else:
-                candidates = self.blocks_for(terms)
-            scores = (self._score_blocks(candidates, idf_map, k)
-                      .orderBy(F.desc("score"), F.asc("docID")).limit(k))
-        name = F.element_at(F.split(F.col("path"), "/"), -1).alias("name")
-        return (scores.join(self._doc_map, "docID")
-                .select("docID", "score", name)
-                .orderBy(F.desc("score"), F.asc("docID")))
+            candidates = self.blocks_for(terms)
+        return self._named_page(
+            self._score_blocks(candidates, _lone(idf_map), k), k)
 
     def qlm(self, query: str, k: int = 10, mu: float = 2000.0) -> DataFrame:
         """Dirichlet-smoothed query-likelihood top-k (Zhai & Lafferty,
-        SIGIR 2001) — the classic language-model ranking alternative to
-        BM25, served from the SAME index tables: per-term smoothing mass
-        w_t = mu * cf_t / total_len comes from the dictionary's
-        collection frequencies, dl rides the postings, and the scoring
-        runs in the same bucket-accumulator Arrow kernel shape (one
-        compressed-block exchange keyed by docID bucket, per-bucket
-        exact top-k with kth-score ties kept). Candidate set = docs
-        containing >=1 query term (same contract as bm25). Returns
-        (docID, score, name), score desc, docID asc; scores are the
-        rank-equivalent form sum ln(1+tf/w_t) + |q|(ln mu - ln(mu+dl)),
-        negative for typical dl >> matched mass.
+        "A Study of Smoothing Methods for Language Models Applied to Ad
+        Hoc Information Retrieval", SIGIR 2001) — the classic
+        language-model ranking alternative to BM25, served from the SAME
+        index tables and the same rank kernel. Rank-equivalent
+        decomposition of log P(q|d) under Dirichlet smoothing:
 
-        Streaming deletes: small tombstone sets drop inside the kernel
-        BEFORE the per-bucket cut; an over-cap set falls back to
-        emit-all + anti-join + cut, exact (mirrors _bm25_for_terms).
+            score(d) = sum_{t in q, tf_td > 0} ln(1 + tf_td / w_t)
+                       + |q| * (ln mu - ln(mu + dl_d)),
+            w_t = mu * (cf_t / total_len)
+
+        (the doc-independent sum of ln(mu * p_t) is dropped — identical
+        for every doc, so ranks and score DELTAS are exact). The first
+        sum is the kernel's per-posting weight; the length term is its
+        per-doc finalize, applied once per candidate doc. Candidate set
+        = docs containing >=1 query term (same contract as bm25).
+        Returns (docID, score, name), score desc, docID asc; scores are
+        negative for typical dl >> matched mass. Pending deletes are
+        excluded as in bm25 (see _rank).
         """
-        terms = sorted({t for t in (normalize(tok)
-                                    for tok in re.split(r"\s+", query.strip()))
-                        if t is not None})
+        terms = _query_terms(query)
         stats = self.term_stats(terms)
         terms = [t for t in terms if t in stats]
         if not terms:
             return self._empty_scores()
-        st = self.stats
-        total_len = float(st["total_len"]) or 1.0
+        total_len = float(self.stats["total_len"]) or 1.0
         w_map = {t: mu * (float(stats[t]["cf"]) / total_len) for t in terms}
-        qlen = len(terms)
-        blocks = self.blocks_for(terms)
-        if self._tombstones is not None and self._tomb_arr is None:
-            kernel = _make_qlm_kernel(w_map, mu, qlen,
-                                      int(st["docs_per_bucket"]), None)
-            scores = (self._live(self._kernel_scan(blocks, kernel))
-                      .orderBy(F.desc("score"), F.asc("docID")).limit(k))
-        else:
-            kernel = _make_qlm_kernel(w_map, mu, qlen,
-                                      int(st["docs_per_bucket"]), k,
-                                      excluded=self._tomb_arr)
-            scores = (self._kernel_scan(blocks, kernel)
-                      .orderBy(F.desc("score"), F.asc("docID")).limit(k))
-        name = F.element_at(F.split(F.col("path"), "/"), -1).alias("name")
-        return (scores.join(self._doc_map, "docID")
-                .select("docID", "score", name)
-                .orderBy(F.desc("score"), F.asc("docID")))
+        scores = self._rank(self.blocks_for(terms), _lone(w_map), _qlm_weight, k,
+                            finalize=partial(_qlm_finalize, mu, len(terms)))
+        return self._named_page(scores, k)
 
     # ------------------------------------------------------------------
     # query-by-document ("more like this" — north-star addition)
@@ -1426,9 +1256,7 @@ class QueryEngine:
         terms excluded and w ROUNDED to 6 dp before the deterministic
         (w desc, term) cut (the engine-portable hard-cut discipline of
         more_like_this)."""
-        q_terms = sorted({t for t in (normalize(tok)
-                                      for tok in re.split(r"\s+", query.strip()))
-                          if t is not None})
+        q_terms = _query_terms(query)
         page = self._bm25_for_terms(q_terms, top_docs, True, 16384)
         ids = sorted(r["docID"] for r in page.collect())
         empty = self.spark.createDataFrame(
@@ -1472,9 +1300,7 @@ class QueryEngine:
         final page is engine-portable (driver gate prf_bm25 re-derives
         the whole two-pass pipeline relationally in DuckDB).
         """
-        q_terms = sorted({t for t in (normalize(tok)
-                                      for tok in re.split(r"\s+", query.strip()))
-                          if t is not None})
+        q_terms = _query_terms(query)
         stats = self.term_stats(q_terms)
         q_terms = [t for t in q_terms if t in stats]
         if not q_terms:
@@ -1523,33 +1349,25 @@ class QueryEngine:
         Scale paths are bm25_filtered's: a selective set ships as a
         sorted int64 array into the scoring kernel; a broad one becomes
         an AQE-planned docID join after emit-all scoring."""
-        terms = sorted({t for t in (normalize(tok)
-                                    for tok in re.split(r"\s+", query.strip()))
-                        if t is not None})
+        terms = _query_terms(query)
         stats = self.term_stats(terms)
         terms = [t for t in terms if t in stats]
         if not terms:
             return self._empty_scores()
-        idf_map = {t: self._idf(int(stats[t]["df"])) for t in terms}
-        # pending deletes leave the allowed set before it is shipped or
-        # joined (covers both paths; the kernel's excluded array would
-        # cover only the pushdown one)
-        allowed_df = self._live(allowed_docs.select("docID"))
+        idf = _lone({t: self._idf(int(stats[t]["df"])) for t in terms})
+        # pending deletes drop in _rank on both paths
+        allowed_df = allowed_docs.select("docID")
         cap = self.FILTER_PUSHDOWN_DOCS
         head = allowed_df.limit(cap + 1).collect()
         blocks = self.blocks_for(terms)
         if len(head) <= cap:
             allowed = np.sort(np.fromiter((r[0] for r in head), dtype=np.int64,
                                           count=len(head)))
-            scores = self._score_blocks(blocks, idf_map, k, allowed=allowed)
+            scores = self._score_blocks(blocks, idf, k, allowed=allowed)
         else:
-            scores = (self._score_blocks(blocks, idf_map, None)
+            scores = (self._score_blocks(blocks, idf, None)
                       .join(allowed_df, "docID"))
-        scores = scores.orderBy(F.desc("score"), F.asc("docID")).limit(k)
-        name = F.element_at(F.split(F.col("path"), "/"), -1).alias("name")
-        return (scores.join(self._doc_map, "docID")
-                .select("docID", "score", name)
-                .orderBy(F.desc("score"), F.asc("docID")))
+        return self._named_page(scores, k)
 
     def bm25_phrase(self, query: str, phrase: str, k: int = 10) -> DataFrame:
         """Phrase-constrained ranked retrieval — the '"exact phrase"
@@ -1576,8 +1394,9 @@ class QueryEngine:
         all queries' posting blocks + ONE bucket shuffle + ONE kernel
         pass: a block whose term appears in multiple queries is decoded
         and tf-normalized once and its idf-weighted contribution fans
-        out to each subscribing query inside the kernel
-        (_make_bm25_many_kernel). Engine addition beyond the reference
+        out to each subscribing query inside the rank kernel
+        (_make_rank_kernel). Pending deletes drop as in bm25 (see
+        _rank); the per-query window below is the final cut. Engine addition beyond the reference
         (QueryProcessor handles one query per call); the driver gate
         bm25_batch checks it against per-query DuckDB BM25 oracles.
 
@@ -1586,49 +1405,23 @@ class QueryEngine:
         dominant cost) — a latency-critical single query should use
         bm25(), which prunes."""
         items = sorted(dict(queries).items())
-        if self._tombstones is not None and self._tomb_arr is None:
-            # over-cap delete set: the batched kernel cuts per-bucket
-            # top-k and cannot ship the exclusion, so a deleted doc
-            # could hide a live one from the page — fall back to
-            # per-query bm25(), whose emit-all + anti-join path is exact
-            parts = [self.bm25(qs, k=k).withColumn("qid", F.lit(qid))
-                     for qid, qs in items]
-            return (reduce(DataFrame.union, parts)
-                    .select("qid", "docID", "score", "name")
-                    .orderBy("qid", F.desc("score"), F.asc("docID")))
-        per_q: dict = {}
-        all_terms: set = set()
-        for qid, qs in items:
-            terms = sorted({t for t in (normalize(tok)
-                                        for tok in re.split(r"\s+", qs.strip()))
-                            if t is not None})
-            per_q[qid] = terms
-            all_terms.update(terms)
-        stats = self.term_stats(sorted(all_terms))
-        term_qids: dict = {}
+        per_q = {qid: _query_terms(qs) for qid, qs in items}
+        stats = self.term_stats(sorted(set().union(*per_q.values())))
+        term_qcodes: dict = {}
         live: list = []  # qids with >=1 present term, in sorted order
         for qid, terms in per_q.items():
             present = [t for t in terms if t in stats]
-            if not present:
-                continue
-            qc = len(live)
-            live.append(qid)
-            for t in present:
-                term_qids.setdefault(t, []).append(qc)
+            if present:
+                for t in present:
+                    term_qcodes.setdefault(t, []).append(len(live))
+                live.append(qid)
         if not live:
             return self.spark.createDataFrame(
                 [], "qid string, docID long, score double, name string")
-        term_qinfo = {
-            t: (np.asarray(qcs, dtype=np.int32),
-                self._idf(int(stats[t]["df"])))
-            for t, qcs in term_qids.items()}
-        st = self.stats
-        kernel = _make_bm25_many_kernel(
-            term_qinfo, len(live), float(st["k1"]), float(st["b"]),
-            float(st["avgdl"]) or 1.0, int(st["docs_per_bucket"]), k,
-            excluded=self._tomb_arr)
-        scored = self._kernel_scan(self.blocks_for(sorted(term_qinfo)), kernel,
-                                   schema="qcode int, docID long, score double")
+        term_info = {t: (np.asarray(qcs), self._idf(int(stats[t]["df"])))
+                     for t, qcs in term_qcodes.items()}
+        scored = self._score_blocks(self.blocks_for(sorted(term_info)),
+                                    term_info, k)
         from pyspark.sql import Window
         qmap = F.broadcast(self.spark.createDataFrame(
             [(i, q) for i, q in enumerate(live)], "qcode int, qid string"))
@@ -1673,15 +1466,8 @@ class QueryEngine:
         """
         from pyspark.sql import Window
         items = sorted(dict(queries).items())
-        per_q: dict = {}
-        all_terms: set = set()
-        for qid, qs in items:
-            terms = sorted({t for t in (normalize(tok)
-                                        for tok in re.split(r"\s+", qs.strip()))
-                            if t is not None})
-            per_q[qid] = terms
-            all_terms.update(terms)
-        stats = self.term_stats(sorted(all_terms))
+        per_q = {qid: _query_terms(qs) for qid, qs in items}
+        stats = self.term_stats(sorted(set().union(*per_q.values())))
         qt_rows = [(qid, t) for qid, ts in per_q.items()
                    for t in ts if t in stats]
         if not qt_rows:
@@ -1760,15 +1546,8 @@ class QueryEngine:
         """
         from pyspark.sql import Window
         items = sorted(dict(queries).items())
-        per_q: dict = {}
-        all_terms: set = set()
-        for qid, qs in items:
-            terms = sorted({t for t in (normalize(tok)
-                                        for tok in re.split(r"\s+", qs.strip()))
-                            if t is not None})
-            per_q[qid] = terms
-            all_terms.update(terms)
-        stats = self.term_stats(sorted(all_terms))
+        per_q = {qid: _query_terms(qs) for qid, qs in items}
+        stats = self.term_stats(sorted(set().union(*per_q.values())))
         qt_rows = [(qid, t) for qid, ts in per_q.items()
                    for t in ts if t in stats]
         if not qt_rows:
@@ -1998,9 +1777,7 @@ class QueryEngine:
         with an O(occ^2) relational formulation — algorithm-diverse
         equality, like the banded/all-pairs dedup gates."""
         top_rows = self.bm25(query, k=k, wand=wand).collect()
-        terms = sorted({t for t in (normalize(tok)
-                                    for tok in re.split(r"\s+", query.strip()))
-                        if t is not None})
+        terms = _query_terms(query)
         stats = self.term_stats(terms)
         terms = [t for t in terms if t in stats]
         if not top_rows or not terms:
@@ -2073,7 +1850,7 @@ class QueryEngine:
         """Exact kth score inside one docID bucket (a small decode job) —
         a valid WAND threshold because its k docs' scores are REAL."""
         seed_blocks = blocks.filter(F.col("bucket") == best_bucket)
-        seed_scores = (self._score_blocks(seed_blocks, idf_map, k)
+        seed_scores = (self._score_blocks(seed_blocks, _lone(idf_map), k)
                        .orderBy(F.desc("score")).limit(k).collect())
         if len(seed_scores) < k:
             return None  # not enough docs for a safe threshold

@@ -87,14 +87,24 @@ def test_set_query_is_one_bucket_kernel(synth_engine, name):
         assert node not in plan, plan
 
 
+RANKERS = {
+    "bm25": lambda e: e.bm25("sym0 sym1 sym2", k=5),
+    "qlm": lambda e: e.qlm("sym0 sym1 sym2", k=5),
+    "bm25_many": lambda e: e.bm25_many(
+        {"a": "sym0 sym1", "b": "sym1 sym2", "c": "needle"}, k=5),
+}
+
+
 @pytest.mark.parametrize("name, budget", [
     ("boolean", 2), ("boolean_not", 2), ("positional", 2), ("phrase", 2),
     # + the one dictionary probe that resolves every token
     ("joker", 3),
     # measured: scoring exchange, top-k cut and the doc_map name join
-    ("bm25", 5)])
+    ("bm25", 5), ("qlm", 5),
+    # + the per-query window's exchange and the qid map
+    ("bm25_many", 7)])
 def test_query_job_budget(synth_engine, name, budget):
-    run = SET_QUERIES.get(name, lambda e: e.bm25("sym0 sym1 sym2", k=5))
+    run = {**SET_QUERIES, **RANKERS}[name]
     run(synth_engine).collect()  # warm the term cache and cached tables
     sc = synth_engine.spark.sparkContext
     group = f"query_budget_{name}"

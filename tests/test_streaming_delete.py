@@ -118,6 +118,56 @@ def test_set_queries_exclude_deletes_on_both_tombstone_gates(
             assert got == want, (cls, q, qe._tomb_arr)
 
 
+RANKERS = {
+    "bm25": lambda qe, q, k: qe.bm25(q, k=k, wand=False),
+    "bm25_wand": lambda qe, q, k: qe.bm25(q, k=k, wand=True,
+                                          wand_gate_blocks=0),
+    "qlm": lambda qe, q, k: qe.qlm(q, k=k),
+    "bm25_many": lambda qe, q, k: qe.bm25_many(
+        {"q1": q, "q2": "streaming pen"}, k=k),
+    # the allow list holds the deleted doc: the ranker must drop it
+    "bm25_within": lambda qe, q, k: qe.bm25_within(
+        q, qe._doc_map.select("docID"), k=k),
+}
+
+
+def _page(rows):
+    return [(r.asDict().get("qid"), r["name"], round(r["score"], 9))
+            for r in rows]
+
+
+def test_rankers_exclude_deletes_on_both_tombstone_gates(
+        spark, work_dir, monkeypatch):
+    """Every ranker drops a pending delete BEFORE its top-k cut on both
+    sides of TOMBSTONE_PUSHDOWN_DOCS: at the default the tombstones ship
+    into the rank kernel; at 0 (over the cap) the kernel emits every
+    score and the anti-join runs before the cut. Either way the page is
+    the pre-delete ranking minus the deleted doc, still k rows long."""
+    inc = _grown_index(spark, work_dir, "del_rank_idx")
+    before = QueryEngine(inc.index())
+    q, k = "fell already", 2
+    # k=10 covers every doc of the index: the full pre-delete ranking
+    full = {name: _page(run(before, q, 10).collect())
+            for name, run in RANKERS.items()}
+    inc.delete_batch(_keys(spark, [("ref/testing_files", "test6.txt")]),
+                     batch_id=2)
+    kernel_side = QueryEngine(inc.index())
+    monkeypatch.setattr(QueryEngine, "TOMBSTONE_PUSHDOWN_DOCS", 0)
+    join_side = QueryEngine(inc.index())
+    assert kernel_side._tomb_arr is not None
+    assert join_side._tomb_arr is None and join_side._tombstones is not None
+    for name, run in RANKERS.items():
+        page = full[name]
+        # the deleted doc is inside the pre-delete cut, so it matters
+        assert "test6.txt" in [n for _, n, _ in page[:k]], name
+        want = []
+        for qid in dict.fromkeys(qid for qid, _, _ in page):
+            want += [r for r in page
+                     if r[0] == qid and r[1] != "test6.txt"][:k]
+        for qe in (kernel_side, join_side):
+            assert _page(run(qe, q, k).collect()) == want, (name, qe._tomb_arr)
+
+
 def test_delete_crash_retry_and_replay(spark, work_dir):
     inc = _grown_index(spark, work_dir, "del_retry_idx")
     keys = _keys(spark, [("ref/testing_files", "test6.txt")])
