@@ -434,8 +434,8 @@ def _make_fragment_encoder(cfg: "IndexConfig", avgdl: float,
     is bounded by docs_per_bucket postings."""
     import pyarrow as pa
     import pyarrow.compute as pc
+
     from .codec import flat_decode, member, segmented_cumsum
-    from .codec import flat_decode, segmented_cumsum
 
     k1, b_, B = cfg.k1, cfg.b, cfg.docs_per_block
     blocks_per_bucket = cfg.blocks_per_bucket

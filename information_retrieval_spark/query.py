@@ -365,10 +365,6 @@ def _min_window_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
                          "n_terms": [need]})
 
 
-# one bucket's score accumulator holds at most this many doubles: a
-# query batch wider than ACC_DOUBLES // docs_per_bucket is scored in
-# qcode chunks of that width
-ACC_DOUBLES = 1 << 22
 _RANK_SCHEMA = "qcode int, docID long, score double"
 
 
@@ -395,19 +391,13 @@ def _qlm_finalize(mu: float, qlen: int, score, dl):
     return score + qlen * (np.log(mu) - np.log(mu + dl))
 
 
-def _cut_topk(group, score, k) -> np.ndarray:
-    """Mask of the rows that reach their group's kth best score — every
-    kth-score tie stays, so the global (score desc, docID asc) order
-    downstream is exact. `group` is ascending; k=None keeps every row."""
-    keep = np.ones(len(score), dtype=bool)
-    if k is None:
-        return keep
-    starts = np.flatnonzero(np.diff(group, prepend=-1))
-    for s, e in zip(starts, np.append(starts[1:], len(group))):
-        if e - s > k:
-            thresh = np.partition(score[s:e], e - s - k)[e - s - k]
-            keep[s:e] = score[s:e] >= thresh
-    return keep
+def _cut_topk(score, k) -> np.ndarray:
+    """Mask of the scores that reach the kth best — every kth-score tie
+    stays, so the global (score desc, docID asc) order downstream is
+    exact. k=None keeps every score."""
+    if k is None or len(score) <= k:
+        return np.ones(len(score), dtype=bool)
+    return score >= np.partition(score, len(score) - k)[len(score) - k]
 
 
 def _make_rank_kernel(term_info: dict, weight, docs_per_bucket: int, k,
@@ -426,61 +416,54 @@ def _make_rank_kernel(term_info: dict, weight, docs_per_bucket: int, k,
     A bucket is a complete docID range: every posting of a docID lives
     in that docID's bucket, so per-bucket sums are the FINAL per-doc
     scores and a per-bucket top-k is globally safe. Each run of complete
-    buckets (`_bucket_runs`) decodes and weighs its postings once; a
-    posting then fans out to every query holding its term, so a term
-    shared across a batch is decoded and weighted once. Per bucket, ONE
-    dense bincount over the flattened key qcode·docs_per_bucket + local
-    docID sums the scores (at most ACC_DOUBLES wide: wider batches go in
-    qcode chunks). Contributions are strictly positive, so the
-    accumulator's non-zeros are exactly the candidate docs. Then, before
-    the cut: `allowed` (sorted int64, bm25_within) keeps only its members
-    and `excluded` (sorted int64, pending streaming deletes) drops its
-    members, so neither a disallowed nor a deleted doc can shadow a live
-    one out of the page. `k=None` disables the cut (the emit-all path of
-    an over-cap tombstone set or a broad allow list)."""
+    buckets (`_bucket_runs`) decodes and weighs its postings once, so a
+    term shared across a batch is decoded and weighted once. Per bucket
+    and query, a dense accumulator indexed by local docID sums the
+    scores of the query's terms. Contributions are strictly positive,
+    so the accumulator's non-zeros are exactly the candidate docs.
+    Then, before the cut: `allowed` (sorted int64, bm25_within) keeps
+    only its members and `excluded` (sorted int64, pending streaming
+    deletes) drops its members, so neither a disallowed nor a deleted
+    doc can shadow a live one out of the page. `k=None` disables the
+    cut (the emit-all path of an over-cap tombstone set or a broad allow
+    list)."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     dpb = docs_per_bucket
-    n_q = 1 + max(int(q.max()) for q, _ in term_info.values())
-    chunk = max(1, ACC_DOUBLES // dpb)
 
     def score_bucket(base, code, local, w, dl, qcs):
         """(qcode, docID, score) parts of one bucket's cut; `code`
-        indexes a posting's term in `qcs`, its queries' qcodes."""
-        n_sub = np.array([len(q) for q in qcs])
-        first = np.cumsum(n_sub) - n_sub  # a term's offset in the qcodes
-        rep = n_sub[code]  # a posting fans out to rep entries
-        # entry j of a posting's fan-out takes its term's jth qcode
-        at = np.repeat(first[code] - (np.cumsum(rep) - rep), rep)
-        qc = np.concatenate(qcs)[at + np.arange(len(at))]
-        key, w = np.repeat(local, rep), np.repeat(w, rep)
-        key += qc * dpb
+        indexes a posting's term in `qcs`, its queries' qcodes. The
+        exchange sorts a bucket's blocks by term and a term lists a doc
+        at most once, so each of a query's terms adds its postings
+        straight into the query's dense row: no posting is copied per
+        query, and a bucket holds one row of docs_per_bucket doubles at
+        a time whatever the batch width."""
+        seg = np.flatnonzero(np.diff(code, prepend=-1))
+        spans: dict = {}  # qcode -> its terms' posting ranges
+        for s, e in zip(seg, np.append(seg[1:], len(code))):
+            for q in qcs[code[s]]:
+                spans.setdefault(int(q), []).append((s, e))
+        if finalize is not None:
+            dlv = np.zeros(dpb)
+            dlv[local] = dl  # every posting of a doc stores its dl
         parts = []
-        for c0 in range(0, n_q, chunk):
-            n = min(chunk, n_q - c0)
-            if n < n_q:  # this chunk's entries, keyed from its first qcode
-                sel = (qc >= c0) & (qc < c0 + n)
-                acc = np.bincount(key[sel] - c0 * dpb, weights=w[sel],
-                                  minlength=n * dpb)
-            else:
-                acc = np.bincount(key, weights=w, minlength=n * dpb)
-            idx = np.flatnonzero(acc > 0)
-            loc = idx % dpb
+        for q, ranges in sorted(spans.items()):
+            acc = np.zeros(dpb)
+            for s, e in ranges:
+                acc[local[s:e]] += w[s:e]
+            loc = np.flatnonzero(acc)
             if allowed is not None:
-                keep = _member(allowed, base + loc)
-                idx, loc = idx[keep], loc[keep]
+                loc = loc[_member(allowed, base + loc)]
             if excluded is not None:
-                keep = ~_member(excluded, base + loc)
-                idx, loc = idx[keep], loc[keep]
-            score = acc[idx]
+                loc = loc[~_member(excluded, base + loc)]
+            score = acc[loc]
             if finalize is not None:
-                dlv = np.zeros(dpb)
-                dlv[local] = dl  # every posting of a doc stores its dl
                 score = finalize(score, dlv[loc])
-            group = idx // dpb
-            top = _cut_topk(group, score, k)
-            parts.append((group[top] + c0, base + loc[top], score[top]))
+            top = _cut_topk(score, k)
+            parts.append((np.full(int(top.sum()), q), base + loc[top],
+                          score[top]))
         return parts
 
     def kernel(batches):
@@ -933,8 +916,11 @@ class QueryEngine:
         from a deleted doc's score could over-prune live docs): a small
         tombstone set drops inside the kernel before the cut; an
         over-cap one cannot ship, so the kernel emits every score and
-        the anti-join runs before the caller's own cut — exact."""
-        over_cap = self._tomb_arr is None and self._tombstones is not None
+        the anti-join runs before the caller's own cut — exact. An
+        `allowed` array must already be live (bm25_within builds it
+        from a live relation), so the kernel keeps its cut."""
+        over_cap = (allowed is None and self._tomb_arr is None
+                    and self._tombstones is not None)
         kernel = _make_rank_kernel(term_info, weight,
                                    int(self.stats["docs_per_bucket"]),
                                    None if over_cap else k, allowed,
@@ -955,7 +941,7 @@ class QueryEngine:
     def _kernel_scan(self, blocks: DataFrame, kernel, cols=_SCORE_COLS,
                      schema: str = _RANK_SCHEMA) -> DataFrame:
         """Repartition compressed blocks (their `cols`) by docID bucket,
-        sort each partition by bucket and run a bucket kernel over them
+        sort each partition by (bucket, term) and run a bucket kernel over them
         — the ONE physical plan of bucket-local query evaluation: the
         rank kernel (BM25, batched BM25, query-likelihood) and the set
         kernel both read it through `_bucket_runs`.
@@ -973,7 +959,8 @@ class QueryEngine:
         n = max(1, min(int(self.spark.conf.get("spark.sql.shuffle.partitions")),
                        2 * n_buckets))
         return (blocks.select(*cols)
-                .repartition(n, "bucket").sortWithinPartitions("bucket")
+                .repartition(n, "bucket")
+                .sortWithinPartitions("bucket", "term")
                 .mapInArrow(kernel, schema=schema))
 
     def _named_page(self, scores: DataFrame, k: int) -> DataFrame:
@@ -1355,10 +1342,13 @@ class QueryEngine:
         if not terms:
             return self._empty_scores()
         idf = _lone({t: self._idf(int(stats[t]["df"])) for t in terms})
-        # pending deletes drop in _rank on both paths
+        # pending deletes: a small set drops in the kernel; an over-cap
+        # one leaves the allow list before it ships (the broad path's
+        # scores come out of _rank live already)
         allowed_df = allowed_docs.select("docID")
         cap = self.FILTER_PUSHDOWN_DOCS
-        head = allowed_df.limit(cap + 1).collect()
+        head = (allowed_df if self._tomb_arr is not None
+                else self._live(allowed_df)).limit(cap + 1).collect()
         blocks = self.blocks_for(terms)
         if len(head) <= cap:
             allowed = np.sort(np.fromiter((r[0] for r in head), dtype=np.int64,

@@ -9,7 +9,6 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
-from information_retrieval_spark import query
 from information_retrieval_spark.codec import gap_encode, vb_encode
 from information_retrieval_spark.query import (
     _bm25_weight, _make_rank_kernel, _qlm_finalize, _qlm_weight)
@@ -141,15 +140,18 @@ def test_lone_query_is_its_slice_of_the_batch():
         assert lone == {(0, d): s for (qc, d), s in many.items() if qc == q}
 
 
-def test_qcodes_beyond_one_accumulator_chunk(monkeypatch):
+def test_wide_batch_matches_reference():
+    # more queries than the 64 rows a 2^22-double (qcode, doc) block of
+    # 65 536-doc buckets would hold, every term shared by many of them
     post, dl = _postings()
-    batches = _batches(post, dl, QUERIES, 3)
-    info = _info(QUERIES, IDF)
-    whole = _run(_make_rank_kernel(info, BM25, DPB, 2), batches)
-    monkeypatch.setattr(query, "ACC_DOUBLES", 2 * DPB)  # 2 qcodes a chunk
-    chunked = _run(_make_rank_kernel(info, BM25, DPB, 2), batches)
-    assert chunked == whole
-    _check(chunked, _reference(post, dl, QUERIES, IDF, BM25, 2))
+    rng = np.random.RandomState(3)
+    terms = sorted(IDF)
+    wide = [[t for t in terms if rng.rand() < 0.5] or ["a"]
+            for _ in range(70)]
+    got = _run(_make_rank_kernel(_info(wide, IDF), BM25, DPB, 2),
+               _batches(post, dl, wide, 3))
+    _check(got, _reference(post, dl, wide, IDF, BM25, 2))
+    assert {q for q, _ in got} == set(range(70))
 
 
 def test_allowed_and_excluded():
