@@ -376,7 +376,8 @@ def _lone(params: dict) -> dict:
 
 
 def _bm25_weight(k1: float, b: float, avgdl: float, idf, tf, dl):
-    """Per-posting BM25 contribution idf·tf(k1+1)/(tf + k1(1-b+b·dl/avgdl))."""
+    """Per-posting BM25 contribution
+    idf·tf(k1+1)/(tf + k1(1-b+b·dl/avgdl))."""
     return idf * (tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl)))
 
 
@@ -403,9 +404,9 @@ def _cut_topk(score, k) -> np.ndarray:
 def _make_rank_kernel(term_info: dict, weight, docs_per_bucket: int, k,
                       allowed=None, excluded=None, finalize=None):
     """mapInArrow kernel of every ranker (BM25, boosted and batched BM25,
-    query-likelihood): compressed posting blocks (repartitioned + sorted
-    by docID bucket) -> per-(query, bucket) exact top-k rows
-    (qcode, docID, score).
+    query-likelihood): compressed posting blocks (repartitioned by docID
+    bucket, sorted by bucket and term) -> per-(query, bucket) exact top-k
+    rows (qcode, docID, score).
 
     `term_info` maps each term to (the qcodes of the queries holding
     it, its weight parameter); a lone query is qcode 0.
@@ -941,10 +942,11 @@ class QueryEngine:
     def _kernel_scan(self, blocks: DataFrame, kernel, cols=_SCORE_COLS,
                      schema: str = _RANK_SCHEMA) -> DataFrame:
         """Repartition compressed blocks (their `cols`) by docID bucket,
-        sort each partition by (bucket, term) and run a bucket kernel over them
-        — the ONE physical plan of bucket-local query evaluation: the
-        rank kernel (BM25, batched BM25, query-likelihood) and the set
-        kernel both read it through `_bucket_runs`.
+        sort each partition by (bucket, term) and run a bucket kernel
+        over them — the ONE physical plan of bucket-local query
+        evaluation: the rank kernel (BM25, batched BM25,
+        query-likelihood) and the set kernel both read it through
+        `_bucket_runs`.
 
         The shuffle key is the docID BUCKET and the payload is
         compressed blocks, so decode, scoring or set algebra and the
@@ -1074,7 +1076,8 @@ class QueryEngine:
             return self._empty_scores()
         total_len = float(self.stats["total_len"]) or 1.0
         w_map = {t: mu * (float(stats[t]["cf"]) / total_len) for t in terms}
-        scores = self._rank(self.blocks_for(terms), _lone(w_map), _qlm_weight, k,
+        scores = self._rank(self.blocks_for(terms), _lone(w_map),
+                            _qlm_weight, k,
                             finalize=partial(_qlm_finalize, mu, len(terms)))
         return self._named_page(scores, k)
 
@@ -1383,11 +1386,12 @@ class QueryEngine:
         interactive index. Here the batch costs ONE scan of the UNION of
         all queries' posting blocks + ONE bucket shuffle + ONE kernel
         pass: a block whose term appears in multiple queries is decoded
-        and tf-normalized once and its idf-weighted contribution fans
-        out to each subscribing query inside the rank kernel
+        and tf-normalized once, and its idf-weighted contribution adds
+        into each subscribing query's row inside the rank kernel
         (_make_rank_kernel). Pending deletes drop as in bm25 (see
-        _rank); the per-query window below is the final cut. Engine addition beyond the reference
-        (QueryProcessor handles one query per call); the driver gate
+        _rank); the per-query window below is the final cut. Engine
+        addition beyond the reference (QueryProcessor handles one query
+        per call); the driver gate
         bm25_batch checks it against per-query DuckDB BM25 oracles.
 
         WAND pruning is not applied across a batch (each query would
