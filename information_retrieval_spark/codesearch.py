@@ -29,10 +29,10 @@ SCANNED, never the answer.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .io import materialize_once
 
 TRIGRAM_N = 3
 # AND-ing more than this many grams stops paying: each extra gram is
@@ -65,11 +65,7 @@ def trigram_postings(df: DataFrame, id_col: str = "doc_id",
                     F.explode(grams).alias("gram"))
           .distinct())
     if postings_path is not None:
-        if not os.path.exists(os.path.join(postings_path, "_SUCCESS")):
-            (sh.sortWithinPartitions("gram")
-             .write.mode("overwrite").parquet(postings_path))
-        spark = df.sparkSession
-        return spark.read.parquet(postings_path)
+        return materialize_once(sh.sortWithinPartitions("gram"), postings_path)
     return sh
 
 

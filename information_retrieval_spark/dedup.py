@@ -34,7 +34,11 @@ Scale notes (100 TB / 10^12 docs):
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 from functools import reduce
 
 import numpy as np
@@ -42,6 +46,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import plan_policy
+from .io import materialize_once
 from .normalize import spark_tokens_expr
 
 
@@ -221,14 +226,29 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
                                     for i in range(num_hashes)]).alias("minhash")))
 
 
-def _minhash_bands_expr(num_hashes: int, band_size: int):
-    """Exploded (band, band_key) struct array over the `minhash` column."""
+def minhash_bands(sig: DataFrame, num_hashes: int, band_size: int,
+                  key: str = "id") -> DataFrame:
+    """(key, band, band_key) rows of a (key, minhash) signature table,
+    one per LSH band: band_key is the ':'-joined minhashes of the band
+    in slot order."""
     n_bands = num_hashes // band_size
-    return F.explode(F.array(*[
+    bk = F.explode(F.array(*[
         F.struct(F.lit(b).alias("band"),
                  F.concat_ws(":", *[F.col("minhash")[b * band_size + j]
                                     for j in range(band_size)]).alias("band_key"))
         for b in range(n_bands)])).alias("bk")
+    return sig.select(key, bk).select(
+        key, F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
+
+
+def band_pairs(banded: DataFrame, key: str = "id", a: str = "id_a",
+               b: str = "id_b") -> DataFrame:
+    """(a, b) with a < b for every band bucket two rows of `banded`
+    share — once per shared band, so callers take the distinct."""
+    left = banded.select(F.col(key).alias(a), "band", "band_key")
+    right = banded.select(F.col(key).alias(b), "band", "band_key")
+    return (left.join(right, ["band", "band_key"])
+            .filter(F.col(a) < F.col(b)).select(a, b))
 
 
 def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
@@ -274,15 +294,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                              features=features)
     if plan_policy.above(df, "collapse"):
         return _minhash_pairs_collapsed(sig, num_hashes, band_size)
-    banded = sig.select("id", _minhash_bands_expr(num_hashes, band_size)).select(
-        "id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
-    l = banded.select(F.col("id").alias("id_a"), "band", "band_key")
-    r = banded.select(F.col("id").alias("id_b"), "band", "band_key")
-    return (
-        l.join(r, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b").distinct()
-    )
+    return band_pairs(minhash_bands(sig, num_hashes, band_size)).distinct()
 
 
 def _minhash_pairs_collapsed(sig: DataFrame, num_hashes: int,
@@ -303,15 +315,9 @@ def _minhash_pairs_collapsed(sig: DataFrame, num_hashes: int,
     intra = (a.join(b, "__s").filter(F.col("id_a") < F.col("id_b"))
              .select("id_a", "id_b"))
     # banded join over one row per distinct signature
-    banded = (groups.select("__sig",
-                            _minhash_bands_expr(num_hashes, band_size))
-              .select("__sig", F.col("bk.band").alias("band"),
-                      F.col("bk.band_key").alias("band_key")))
-    ga = banded.select(F.col("__sig").alias("__sig_a"), "band", "band_key")
-    gb = banded.select(F.col("__sig").alias("__sig_b"), "band", "band_key")
-    sig_pairs = (ga.join(gb, ["band", "band_key"])
-                 .filter(F.col("__sig_a") < F.col("__sig_b"))
-                 .select("__sig_a", "__sig_b").distinct())
+    sig_pairs = band_pairs(minhash_bands(groups, num_hashes, band_size,
+                                         key="__sig"),
+                           "__sig", "__sig_a", "__sig_b").distinct()
     ma = rel.select(F.col("__sig").alias("__sig_a"), F.col("id").alias("ia"))
     mb = rel.select(F.col("__sig").alias("__sig_b"), F.col("id").alias("ib"))
     cross = (sig_pairs.join(ma, "__sig_a").join(mb, "__sig_b")
@@ -320,52 +326,36 @@ def _minhash_pairs_collapsed(sig: DataFrame, num_hashes: int,
     return intra.union(cross).distinct()
 
 
+@functools.cache
+def _process_cache_dir() -> str:
+    """This process's directory for caches derived from RDD-backed
+    inputs, created on first use and removed at interpreter exit."""
+    d = tempfile.mkdtemp(prefix="irs-process-caches-")
+    atexit.register(shutil.rmtree, d, True)
+    return d
+
+
 def _auto_cache_path(df: DataFrame, kind: str, *params) -> str:
-    """Deterministic session-temp cache path for a materialized derived
-    relation, keyed by the input plan's semantic hash, the operator
-    parameters and the tokenizer format version (bumps when tokenizer
-    semantics change, so a stale cache from an older engine never
-    serves). Reuse caveat: identical source path with silently
-    rewritten CONTENT maps to the same key — deployments that rewrite
-    datasets in place should pass an explicit, version-keyed path
-    instead."""
+    """Deterministic cache path for a materialized derived relation,
+    keyed by the input plan's semantic hash, the operator parameters and
+    the tokenizer format version (bumps when tokenizer semantics change,
+    so a stale cache from an older engine never serves). A file-backed
+    input's cache is shared by later sessions; an input with an RDD leaf
+    (a checkpoint) dies with its session and hashes anew per checkpoint,
+    so its cache goes under `_process_cache_dir()`. Reuse caveat: a
+    source path whose CONTENT is rewritten in place maps to the same
+    key — pass an explicit, version-keyed path for such datasets."""
     import hashlib
-    import tempfile
 
     from .build import INDEX_FORMAT_VERSION
-    try:
-        plan_key = str(df.semanticHash())
-    except Exception:  # semanticHash is a developer API; fall back
-        plan_key = df._jdf.queryExecution().optimizedPlan().toString()
     key = hashlib.sha256(
-        "|".join([f"v{INDEX_FORMAT_VERSION}", plan_key]
+        "|".join([f"v{INDEX_FORMAT_VERSION}", str(df.semanticHash())]
                  + [str(p) for p in params]).encode()).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"irs_{kind}_{key}")
-
-
-def _materialize_once(rel: DataFrame, path: str) -> DataFrame:
-    """Idempotently materialize `rel` as parquet at `path` and return a
-    scan of it. Concurrent-session safe on POSIX/NFS paths: the write
-    goes to a session-unique sibling dir and PUBLISHES via an atomic
-    rename — two sessions racing on the same auto-derived path can no
-    longer interleave a check-then-overwrite (the rename loser simply
-    discards its copy and reads the winner's). A pre-existing dir
-    without `_SUCCESS` (a crashed writer) is cleared first. An
-    object-store deployment should route publication through its
-    catalog instead (same caveat as the TableStore backend)."""
-    import shutil
-    import uuid
-
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        tmp = f"{path}.tmp.{uuid.uuid4().hex[:12]}"
-        rel.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(path):  # crashed writer's partial output
-            shutil.rmtree(path, ignore_errors=True)
-        try:
-            os.rename(tmp, path)
-        except OSError:  # lost the publish race: another session won
-            shutil.rmtree(tmp, ignore_errors=True)
-    return rel.sparkSession.read.parquet(path)
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    rdd_leaf = any(leaves.apply(i).nodeName() == "LogicalRDD"
+                   for i in range(leaves.size()))
+    root = _process_cache_dir() if rdd_leaf else tempfile.gettempdir()
+    return os.path.join(root, f"irs_{kind}_{key}")
 
 
 def near_duplicates(df: DataFrame, id_col: str = "doc_id",
@@ -415,7 +405,7 @@ def near_duplicates(df: DataFrame, id_col: str = "doc_id",
         # not once per consumer
         shingles_path = _auto_cache_path(df, "shingles", n, id_col, text_col)
     if shingles_path is not None:
-        sh = _materialize_once(sh, shingles_path)
+        sh = materialize_once(sh, shingles_path)
     cand = minhash_lsh_pairs(df, id_col, text_col, num_hashes, band_size,
                              n=n, features=sh.withColumnRenamed("shingle",
                                                                 "feature"))
@@ -978,7 +968,7 @@ def _span_positions(df: DataFrame, k: int, id_col: str, text_col: str,
     if grams_path is None and plan_policy.above(df, "materialize"):
         grams_path = _auto_cache_path(df, "spangrams", k, id_col, text_col)
     if grams_path is not None:
-        grams = _materialize_once(grams, grams_path)
+        grams = materialize_once(grams, grams_path)
     if min_doc_freq == 2:
         # >=2 distinct ids iff min(id) != max(id): one partial-agg
         # shuffle instead of count_distinct's two-phase expand plan

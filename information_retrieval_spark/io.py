@@ -4,7 +4,9 @@ The engine's persistent state is a set of relational tables (SURVEY.md
 §1.1: the index IS the persisted tables — no separate cache layer like
 the reference's Java-serialized index.bin, CacheManager.java:33-47),
 each with the schema declared once in TABLE_SCHEMAS below. Readers
-use the declared schema, so opening a table never runs a parquet
+use the declared schema — or, for a table whose column types follow
+its caller (the dedup store's `id`), the Spark schema recorded in a
+parquet footer — so opening a table never runs a parquet
 schema-inference job (one 1-task Spark job per read otherwise).
 
 On a cluster these are Iceberg tables (`spark.read.format("iceberg")`);
@@ -17,9 +19,11 @@ skips every stage whose output committed (north_rule resumability).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -88,6 +92,45 @@ def arrow_rows(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     table = pa.Table.from_pylist([dict(zip(st.names, r)) for r in rows],
                                  schema=to_arrow_schema(st))
     return spark.createDataFrame(table, st)
+
+
+def committed(path: str) -> bool:
+    """True once a Spark write at `path` has finished (`_SUCCESS`)."""
+    return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
+def footer_schema(path: str) -> StructType | None:
+    """The schema Spark wrote into the footer of parquet file `path`, or
+    of the first one in directory `path`: what a schema-inference job
+    would find, read without a job. None if there is no such file."""
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(path):
+        files = glob.glob(os.path.join(path, "*.parquet"))
+        if not files:
+            return None
+        path = min(files)
+    raw = (pq.read_schema(path).metadata or {}).get(
+        b"org.apache.spark.sql.parquet.row.metadata")
+    return StructType.fromJson(json.loads(raw)) if raw else None
+
+
+def materialize_once(rel: DataFrame, path: str) -> DataFrame:
+    """Write `rel` as parquet at `path` unless a finished write is there,
+    and return a scan of it read with `rel.schema`. The write goes to a
+    session-unique sibling dir and is published by an atomic rename, so
+    sessions racing on one POSIX/NFS path never interleave (the loser
+    reads the winner's copy); a crashed writer's partial dir is cleared
+    first. An object store should publish through its catalog instead."""
+    if not committed(path):
+        tmp = f"{path}.tmp.{uuid.uuid4().hex[:12]}"
+        rel.write.mode("overwrite").parquet(tmp)
+        shutil.rmtree(path, ignore_errors=True)  # a crashed writer's output
+        try:
+            os.rename(tmp, path)
+        except OSError:  # lost the publish race: another session won
+            shutil.rmtree(tmp, ignore_errors=True)
+    return rel.sparkSession.read.schema(rel.schema).parquet(path)
 
 
 class TableStore:
@@ -182,7 +225,6 @@ class TableStore:
         # sweep EVERY version except current + immediately-previous (not
         # just the old manifest's 'previous': a crash between a past
         # commit and its sweep would otherwise leak that version forever)
-        import glob
         keep = {new_dir, prev}
         for p in glob.glob(os.path.join(self.root, f"{name}@v*")):
             if os.path.basename(p) not in keep:
@@ -198,7 +240,7 @@ class TableStore:
     def exists(self, name: str) -> bool:
         if self.use_iceberg:
             return self.spark.catalog.tableExists(self.ident(name))
-        return os.path.exists(os.path.join(self.path(name), "_SUCCESS"))
+        return committed(self.path(name))
 
     def write(self, df: DataFrame, name: str, mode: str = "overwrite",
               partition_by: list | None = None, sort_by: list | None = None,
@@ -216,14 +258,16 @@ class TableStore:
     def read(self, name: str, schema: str | StructType | None = None,
              files: list | None = None) -> DataFrame:
         """Table `name` (or only its parquet `files`), read with `schema`,
-        else the declared TABLE_SCHEMAS entry; only a table with neither
-        (a staging table of unknown shape) is left to schema inference."""
+        else the declared TABLE_SCHEMAS entry, else the schema in a
+        parquet footer; only a table with none of these (no file Spark
+        wrote) is left to schema inference."""
         if self.use_iceberg:
             return self.spark.read.format("iceberg").table(self.ident(name))
-        schema = schema or TABLE_SCHEMAS.get(name)
+        paths = files or [self.path(name)]
+        schema = schema or TABLE_SCHEMAS.get(name) or footer_schema(paths[0])
         reader = self.spark.read if schema is None \
             else self.spark.read.schema(schema)
-        return reader.parquet(*(files or [self.path(name)]))
+        return reader.parquet(*paths)
 
     def refresh(self, name: str) -> None:
         """Invalidate Spark's cached data and file listing for a table.
@@ -243,14 +287,12 @@ class TableStore:
         are transactional MERGE INTO commits."""
         if self.use_iceberg:
             return False
-        import glob
         return bool(glob.glob(os.path.join(self.path(name), "batch*_*.parquet")))
 
     def drop(self, name: str) -> None:
         if self.use_iceberg:
             self.spark.sql(f"DROP TABLE IF EXISTS {self.ident(name)}")
             return
-        import glob
         for p in ([self.path(name), os.path.join(self.root, name)]
                   + glob.glob(os.path.join(self.root, f"{name}@v*"))):
             if os.path.exists(p):

@@ -43,6 +43,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .io import committed, materialize_once
+
 
 def _dot_expr(vec_col: str, lit_vec: str) -> str:
     return (f"aggregate(zip_with({vec_col}, {lit_vec}, "
@@ -216,14 +218,11 @@ def persist_signatures(df: DataFrame, path: str, nbits: int = 8,
     by sig (so `sig IN (...)` probes become row-group-pruned scans), and
     return the read-back DataFrame. Idempotent: reuses an existing
     table at `path`."""
-    import os
-    spark = df.sparkSession
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (build_signatures(df, nbits=nbits, seed=seed,
-                          id_col=id_col, vec_col=vec_col)
-         .repartitionByRange(n_partitions, "sig").sortWithinPartitions("sig")
-         .write.mode("overwrite").parquet(path))
-    return spark.read.parquet(path)
+    return materialize_once(
+        build_signatures(df, nbits=nbits, seed=seed, id_col=id_col,
+                         vec_col=vec_col)
+        .repartitionByRange(n_partitions, "sig").sortWithinPartitions("sig"),
+        path)
 
 
 def _hamming1_probes(sig: int, nbits: int) -> list:
@@ -590,7 +589,7 @@ def persist_ivf(df: DataFrame, path: str, n_lists: int = 8, iters: int = 2,
     import pyarrow.parquet as pq
     spark = df.sparkSession
     cpath, apath = os.path.join(path, "centroids"), os.path.join(path, "assignments")
-    if not os.path.exists(os.path.join(apath, "_SUCCESS")):
+    if not committed(apath):
         cents = ivf_train(df, n_lists, iters, id_col, vec_col,
                           train_rate=train_rate, train_seed=train_seed)
         if cents is None:
@@ -599,24 +598,23 @@ def persist_ivf(df: DataFrame, path: str, n_lists: int = 8, iters: int = 2,
             [(j, [float(x) for x in cents[j]]) for j in range(len(cents))],
             "list_id long, centroid array<double>"
         ).coalesce(1).write.mode("overwrite").parquet(cpath)
-        # Hash-cluster on list_id, NOT repartitionByRange: the
-        # RangePartitioner's sampling job executes the child plan — the
-        # assignment kernel including the full vector scan — a second
-        # time before the real shuffle. Hash keeps what the probe
-        # relies on (each list wholly in one file, rows sorted by
-        # list_id within the file, so `list_id IN (...)` still prunes
-        # row groups) for ONE pass instead of two. The trades: file-size
-        # balance across the n_partitions files, and looser pruning —
-        # a file can hold non-contiguous lists (0 and 7 of 8 over 4
-        # files), so its min/max and boundary row-group ranges span
-        # wider than under a range layout.
-        (ivf_assignments(df, cents, id_col, vec_col)
-         .repartition(n_partitions, "list_id")
-         .sortWithinPartitions("list_id")
-         .write.mode("overwrite").parquet(apath))
     t = pq.read_table(cpath).sort_by("list_id")
     cents = np.array(t.column("centroid").to_pylist(), dtype=np.float64)
-    return cents, spark.read.parquet(apath)
+    # Hash-cluster on list_id, NOT repartitionByRange: the
+    # RangePartitioner's sampling job executes the child plan — the
+    # assignment kernel including the full vector scan — a second
+    # time before the real shuffle. Hash keeps what the probe relies
+    # on (each list wholly in one file, rows sorted by list_id within
+    # the file, so `list_id IN (...)` still prunes row groups) for ONE
+    # pass instead of two. The trades: file-size balance across the
+    # n_partitions files, and looser pruning — a file can hold
+    # non-contiguous lists (0 and 7 of 8 over 4 files), so its min/max
+    # and boundary row-group ranges span wider than under a range
+    # layout.
+    return cents, materialize_once(
+        ivf_assignments(df, cents, id_col, vec_col)
+        .repartition(n_partitions, "list_id").sortWithinPartitions("list_id"),
+        apath)
 
 
 def ivf_probe_lists(query_vec, centroids, nprobe: int) -> list:

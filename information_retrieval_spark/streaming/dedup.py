@@ -2,47 +2,48 @@
 
 The batch dedup operators (dedup.py) answer "which pairs within THIS
 static corpus are near-duplicates". A training-data ingestion pipeline
-asks a different question every batch: "which of these NEW documents
-near-duplicate anything the corpus has EVER seen" — without re-running
-LSH over the full history per batch. The reference has no streaming or
-incremental path at all (its index is batch-rebuilt, IndexService.
-java:101-105); this module is a Spark-first extension mirroring
-streaming/incremental.py's LSM design for the dedup signature state.
+asks, every batch, "which of these NEW documents near-duplicate
+anything the corpus has EVER seen" — without re-running LSH over the
+full history per batch. The reference has no incremental path at all
+(its index is batch-rebuilt, IndexService.java:101-105); this module
+mirrors streaming/incremental.py's LSM design for the dedup signature
+state, in an io.TableStore:
 
-Design — a persisted banded-minhash signature store:
-
-    bands(id, band, band_key)   one row per doc per LSH band, written
-                                as per-batch SEGMENT files, band_key-
-                                sorted within each segment so a probe's
-                                `band_key IN (...)` pushdown prunes
-                                parquet row groups (the similarity.py
-                                persist_signatures shape)
+    bands(id, band, band_key)   one row per doc per LSH band, per-batch
+                                SEGMENT files sorted on band_key, so a
+                                probe's `band_key IN (...)` pushdown
+                                prunes parquet row groups
     sigs(id, minhash)           full signature arrays, id-sorted, for
-                                the estimated-Jaccard annotation of
-                                candidate pairs
+                                the estimated-Jaccard annotation
+    dup_pairs(id_a, id_b,       probe_and_append's recorded pairs, one
+      est_jaccard, batch_id)    segment per batch
+
+`id` takes the caller's `id_col` type, so these tables have no
+TABLE_SCHEMAS entry: TableStore.read takes their schema from a parquet
+footer, and no read runs a schema-inference job. Banding and the band
+self-join are the batch operator's own (dedup.minhash_bands,
+dedup.band_pairs).
 
 Per-batch probe cost is O(|batch| bands + matched bucket rows), never
 O(corpus): the NEW side is the small one, so it broadcasts into the
-join against the store scan, and when the batch's distinct band-key
-set is small it is additionally pushed into the scan as an IN filter
-(row-group pruning via the segments' band_key sort). The store only
-ever APPENDS per-batch segments with deterministic names + a commit
-marker written last — the same idempotent-retry contract as the
-incremental indexer, so a crashed/replayed foreachBatch converges.
+join against the store scan, and a small distinct band-key set is also
+pushed into the scan as an IN filter. The store only APPENDS per-batch
+segments with deterministic names + a commit marker written last — the
+incremental indexer's idempotent-retry contract, so a crashed or
+replayed foreachBatch converges.
 
-Verification semantics: candidates (>=1 shared band) are annotated
-with the ESTIMATED Jaccard — the fraction of agreeing minhash slots —
-which is the honest verification currency at 10^12 docs (exact
-shingle-Jaccard would need every historical document's shingle set
-kept hot; signature agreement needs only the O(1)-per-doc sigs table).
-The minhash family is exact int64 arithmetic shared by Spark / DuckDB
-/ Python (dedup.minhash_coeffs), so the whole incremental pipeline
-keeps an exact cross-engine oracle (driver gate dedup_incremental).
+Candidates (>=1 shared band) are annotated with the ESTIMATED Jaccard —
+the fraction of agreeing minhash slots — the honest verification
+currency at 10^12 docs (exact shingle-Jaccard would need every
+historical shingle set kept hot; signature agreement needs only the
+O(1)-per-doc sigs table). The minhash family is exact int64 arithmetic
+shared by Spark / DuckDB / Python (dedup.minhash_coeffs), so the
+pipeline keeps an exact cross-engine oracle (the dedup_incremental
+gate of __spark_entry__.oracle_sql).
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 
@@ -50,7 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import plan_policy
-from ..dedup import minhash_signatures
+from ..dedup import band_pairs, minhash_bands, minhash_signatures
 from ..io import TableStore
 from .segments import BatchSegments
 
@@ -63,20 +64,6 @@ DEDUP_STREAM_SCHEMA = ("doc_id long, text string, lang string, "
 # IN-list pushdown (the filter itself would be the bottleneck) and let
 # the broadcast join alone do the matching
 PROBE_PUSHDOWN_MAX_KEYS = 20_000
-
-
-def _banded(sig: DataFrame, num_hashes: int, band_size: int) -> DataFrame:
-    """(id, band, band_key) rows from an (id, minhash) signature table —
-    the same ':'-joined slot encoding as dedup.minhash_lsh_pairs."""
-    n_bands = num_hashes // band_size
-    bands = F.explode(F.array(*[
-        F.struct(F.lit(b).alias("band"),
-                 F.concat_ws(":", *[F.col("minhash")[b * band_size + j]
-                                    for j in range(band_size)]).alias("band_key"))
-        for b in range(n_bands)])).alias("bk")
-    return sig.select("id", bands).select(
-        "id", F.col("bk.band").alias("band"),
-        F.col("bk.band_key").alias("band_key"))
 
 
 def _est_jaccard(a: str = "sig_a", b: str = "sig_b"):
@@ -151,16 +138,9 @@ class IncrementalDeduper(BatchSegments):
     # from BatchSegments — one shared contract with the incremental
     # indexer, not a parallel copy that could drift
 
-    def _path(self, table: str) -> str:
-        d = self.store.path(table)
-        os.makedirs(d, exist_ok=True)
-        return d
-
-    def _read(self, table: str) -> DataFrame | None:
-        files = glob.glob(os.path.join(self._path(table), "*.parquet"))
-        if not files:
-            return None
-        return self.spark.read.parquet(self._path(table))
+    def _filled(self, table: str) -> bool:
+        """True once `table` holds a compacted base or batch segments."""
+        return self.store.exists(table) or self.store.has_segments(table)
 
     # -- signature construction -------------------------------------------
     def _signatures(self, df: DataFrame) -> DataFrame:
@@ -191,18 +171,14 @@ class IncrementalDeduper(BatchSegments):
         new_sig = _batch_sigs if _batch_sigs is not None \
             else plan_policy.collected(self._signatures(batch_df))
         new_banded = F.broadcast(
-            _banded(new_sig, p["num_hashes"], p["band_size"]))
+            minhash_bands(new_sig, p["num_hashes"], p["band_size"]))
         new_sig = F.broadcast(new_sig)
 
         # batch-vs-batch candidates (self-join on the broadcast side)
-        l = new_banded.select(F.col("id").alias("id_a"), "band", "band_key")
-        r = new_banded.select(F.col("id").alias("id_b"), "band", "band_key")
-        cand = (l.join(r, ["band", "band_key"])
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b"))
+        cand = band_pairs(new_banded)
 
-        store_banded = self._read("bands")
-        if store_banded is not None:
+        if self._filled("bands"):
+            store_banded = self.store.read("bands")
             keys = [row["band_key"] for row in
                     new_banded.select("band_key").distinct()
                     .limit(PROBE_PUSHDOWN_MAX_KEYS + 1).collect()]
@@ -228,9 +204,8 @@ class IncrementalDeduper(BatchSegments):
         # sigs lookups stay candidate-driven (store sigs are id-sorted
         # segments; the batch side is the broadcast new_sig)
         all_sigs = new_sig
-        store_sigs = self._read("sigs")
-        if store_sigs is not None:
-            all_sigs = store_sigs.unionByName(new_sig)
+        if self._filled("sigs"):
+            all_sigs = self.store.read("sigs").unionByName(new_sig)
         sa = all_sigs.select(F.col("id").alias("id_a"),
                              F.col("minhash").alias("sig_a"))
         sb = all_sigs.select(F.col("id").alias("id_b"),
@@ -252,7 +227,7 @@ class IncrementalDeduper(BatchSegments):
         p = self.params
         sig = _batch_sigs if _batch_sigs is not None \
             else self._signatures(batch_df)
-        bands = (_banded(sig, p["num_hashes"], p["band_size"])
+        bands = (minhash_bands(sig, p["num_hashes"], p["band_size"])
                  .repartitionByRange(1, "band_key")
                  .sortWithinPartitions("band_key"))
         self._stage_and_link(bands, "bands", batch_id)
@@ -282,13 +257,14 @@ class IncrementalDeduper(BatchSegments):
                 # sig's last reader (append) has run; the result below
                 # reads the dup_pairs segment
                 plan_policy.release(sig)
-        return (self.spark.read.parquet(self._path("dup_pairs"))
+        return (self.store.read("dup_pairs")
                 .filter(F.col("batch_id") == batch_id)
                 .drop("batch_id"))
 
     def dup_pairs(self) -> DataFrame | None:
         """All recorded (id_a, id_b, est_jaccard, batch_id) rows."""
-        return self._read("dup_pairs")
+        return self.store.read("dup_pairs") if self._filled("dup_pairs") \
+            else None
 
     # -- compaction --------------------------------------------------------
     def compact(self) -> None:
@@ -306,10 +282,9 @@ class IncrementalDeduper(BatchSegments):
                                            "8")) // 4)
         for table, key in (("bands", "band_key"), ("sigs", "id"),
                            ("dup_pairs", "batch_id")):
-            if not glob.glob(os.path.join(self._path(table),
-                                          "*.parquet")):
+            if not self._filled(table):
                 continue
-            base = (self._read(table)
+            base = (self.store.read(table)
                     .repartitionByRange(n, key).sortWithinPartitions(key))
             self.store.write(base, f"tmp_{table}_new")
             self.store.publish(table, f"tmp_{table}_new")

@@ -2,8 +2,13 @@
 measured from their stored blocks, gate decisions are logged, and every
 pin an operator takes is freed when it returns — or raises."""
 
+import glob
 import logging
+import os
 import shutil
+import subprocess
+import sys
+import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -62,6 +67,39 @@ def test_cut_spans_on_checkpoint_derives_grams_once(spark, monkeypatch):
     finally:
         shutil.rmtree(path, ignore_errors=True)
         plan_policy.release(ck)
+
+
+def test_checkpoint_caches_leave_no_temp_dirs(spark, monkeypatch):
+    # every checkpoint of the same rows hashes differently, so a cache
+    # keyed in the shared temp dir would leave one orphan per call; they
+    # go under one per-process dir that is removed at interpreter exit
+    rows = [(i, f"alpha beta gamma delta epsilon doc{i % 3}")
+            for i in range(8)]
+    src = spark.createDataFrame(rows, "doc_id long, text string")
+    tmp = tempfile.gettempdir()
+    before = set(glob.glob(os.path.join(tmp, "irs_*")))
+    monkeypatch.setitem(plan_policy.GATES, "materialize", 1)
+    paths = []
+    for _ in range(2):
+        ck = src.localCheckpoint(eager=True)
+        try:
+            paths.append(dedup._auto_cache_path(ck, "spangrams", 4,
+                                                "doc_id", "text"))
+            dedup.cut_duplicated_spans(ck, k=4).collect()
+        finally:
+            plan_policy.release(ck)
+    assert set(glob.glob(os.path.join(tmp, "irs_*"))) == before
+    proc_dir = dedup._process_cache_dir()
+    assert paths[0] != paths[1]
+    assert all(os.path.dirname(p) == proc_dir and os.path.isdir(p)
+               for p in paths), paths
+    # the per-process dir is gone once its interpreter exits
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "from information_retrieval_spark import dedup; "
+         "print(dedup._process_cache_dir())"],
+        capture_output=True, text=True, check=True).stdout.strip()
+    assert out.startswith(tmp) and not os.path.exists(out)
 
 
 @pytest.mark.parametrize("write_fails", [False, True])

@@ -117,6 +117,39 @@ def test_query_job_budget(synth_engine, name, budget):
     assert len(jobs) <= budget, len(jobs)
 
 
+def test_dedup_store_job_budget(spark, synth_docs, tmp_path):
+    # the dedup store reads bands/sigs/dup_pairs through TableStore with
+    # their footer schemas: no read runs a schema-inference job. With an
+    # inference job per read this fixture took append 6, probe 11,
+    # probe_and_append 18, compact 12 (three tables)
+    from information_retrieval_spark.streaming.dedup import IncrementalDeduper
+
+    idx = F.regexp_extract("path", r"file(\d+)\.", 1).cast("int")
+    old = synth_docs.filter(idx < 40)
+    new = synth_docs.filter((idx >= 40) & (idx < 55)).unionByName(
+        synth_docs.filter(idx < 5)
+        .withColumn("path", F.concat(F.lit("dup/"), "path")))
+    dd = IncrementalDeduper(spark, str(tmp_path / "dd"), num_hashes=16,
+                            band_size=4, n=3, id_col="path",
+                            text_col="content")
+    sc = spark.sparkContext
+    got = {}
+    for call, run in (("append", lambda: dd.append(old, 0)),
+                      ("probe", lambda: dd.probe(new).collect()),
+                      ("probe_and_append",
+                       lambda: dd.probe_and_append(new, 1).collect()),
+                      ("compact", dd.compact)):
+        group = f"dedup_budget_{call}"
+        sc.setJobGroup(group, "job budget pin")
+        try:
+            run()
+        finally:
+            sc.setJobGroup(f"{group}_done", "")
+        got[call] = len(sc.statusTracker().getJobIdsForGroup(group))
+    budget = {"append": 6, "probe": 9, "probe_and_append": 15, "compact": 9}
+    assert all(got[c] <= b for c, b in budget.items()), got
+
+
 def test_bm25_shuffles_blocks_not_postings(synth_engine):
     # scoring shuffles COMPRESSED BLOCKS keyed by docID bucket and fuses
     # decode+score+topk in one Arrow kernel: the exchange must be on
@@ -269,6 +302,14 @@ def test_write_path_reads_through_table_store():
                  for i, line in enumerate(p.read_text().splitlines(), 1)
                  if ".read.parquet(" in line or "createDataFrame(" in line]
     assert not offenders, offenders
+    # every table the package writes and reads back goes through io.py;
+    # only the loaders of external inputs read parquet directly
+    readers = [f"{p.relative_to(pkg)}:{i}"
+               for p in sorted(pkg.rglob("*.py"))
+               if p.name not in ("cli.py", "corpus.py")
+               for i, line in enumerate(p.read_text().splitlines(), 1)
+               if ".read.parquet(" in line]
+    assert not readers, readers
 
 
 def test_releases_go_through_plan_policy():

@@ -183,7 +183,7 @@ def test_compact_folds_segments_and_preserves_results(spark, work_dir):
         dd.probe_and_append(_df(spark, batch), bid)
 
     def seg_files(t):
-        return glob.glob(os.path.join(dd._path(t), "batch*_*.parquet"))
+        return glob.glob(os.path.join(dd.store.path(t), "batch*_*.parquet"))
 
     assert seg_files("bands") and seg_files("sigs")
     before = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in
@@ -226,4 +226,39 @@ def test_probe_plan_broadcasts_batch_and_pushes_band_keys(spark, work_dir):
     probe = dd.probe(_df(spark, BATCHES[1]))
     plan = probe._jdf.queryExecution().sparkPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
-    assert "In(band_key" in plan, plan
+    scans = [ln for ln in plan.splitlines()
+             if "FileScan" in ln and "band_key" in ln]
+    assert scans, plan
+    for ln in scans:
+        assert "In(band_key" in ln.split("PushedFilters: ")[1], ln
+
+
+def test_string_ids_match_long_ids(spark, work_dir):
+    # the bench.py shape (id_col="path"): the store's id columns are
+    # strings, which no declared schema covers, so every read takes its
+    # schema from a parquet footer — across segments and after compact
+    def name(i):
+        return f"doc/{i:03d}"  # order-preserving, so id_a < id_b maps through
+
+    def sdf(batch):
+        return spark.createDataFrame([(name(i), t) for i, t in batch],
+                                     "path string, text string")
+
+    def pairs(df):
+        return {(r["id_a"], r["id_b"]): r["est_jaccard"]
+                for r in df.collect()}
+
+    longs = _mk(spark, f"{work_dir}/ddstore_longid")
+    strs = _mk(spark, f"{work_dir}/ddstore_strid", id_col="path")
+    for bid, batch in enumerate(BATCHES[:2]):
+        longs.append(_df(spark, batch), bid)
+        strs.append(sdf(batch), bid)
+    want = {(name(a), name(b)): j for (a, b), j in
+            pairs(longs.probe(_df(spark, BATCHES[2]))).items()}
+    assert want == {(name(a), name(b)): j
+                    for (a, b), j in _expected_pairs(2).items()}
+    assert pairs(strs.probe(sdf(BATCHES[2]))) == want
+    strs.compact()
+    assert pairs(strs.probe(sdf(BATCHES[2]))) == want
+    for t in ("bands", "sigs"):
+        assert dict(strs.store.read(t).dtypes)["id"] == "string"
