@@ -13,3 +13,9 @@ into /root/reference (behavioral parity only; no code is ported).
 """
 
 __version__ = "0.1.0"
+
+from . import zipcache as _zipcache
+
+# every Python worker imports the package when it unpickles a package
+# kernel; from then on its tasks skip the per-task zip-directory re-read
+_zipcache.install()

@@ -241,6 +241,20 @@ def minhash_bands(sig: DataFrame, num_hashes: int, band_size: int,
         key, F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key"))
 
 
+def band_keys(minhashes, num_hashes: int, band_size: int) -> set:
+    """The distinct band_key values minhash_bands gives the signatures
+    `minhashes` (an iterable of minhash lists), computed on the driver.
+    Like concat_ws, a null slot or a null signature contributes no
+    part."""
+    keys = set()
+    for mh in minhashes:
+        mh = mh or []
+        for lo in range(0, num_hashes, band_size):
+            keys.add(":".join(str(v) for v in mh[lo:lo + band_size]
+                              if v is not None))
+    return keys
+
+
 def band_pairs(banded: DataFrame, key: str = "id", a: str = "id_a",
                b: str = "id_b") -> DataFrame:
     """(a, b) with a < b for every band bucket two rows of `banded`

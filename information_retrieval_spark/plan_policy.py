@@ -95,10 +95,13 @@ def hold(df: DataFrame, scope: str) -> DataFrame:
     return df
 
 
-def collected(df: DataFrame) -> DataFrame:
+def collected(df: DataFrame) -> tuple[DataFrame, "pyarrow.Table"]:
     """`df` computed once (one Arrow collect job) and served from the
-    driver, for a relation its consumers broadcast anyway. It holds no
-    executor blocks, so unlike a checkpoint it needs no release; unlike
-    `hold` it keeps the partitioning AQE gave it (a cached plan keeps
-    all its shuffle partitions, ~4x the tasks of each small read)."""
-    return df.sparkSession.createDataFrame(df.toArrow(), df.schema)
+    driver, for a relation its consumers broadcast anyway: the frame,
+    and the Arrow table it serves, for a caller that also reads the rows
+    on the driver. It holds no executor blocks, so unlike a checkpoint
+    it needs no release; unlike `hold` it keeps the partitioning AQE
+    gave it (a cached plan keeps all its shuffle partitions, ~4x the
+    tasks of each small read)."""
+    table = df.toArrow()
+    return df.sparkSession.createDataFrame(table, df.schema), table

@@ -967,12 +967,16 @@ class QueryEngine:
 
     def _named_page(self, scores: DataFrame, k: int) -> DataFrame:
         """The top k of a scored docID relation as (docID, score, name),
-        score desc, docID asc."""
+        score desc, docID asc. The k-row top broadcasts into the cached
+        doc_map scan; the last sort is of <= k rows, so it runs in one
+        partition: a global orderBy would add a range-sampling job and
+        a sort exchange."""
         top = scores.orderBy(F.desc("score"), F.asc("docID")).limit(k)
         name = F.element_at(F.split(F.col("path"), "/"), -1).alias("name")
         return (top.join(self._doc_map, "docID")
                 .select("docID", "score", name)
-                .orderBy(F.desc("score"), F.asc("docID")))
+                .coalesce(1)
+                .sortWithinPartitions(F.desc("score"), F.asc("docID")))
 
     def bm25(self, query: str, k: int = 10, wand: bool = True,
              wand_gate_blocks: int = 16384) -> DataFrame:
@@ -1423,9 +1427,12 @@ class QueryEngine:
         top = (scored.withColumn("rn", F.row_number().over(w))
                .filter(F.col("rn") <= k).drop("rn"))
         name = F.element_at(F.split(F.col("path"), "/"), -1).alias("name")
+        # <= Q*k rows: the final sort runs in one partition, as in
+        # _named_page
         return (top.join(qmap, "qcode").join(self._doc_map, "docID")
                 .select("qid", "docID", "score", name)
-                .orderBy("qid", F.desc("score"), F.asc("docID")))
+                .coalesce(1)
+                .sortWithinPartitions("qid", F.desc("score"), F.asc("docID")))
 
     def _empty_scores(self) -> DataFrame:
         return self.spark.createDataFrame([], "docID long, score double, name string")

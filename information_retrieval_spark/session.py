@@ -62,19 +62,21 @@ def get_spark(
 
 def warm_python_workers(spark: SparkSession, parallelism: int | None = None) -> None:
     """Spawn + warm the session's Python UDF workers (imports of
-    numpy/pandas happen once per worker). A one-time session cost on any
-    cluster — benchmarks call this so build timings measure the build,
-    not interpreter start-up."""
-    import pandas as pd  # noqa: F401
+    numpy/pandas and of this package happen once per worker). A
+    one-time session cost on any cluster — benchmarks call this so build
+    timings measure the build, not interpreter start-up."""
     from pyspark.sql import functions as F
 
     n = parallelism or spark.sparkContext.defaultParallelism
+    noop = F.pandas_udf(_warm_noop, "long")
+    spark.range(4 * n, numPartitions=4 * n).select(F.sum(noop(F.col("id")))).collect()
 
-    @F.pandas_udf("long")
-    def _noop(x):
-        return x
 
-    spark.range(4 * n, numPartitions=4 * n).select(F.sum(_noop(F.col("id")))).collect()
+def _warm_noop(x):
+    """The warm-up UDF. Module level, so it is pickled by reference:
+    each worker imports the package to run it, which installs
+    `zipcache` there before the first timed kernel."""
+    return x
 
 
 def _parallelism_of(master: str) -> int:

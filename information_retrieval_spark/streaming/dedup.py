@@ -51,7 +51,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import plan_policy
-from ..dedup import band_pairs, minhash_bands, minhash_signatures
+from ..dedup import (band_keys, band_pairs, minhash_bands,
+                     minhash_signatures)
 from ..io import TableStore
 from .segments import BatchSegments
 
@@ -167,9 +168,11 @@ class IncrementalDeduper(BatchSegments):
         # than the recomputes). The batch side is the small one, so both
         # relations broadcast — which is why they are held on the driver
         # (`plan_policy.collected`): the returned lazy frame reads them,
-        # so an executor checkpoint here could never be released.
-        new_sig = _batch_sigs if _batch_sigs is not None \
-            else plan_policy.collected(self._signatures(batch_df))
+        # so an executor checkpoint here could never be released. The
+        # held rows also give the store scan its band-key list.
+        new_sig, held = plan_policy.collected(
+            _batch_sigs if _batch_sigs is not None
+            else self._signatures(batch_df))
         new_banded = F.broadcast(
             minhash_bands(new_sig, p["num_hashes"], p["band_size"]))
         new_sig = F.broadcast(new_sig)
@@ -179,16 +182,15 @@ class IncrementalDeduper(BatchSegments):
 
         if self._filled("bands"):
             store_banded = self.store.read("bands")
-            keys = [row["band_key"] for row in
-                    new_banded.select("band_key").distinct()
-                    .limit(PROBE_PUSHDOWN_MAX_KEYS + 1).collect()]
+            keys = band_keys(held.column("minhash").to_pylist(),
+                             p["num_hashes"], p["band_size"])
             if len(keys) <= PROBE_PUSHDOWN_MAX_KEYS:
                 # push the batch's key set into the store scan: segments
                 # are band_key-sorted, so the IN filter prunes row
                 # groups — the store is read O(matched buckets), not
                 # O(corpus)
                 store_banded = store_banded.filter(
-                    F.col("band_key").isin(keys))
+                    F.col("band_key").isin(sorted(keys)))
             old = store_banded.select(F.col("id").alias("id_old"),
                                       "band", "band_key")
             vs_old = (old.join(new_banded.select(

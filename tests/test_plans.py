@@ -99,10 +99,11 @@ RANKERS = {
     ("boolean", 2), ("boolean_not", 2), ("positional", 2), ("phrase", 2),
     # + the one dictionary probe that resolves every token
     ("joker", 3),
-    # measured: scoring exchange, top-k cut and the doc_map name join
-    ("bm25", 5), ("qlm", 5),
+    # measured: the scoring exchange, the k-row top's broadcast into the
+    # doc_map join, and the result (the last sort runs in one partition)
+    ("bm25", 3), ("qlm", 3),
     # + the per-query window's exchange and the qid map
-    ("bm25_many", 7)])
+    ("bm25_many", 5)])
 def test_query_job_budget(synth_engine, name, budget):
     run = {**SET_QUERIES, **RANKERS}[name]
     run(synth_engine).collect()  # warm the term cache and cached tables
@@ -121,7 +122,9 @@ def test_dedup_store_job_budget(spark, synth_docs, tmp_path):
     # the dedup store reads bands/sigs/dup_pairs through TableStore with
     # their footer schemas: no read runs a schema-inference job. With an
     # inference job per read this fixture took append 6, probe 11,
-    # probe_and_append 18, compact 12 (three tables)
+    # probe_and_append 18, compact 12 (three tables). The probe's
+    # band-key list comes from the signatures it holds on the driver;
+    # a Spark distinct-collect of it took 2 more jobs per probe
     from information_retrieval_spark.streaming.dedup import IncrementalDeduper
 
     idx = F.regexp_extract("path", r"file(\d+)\.", 1).cast("int")
@@ -146,8 +149,42 @@ def test_dedup_store_job_budget(spark, synth_docs, tmp_path):
         finally:
             sc.setJobGroup(f"{group}_done", "")
         got[call] = len(sc.statusTracker().getJobIdsForGroup(group))
-    budget = {"append": 6, "probe": 9, "probe_and_append": 15, "compact": 9}
+    budget = {"append": 6, "probe": 7, "probe_and_append": 13, "compact": 9}
     assert all(got[c] <= b for c, b in budget.items()), got
+
+
+def _subtrees(plan: str, node: str) -> list:
+    """The text of every subtree of `plan` rooted at a `node` line."""
+    lines = plan.splitlines()
+    out = []
+    for i, ln in enumerate(lines):
+        if node in ln:
+            depth = len(ln) - len(ln.lstrip(" :+-"))
+            sub = [ln]
+            for nxt in lines[i + 1:]:
+                if len(nxt) - len(nxt.lstrip(" :+-")) <= depth:
+                    break
+                sub.append(nxt)
+            out.append("\n".join(sub))
+    return out
+
+
+@pytest.mark.parametrize("wand", [False, True])
+def test_bm25_page_sorts_k_rows_and_streams_doc_map(synth_engine, wand):
+    # the k-row top broadcasts into the doc_map join, never doc_map
+    # itself (O(N) per query), and the final sort of <= k rows runs in
+    # one partition: no range-sampling job, no sort exchange
+    df = synth_engine.bm25("sym0 sym1 sym2", k=5, wand=wand,
+                           wand_gate_blocks=0 if wand else 16384)
+    plan = _plan(df)
+    assert "rangepartitioning" not in plan, plan
+    assert "doc_map" in plan, plan
+    broadcasts = _subtrees(plan, "BroadcastExchange")
+    assert broadcasts, plan
+    assert not [b for b in broadcasts if "doc_map" in b], plan
+    assert [r["docID"] for r in df.collect()] == [
+        r["docID"] for r in synth_engine.bm25(
+            "sym0 sym1 sym2", k=5, wand=False).collect()]
 
 
 def test_bm25_shuffles_blocks_not_postings(synth_engine):

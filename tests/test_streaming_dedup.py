@@ -262,3 +262,24 @@ def test_string_ids_match_long_ids(spark, work_dir):
     assert pairs(strs.probe(sdf(BATCHES[2]))) == want
     for t in ("bands", "sigs"):
         assert dict(strs.store.read(t).dtypes)["id"] == "string"
+
+
+def test_driver_band_keys_equal_spark_band_keys(spark):
+    # probe builds its band-key IN list on the driver from the held
+    # signatures; it must be exactly minhash_bands' distinct band_key
+    # set, for a doc too short to shingle (no signature row) and, as
+    # concat_ws does, for null slots and a null signature
+    batch = BATCHES[0] + BATCHES[2] + [(9, "solo")]
+    sigs = dedup.minhash_signatures(_df(spark, batch), num_hashes=NUM_HASHES,
+                                    n=N)
+    assert 9 not in {r["id"] for r in sigs.collect()}
+    with_nulls = spark.createDataFrame(
+        [(10, [1, None, 3, 4] * 4), (11, None),
+         (12, [None] * NUM_HASHES)], "id long, minhash array<long>")
+    for frame in (sigs, sigs.unionByName(with_nulls)):
+        want = {r["band_key"] for r in
+                dedup.minhash_bands(frame, NUM_HASHES, BAND_SIZE)
+                .select("band_key").distinct().collect()}
+        got = dedup.band_keys(frame.toArrow().column("minhash").to_pylist(),
+                              NUM_HASHES, BAND_SIZE)
+        assert got == want
